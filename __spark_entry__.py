@@ -80,15 +80,22 @@ def _emb_head(e: DataFrame, n: int = 8):
     emb_ivf_topk NOTE.)"""
     head = e.select("vec_id", "embedding").orderBy("vec_id").limit(n).collect()
     qrow = next((r for r in head if r["vec_id"] == 0), None)
-    emb0 = (qrow["embedding"] if qrow is not None
-            else e.filter("vec_id = 0").first()["embedding"])
-    return head, [float(x) for x in emb0]
+    if qrow is None:
+        qrow = e.filter("vec_id = 0").first()
+        if qrow is None:
+            raise ValueError(
+                "embeddings table has no row with vec_id = 0, the query "
+                "vector emb_pq_topk searches with")
+    return head, [float(x) for x in qrow["embedding"]]
 
 
 def _head_codebooks(head, m: int = 4, k: int = 8) -> list:
     """pq_codebooks_from_rows' exact books[m][k][sub] from the
     already-collected head rows."""
-    assert len(head) >= k
+    if len(head) < k:
+        raise ValueError(
+            f"PQ codebooks need k={k} head rows, the embeddings table "
+            f"gave {len(head)}")
     dim = len(head[0]["embedding"])
     sub = dim // m
     return [

@@ -19,3 +19,10 @@ Layers
 """
 
 __version__ = "0.1.0"
+
+# Every Python worker imports this package when it unpickles a UDF; from
+# then on its per-task import-cache reset stops re-reading unchanged zip
+# archives (see _zipcache).
+from ragflow_spark import _zipcache
+
+_zipcache.install()

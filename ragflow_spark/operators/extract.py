@@ -148,7 +148,7 @@ def _extract_batches(batches, template_cfg: dict | None = None) -> Iterator:
                     # visibility row: every staged doc must appear in the
                     # chunk table or the manifest's doc_count undercounts
                     # and count-verified resume reprocesses the partition
-                    # forever (manifest.resume_filter)
+                    # forever (manifest.resume_partitions)
                     emit(row, -1, "", "", [], "",
                          "EmptyDocument: 0 chunks")
                     continue
@@ -251,16 +251,20 @@ def run_extraction_job(
     template_cfg: dict | None = None,
     respect_noindex: bool = False,
 ) -> None:
-    """Full resumable job: resume-filter → extract → write chunks (dynamic
+    """Full resumable job: resume decision → extract → write chunks (dynamic
     partition overwrite on partition_id) → append manifest.
+
+    The resume decision is a driver-side list of partition ids
+    (``plans.manifest.resume_partitions``, at most ``num_partitions``):
+    the pages are filtered with ``isin`` on it, an empty list returns
+    before any write, and the manifest readback reuses it.
 
     ``respect_noindex`` drops pages whose head carries a meta-robots
     noindex directive (``page_noindex``) — the filter rides the same
     scan as the size cap, before any parse work."""
     from ragflow_spark.plans.manifest import (
-        check_resume_compatible,
         read_manifest,
-        resume_filter,
+        resume_partitions,
         write_manifest,
     )
 
@@ -274,30 +278,29 @@ def run_extraction_job(
     if respect_noindex:
         pruned = pruned.filter(~page_noindex(F.col("html")))
     staged = with_partition_id(pruned, num_partitions)
-    manifest = read_manifest(spark, manifest_path)
-    # partition_id = pmod(xxhash64(url), num_partitions): resuming under a
-    # different modulus remaps ids → silent skips; refuse instead
-    check_resume_compatible(manifest, num_partitions)
-    todo = resume_filter(staged, manifest)
+    todo_pids = resume_partitions(
+        staged, read_manifest(spark, manifest_path), num_partitions)
+    if not todo_pids:
+        return
+    todo = staged.filter(F.col("partition_id").isin(todo_pids))
     chunks = partition_for_extract(todo, num_partitions).mapInPandas(
         lambda batches: _extract_batches(batches, template_cfg),
         schema=CHUNKS_SCHEMA,
     )
     # idempotent per-partition overwrite: rerunning a partition rewrites the
-    # exact same deterministic rows
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # exact same deterministic rows. A per-write option, so the caller's
+    # session keeps its own partitionOverwriteMode.
     (
         chunks.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id")
         .parquet(out_path)
     )
     # manifest only the partitions this attempt processed; the id list is
     # bounded by num_partitions, so an isin() filter gives real partition
     # pruning on the readback scan (a semi-join would read every partition)
-    todo_pids = [r.partition_id for r in todo.select("partition_id").distinct().collect()]
-    if todo_pids:
-        written = spark.read.parquet(out_path).filter(
-            F.col("partition_id").isin(todo_pids)
-        )
-        write_manifest(written, manifest_path, attempt=attempt,
-                       num_partitions=num_partitions)
+    written = spark.read.parquet(out_path).filter(
+        F.col("partition_id").isin(todo_pids)
+    )
+    write_manifest(written, manifest_path, attempt=attempt,
+                   num_partitions=num_partitions)

@@ -4,6 +4,6 @@ from ragflow_spark.plans.partitioning import (  # noqa: F401
 )
 from ragflow_spark.plans.manifest import (  # noqa: F401
     build_manifest,
-    resume_filter,
+    resume_partitions,
     write_manifest,
 )

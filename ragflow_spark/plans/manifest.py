@@ -7,8 +7,13 @@ equivalent is a *manifest table* keyed by the data-derived ``partition_id``:
 - after the chunk table is written, a second aggregation job derives one
   manifest row per partition: doc/chunk counts, bytes, an order-independent
   content hash (bit_xor of per-chunk xxhash64), status='done';
-- a relaunch anti-joins pages against done partitions and reprocesses only
-  the remainder;
+- a relaunch decides on the driver which partitions to process
+  (``resume_partitions``): it collects the manifest (at most P rows per
+  attempt) and one per-partition distinct-url count of the input (at most
+  P rows), and skips a partition only while its latest done doc_count
+  still equals the input's count. The job then filters the pages with
+  ``partition_id IN (ids)``, returns before any write when the list is
+  empty, and manifests exactly those ids;
 - idempotency comes from deterministic chunk ids — ``md5(chunk_text||url)``
   mirrors the reference's ``md5(content + doc_id)``
   (rag/svr/task_executor.py:260-263) — so re-writing a partition produces
@@ -23,6 +28,7 @@ crash-consistency contract at-least-once semantics require.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,7 +47,7 @@ def build_manifest(chunks: DataFrame, attempt: int = 1,
     chunks were produced. It is RECORDED in every row because partition_id =
     pmod(xxhash64(url), num_partitions): resuming under a different modulus
     would remap every id, silently skipping never-processed documents —
-    ``check_resume_compatible`` fails fast on that instead."""
+    ``resume_partitions`` fails fast on that instead."""
     return (
         chunks.groupBy("partition_id")
         .agg(
@@ -68,71 +74,76 @@ def write_manifest(chunks: DataFrame, path: str, attempt: int = 1,
         "append").parquet(path)
 
 
-def check_resume_compatible(manifest: DataFrame | None,
-                            num_partitions: int) -> None:
-    """Fail fast when a prior manifest was written under a different
-    partition modulus (see build_manifest). Legacy manifests without the
-    column (or rows recorded as -1) are accepted for backward compat."""
-    if manifest is None or "num_partitions" not in manifest.columns:
-        return
-    prior = [
-        r.num_partitions
-        for r in manifest.select("num_partitions").distinct().collect()
-        if r.num_partitions is not None and r.num_partitions >= 0
-    ]
-    bad = [p for p in prior if p != num_partitions]
+def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
+    """The manifest table, or None when there is none yet: the path does
+    not exist or holds no data files (e.g. only ``_SUCCESS``). Any other
+    failure — a corrupt or unreadable file — raises: treating a broken
+    manifest as absent would silently re-parse everything and append to
+    the broken table."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
+def check_resume_compatible(rows, num_partitions: int) -> None:
+    """Fail fast when collected manifest ``rows`` were written under a
+    different partition modulus (see build_manifest). Legacy rows without
+    the field (or recorded as -1) are accepted for backward compat."""
+    recorded = {r.get("num_partitions") for r in rows}
+    bad = sorted(n for n in recorded
+                 if n is not None and n >= 0 and n != num_partitions)
     if bad:
         raise ValueError(
-            f"manifest was written with num_partitions={sorted(set(bad))} "
+            f"manifest was written with num_partitions={bad} "
             f"but this run uses {num_partitions}; partition ids would remap "
             "and resume would silently skip documents. Re-run with the "
             "recorded value or start a fresh manifest path."
         )
 
 
-def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
-
-
-def resume_filter(
+def resume_partitions(
     pages_with_pid: DataFrame,
     manifest: DataFrame | None,
-    url_col: str = "url",
-    verify_counts: bool = True,
-) -> DataFrame:
-    """Drop pages whose partition is already manifested as done. A broadcast
-    left-anti join — the manifest has one row per partition, always tiny
-    relative to the pages table, so no shuffle of the big side's rows beyond
-    the hash-exchange Spark already plans.
+    num_partitions: int,
+) -> list[int]:
+    """Sorted partition ids this attempt must (re)process.
 
-    ``verify_counts`` (default on) closes the input-drift foot-gun: a doc
-    APPENDED to the input after a partition was manifested hashes into that
-    done partition and a naive anti-join would silently skip it forever.
-    With verification, a done partition only counts as done while the
-    input's distinct-doc count still equals the manifest's recorded
-    doc_count — drifted partitions reprocess wholesale, which is exact
-    because chunk ids are deterministic and the write is a dynamic
-    partition overwrite. Cost: one count-distinct aggregation over
-    (partition_id, url) — map-side combinable, no text bytes shuffled."""
-    if manifest is None:
-        return pages_with_pid
-    done = (
-        manifest.filter(F.col("status") == "done")
-        .groupBy("partition_id")
-        .agg(F.max_by("doc_count", "attempt").alias("_mdocs"))
+    A partition is skipped only while its latest ``done`` row's doc_count
+    equals the input's distinct-url count for that partition. A doc
+    appended (or removed) after the partition was manifested changes the
+    count, and the partition re-runs wholesale — exact, because chunk ids
+    are deterministic and the write is a dynamic partition overwrite.
+    Partitions with input but no manifest row always run; a manifest
+    written under another modulus raises ``ValueError``.
+
+    The decision is made on the driver from two small collects: the
+    manifest's rows (at most ``num_partitions`` per attempt) and one
+    per-partition count-distinct over (partition_id, url) — map-side
+    combinable, no text bytes shuffled, at most ``num_partitions`` rows.
+    The caller filters with ``isin`` on the returned ids, skips the job
+    when the list is empty, and manifests exactly these ids."""
+    latest: dict[int, tuple] = {}
+    if manifest is not None:
+        cols = [c for c in ("partition_id", "doc_count", "attempt", "status",
+                            "num_partitions") if c in manifest.columns]
+        rows = [r.asDict() for r in manifest.select(*cols).collect()]
+        check_resume_compatible(rows, num_partitions)
+        for r in rows:
+            # max_by(doc_count, attempt) over the done rows
+            if r["status"] != "done" or r["attempt"] is None:
+                continue
+            prev = latest.get(r["partition_id"])
+            if prev is None or r["attempt"] > prev[0]:
+                latest[r["partition_id"]] = (r["attempt"], r["doc_count"])
+    counts = (
+        pages_with_pid.groupBy("partition_id")
+        .agg(F.countDistinct("url").alias("n"))
+        .collect()
     )
-    if verify_counts:
-        counts = pages_with_pid.groupBy("partition_id").agg(
-            F.countDistinct(url_col).alias("_ndocs")
-        )
-        done = (
-            done.join(counts, "partition_id")
-            .filter(F.col("_mdocs") == F.col("_ndocs"))
-        )
-    return pages_with_pid.join(
-        F.broadcast(done.select("partition_id")),
-        on="partition_id", how="left_anti",
+    return sorted(
+        r.partition_id for r in counts
+        if r.partition_id not in latest or latest[r.partition_id][1] != r.n
     )

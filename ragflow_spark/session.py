@@ -5,6 +5,16 @@ coalescing), small Arrow batches because rows carry megabyte-scale binary
 payloads (SURVEY.md §4 — batching constants), and Python-worker reuse so
 per-executor parser state (compiled regexes, codec tables) is initialized
 once.
+
+Worker reuse alone did not make the per-task cost small: PySpark still
+calls ``importlib.invalidate_caches()`` at the start of every task, and on
+CPython < 3.12 that eagerly re-reads the directory of every zip archive on
+the worker's ``sys.path`` (pyspark.zip once per imported sub-package, the
+spark-core jar) — about 0.1 s per task in a bare mapInPandas worker on a
+4-core box (16 importers), more once a task has imported more of pyspark,
+and more than a small task's parse work. Importing ``ragflow_spark`` in the worker (every
+UDF unpickle does) installs ``ragflow_spark._zipcache``, which skips the
+re-read while the archive is unchanged.
 """
 
 from __future__ import annotations

@@ -209,3 +209,17 @@ def test_emb_head_qv_fallback_without_id_zero_in_head(spark):
     # n large enough to cover id 0 -> direct hit, same qv
     head2, qv2 = entry._emb_head(e, 7)
     assert qv2 == [9.0, 9.0]
+
+
+def test_emb_head_errors_name_the_missing_input(spark):
+    """No vec_id 0 anywhere, or fewer head rows than PQ centroids: a
+    ValueError that says which, not a TypeError or a stripped assert."""
+    import __spark_entry__ as entry
+
+    e = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(1, 6)],
+                              "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="vec_id = 0"):
+        entry._emb_head(e, 3)
+    head = e.orderBy("vec_id").limit(5).collect()
+    with pytest.raises(ValueError, match="k=8 head rows"):
+        entry._head_codebooks(head, 2, 8)

@@ -16,6 +16,7 @@ import duckdb
 import pandas as pd
 
 import __spark_entry__ as entrymod
+from gen_query_goldens import SF_DIR as GOLDEN_SF_DIR
 from ragflow_spark.session import get_spark
 from ragflow_spark.sources.tables import TPCH_TABLES
 
@@ -67,12 +68,14 @@ GOLDEN_SF001_ANCHORED = {"doc_tokenize", "extract_chunks_docs"}
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else GOLDEN_SF_DIR
     only = set(sys.argv[2:])
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    # the goldens' own corpus whatever path names it (symlink, trailing
+    # slash); any other directory, even one named sf0.01, is rows-only
     golden_skip = (GOLDEN_SF001_ANCHORED
-                   if os.path.basename(sf_dir.rstrip("/")) != "sf0.01"
+                   if os.path.realpath(sf_dir) != os.path.realpath(GOLDEN_SF_DIR)
                    else set())
 
     con = duckdb.connect()

@@ -6,8 +6,9 @@ Legs:
 A. single-shot: run_extraction_job over the full corpus -> digest.
 B. partial+resume: attempt 1 over the docs hashing into the first half of
    the partition space (the state a killed job leaves after those
-   partitions manifested), attempt 2 over the FULL corpus with
-   resume_filter -> manifested partitions must skip; final digest == A.
+   partitions manifested), attempt 2 over the FULL corpus -> the
+   driver-side partition list (resume_partitions) must leave out the
+   manifested partitions; final digest == A.
 C. crash: a subprocess runs the full job and is SIGKILLed mid-extraction
    (whole process group). The resume run afterwards must converge to
    digest == A regardless of what the kill left behind (dynamic partition
@@ -183,7 +184,7 @@ content_hash) over the final chunk table.
 
 Resume leg B2 cost {result['resume_sec']} s vs {result['single_sec']} s
 single-shot — the manifested half is never reprocessed (count-verified
-anti-join, `plans/manifest.py:resume_filter`). The crash leg proves
+driver-side partition list, `plans/manifest.py:resume_partitions`). The crash leg proves
 convergence is independent of what a SIGKILL leaves behind: deterministic
 chunk ids + dynamic partition overwrite make the retry idempotent.
 **PASS: {ok}**
