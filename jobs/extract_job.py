@@ -9,7 +9,8 @@
         [--max-per-host N]
 
 Resumable: relaunching with the same --manifest skips partitions already
-manifested as done (left-anti join); chunk ids are deterministic
+manifested as done (the driver collects the list of partition ids still to
+do and filters the pages with isin on it); chunk ids are deterministic
 (md5(chunk_text||url)) so per-partition overwrite is idempotent.
 
 Build the zip with: python tools/package.py

@@ -23,8 +23,6 @@ from pyspark.sql import DataFrame, functions as F
 from ragflow_spark.functions.text import (
     MINHASH_MOD,
     fingerprint_md5,
-    lsh_bands,
-    minhash_signature,
     word_shingles,
 )
 from ragflow_spark.functions.vectors import cosine, dot, norm
@@ -152,9 +150,10 @@ def minhash_base_arrow(
     over k minima) exceeds whole-stage-codegen limits and Spark falls back
     to INTERPRETED per-row eval (`StringSplit.nullSafeEval` in executor
     stacks) — measured ~10× slower per doc at the 1M-doc smoke than the
-    131k run extrapolates. The Arrow path is the scale default for
+    131k run extrapolates. The Arrow path is the only path of
     ``minhash_pairs``; the expression path remains the oracle-checked
-    reference implementation (doc_minhash_sig/bands queries)."""
+    reference implementation (doc_minhash_sig/bands queries), and
+    tests/test_scale_guards.py pins the two equal."""
     import hashlib
 
     import numpy as np
@@ -224,8 +223,6 @@ def minhash_pairs(
     jaccard_threshold: float = 0.5,
     shingle_n: int = 3,
     max_band_size: int | None = DEFAULT_MAX_BAND_SIZE,
-    persist_base: bool = True,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b) whose shingle-set Jaccard ≥ threshold,
     found via minhash-LSH banding.
@@ -235,24 +232,13 @@ def minhash_pairs(
     only to surviving candidates. A band shared by k docs yields k²
     candidates — ``max_band_size`` drops such degenerate bands (identical
     boilerplate belongs to exact dedup)."""
-    rows = num_hashes // bands
-    if use_arrow:
-        base = minhash_base_arrow(df, id_col, text_col, num_hashes,
-                                  shingle_n, bands)
-    else:
-        base = df.select(
-            F.col(id_col).alias("_id"),
-            word_shingles(F.col(text_col), shingle_n).alias("_sh"),
-            minhash_signature(F.col(text_col), num_hashes,
-                              shingle_n).alias("_sig"),
-        ).withColumn("_bands", lsh_bands(F.col("_sig"), bands, rows))
-    if persist_base:
-        # the signature table feeds three consumers (both band-join sides +
-        # the verify re-attach); without persist the shingle/minhash pass
-        # runs 3-4×. MEMORY_AND_DISK spills cleanly; on a 100 TB run you
-        # would materialize this as its own parquet/Iceberg signature table
-        # (one write, reread by key) instead of an executor cache.
-        base = base.persist()
+    # the signature table feeds three consumers (both band-join sides +
+    # the verify re-attach); without persist the shingle/minhash pass
+    # runs 3-4×. MEMORY_AND_DISK spills cleanly; on a 100 TB run you
+    # would materialize this as its own parquet/Iceberg signature table
+    # (one write, reread by key) instead of an executor cache.
+    base = minhash_base_arrow(df, id_col, text_col, num_hashes, shingle_n,
+                              bands).persist()
     # candidate generation on (id, band) ONLY — the shingle arrays must not
     # ride through the k² band join (they dominate shuffle bytes otherwise)
     band_rows = base.select("_id", F.explode("_bands").alias("_band"))
@@ -295,12 +281,10 @@ def minhash_pairs(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    cached = [base] if persist_base else []
+    out._rs_cached = [base]  # caller releases via dedup.release(out)
     if hot is not None:
         out._rs_hot_bands = hot
-        cached.append(hot)
-    if cached:
-        out._rs_cached = cached  # caller releases via dedup.release(out)
+        out._rs_cached.append(hot)
     return out
 
 
@@ -564,8 +548,6 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 6,
     max_band_size: int | None = DEFAULT_MAX_BAND_SIZE,
-    persist_base: bool = True,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Candidate pairs via 16-bit chunk banding over the 64-bit simhash
     (pigeonhole: hamming ≤ 6 over 4 chunks → some chunk differs ≤1; we use
@@ -577,10 +559,8 @@ def simhash_pairs(
     minhash_pairs uses — ``max_band_size`` (default-on) anti-joins those
     chunks away; identical docs are exact dedup's job. The simhash table is
     persisted (three consumers: both join sides + the guard) — without it
-    the per-token aggregate tree runs 3×; release via ``release()``."""
-    sh = (simhash64_arrow if use_arrow else simhash64)(df, id_col, text_col)
-    if persist_base:
-        sh = sh.persist()
+    the per-token simhash pass runs 3×; release via ``release()``."""
+    sh = simhash64_arrow(df, id_col, text_col).persist()
     chunks = sh.select(
         F.col(id_col).alias("_id"), "simhash_hi", "simhash_lo",
         F.explode(
@@ -632,12 +612,10 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    cached = [sh] if persist_base else []
+    out._rs_cached = [sh]  # caller releases via dedup.release(out)
     if hot is not None:
         out._rs_hot_bands = hot
-        cached.append(hot)
-    if cached:
-        out._rs_cached = cached  # caller releases via dedup.release(out)
+        out._rs_cached.append(hot)
     return out
 
 

@@ -13,6 +13,13 @@ repartition from ``ragflow_spark.plans.partitioning``:
     chunks (url, warc_ts, chunk_idx, chunk_text, tag_text, spans, title,
             parser, fmt, content_hash, partition_id, error)
 
+The plan is built in one place, ``_stage`` (prune, cap, partition_id) then
+``_parse`` (shuffle, UDF), for every way the stage is driven:
+``extract_chunks`` over a batch DataFrame, the same call over a
+``readStream`` DataFrame (the streaming path — exactly-once from the sink
+checkpoint plus the deterministic ids), and ``run_extraction_job``, which
+adds only its noindex and resume filters between the two steps.
+
 Per-document failures NEVER kill the job: a failing doc emits one row with
 ``error`` set and chunk_idx = -1 (the 100 TB contract — one malformed PDF
 out of 10^12 docs must not fail a stage). ``content_hash`` =
@@ -166,77 +173,44 @@ def _extract_batches(batches, template_cfg: dict | None = None) -> Iterator:
         yield pd.DataFrame(out)
 
 
-def _size_str_to_bytes(v: str) -> int:
-    v = v.strip().lower().rstrip("b")
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if v.endswith(suffix):
-            mult, v = m, v[:-1]
-            break
-    return int(float(v) * mult)
+def _stage(pages: DataFrame, num_partitions: int) -> DataFrame:
+    """Column prune (only what the UDF consumes crosses the scan), the F1
+    size cap, and the stable ``partition_id`` resume key."""
+    pruned = pages.select(
+        "url", "warc_ts", "html", "lang", "parser", "fmt"
+    ).filter(F.length(F.col("html")) <= DOC_MAXIMUM_SIZE)
+    return with_partition_id(pruned, num_partitions)
 
 
-def _estimate_scan_tasks(df: DataFrame) -> int:
-    """Metadata-only estimate of the scan's task count: input bytes /
-    spark.sql.files.maxPartitionBytes. Input bytes come from the optimizer's
-    statistics (file-source relations report file sizes there) — no RDD
-    materialization, no job. Unknown stats (the 8 EiB default of non-file
-    relations) → assume fine-grained, skip the extra exchange."""
-    spark = df.sparkSession
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        mpb = _size_str_to_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        if size <= 0 or size >= (1 << 60):  # unknown / default-huge stats
-            return 1 << 30
-        return max(1, size // max(1, mpb))
-    except Exception:
-        return 1 << 30
+def _parse(staged: DataFrame, num_partitions: int,
+           template_cfg: dict | None) -> DataFrame:
+    """Cost-equalizing shuffle, then the parity-core UDF. The shuffle
+    always runs: scan splits bound BYTES, not parse COST — parse cost per
+    byte varies 10-100× across formats, so byte-bounded splits inherit the
+    corpus layout's cost skew. Measured at 1M docs / local[32]: shuffled
+    8 702 docs/s with task p99/median 1.69, vs 6 899 docs/s at 2.13
+    without (+26%); the shuffle is linear in input bytes with no
+    degenerate keys (url hash + giant lane)."""
+    return partition_for_extract(staged, num_partitions).mapInPandas(
+        lambda batches: _extract_batches(batches, template_cfg),
+        schema=CHUNKS_SCHEMA,
+    )
 
 
 def extract_chunks(
     pages: DataFrame,
     num_partitions: int | None = None,
     skip_errors_column: bool = False,
-    repartition: bool | str = True,
     template_cfg: dict | None = None,
 ) -> DataFrame:
     """The end-to-end extraction plan. ``num_partitions`` defaults to the
-    session's shuffle partitions.
-
-    ``repartition`` controls the physical size-bucketing exchange:
-    - True (default): always shuffle. Scan splits bound BYTES, not parse
-      COST — parse cost per byte varies 10-100× across formats, so
-      byte-bounded splits inherit the corpus layout's cost skew. Measured
-      at 1M docs / local[32]: forced shuffle 8 702 docs/s with task
-      p99/median 1.69, vs 6 899 docs/s at 2.13 without — the exchange
-      pays for itself (+26%) on top of equalizing the tail; at 131k it
-      ties-or-wins. The shuffle is linear in input bytes with no
-      degenerate keys (url hash + giant lane), so this holds at any scale.
-    - "auto" (deprecated heuristic, kept for comparison runs): shuffle
-      only when the scan is coarser than the target parallelism.
-    - False: never (pre-partitioned inputs)."""
-    spark = pages.sparkSession
+    session's shuffle partitions. ``pages`` may be a batch or a
+    ``readStream`` DataFrame: the plan is the same either way."""
     if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    plan = (
-        pages
-        # column pruning: only what the UDF consumes crosses the scan
-        .select("url", "warc_ts", "html", "lang", "parser", "fmt")
-        .filter(F.length(F.col("html")) <= DOC_MAXIMUM_SIZE)
-    )
-    plan = with_partition_id(plan, num_partitions)
-    do_shuffle = repartition
-    if repartition == "auto":
-        do_shuffle = _estimate_scan_tasks(plan) < max(2, num_partitions // 2)
-    if do_shuffle:
-        plan = partition_for_extract(plan, num_partitions)
-    chunks = plan.mapInPandas(
-        lambda batches: _extract_batches(batches, template_cfg),
-        schema=CHUNKS_SCHEMA,
-    )
+        num_partitions = int(
+            pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    chunks = _parse(_stage(pages, num_partitions), num_partitions,
+                    template_cfg)
     if skip_errors_column:
         chunks = chunks.filter(F.col("error").isNull()).drop("error")
     return chunks
@@ -272,21 +246,15 @@ def run_extraction_job(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    pruned = pages.select(
-        "url", "warc_ts", "html", "lang", "parser", "fmt"
-    ).filter(F.length(F.col("html")) <= DOC_MAXIMUM_SIZE)
+    staged = _stage(pages, num_partitions)
     if respect_noindex:
-        pruned = pruned.filter(~page_noindex(F.col("html")))
-    staged = with_partition_id(pruned, num_partitions)
+        staged = staged.filter(~page_noindex(F.col("html")))
     todo_pids = resume_partitions(
         staged, read_manifest(spark, manifest_path), num_partitions)
     if not todo_pids:
         return
-    todo = staged.filter(F.col("partition_id").isin(todo_pids))
-    chunks = partition_for_extract(todo, num_partitions).mapInPandas(
-        lambda batches: _extract_batches(batches, template_cfg),
-        schema=CHUNKS_SCHEMA,
-    )
+    chunks = _parse(staged.filter(F.col("partition_id").isin(todo_pids)),
+                    num_partitions, template_cfg)
     # idempotent per-partition overwrite: rerunning a partition rewrites the
     # exact same deterministic rows. A per-write option, so the caller's
     # session keeps its own partitionOverwriteMode.

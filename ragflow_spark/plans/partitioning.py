@@ -29,37 +29,30 @@ from pyspark.sql import functions as F
 GIANT_BYTES = 256 * 1024
 
 
-def with_partition_id(df: DataFrame, num_partitions: int,
-                      url_col: str = "url") -> DataFrame:
+def with_partition_id(df: DataFrame, num_partitions: int) -> DataFrame:
     """Attach the stable logical partition id (resume/manifest key)."""
     return df.withColumn(
         "partition_id",
-        F.pmod(F.xxhash64(F.col(url_col)), F.lit(num_partitions)).cast("int"),
+        F.pmod(F.xxhash64(F.col("url")), F.lit(num_partitions)).cast("int"),
     )
 
 
-def partition_for_extract(
-    df: DataFrame,
-    num_partitions: int,
-    blob_col: str = "html",
-    url_col: str = "url",
-    giant_bytes: int = GIANT_BYTES,
-) -> DataFrame:
+def partition_for_extract(df: DataFrame, num_partitions: int) -> DataFrame:
     """Physical repartition for the UDF stage: normals hash on url; giants
-    hash on a distinct salt lane so they spread uniformly and independently.
+    (``html`` of at least ``GIANT_BYTES``) hash on a distinct salt lane so
+    they spread uniformly and independently.
 
     Implemented as a single repartition on a composite key (no union → one
     shuffle, one stage)."""
     shuffle_key = F.when(
-        F.length(F.col(blob_col)) >= F.lit(giant_bytes),
+        F.length(F.col("html")) >= F.lit(GIANT_BYTES),
         # giants: spread by url hash in a disjoint key-space lane
-        F.xxhash64(F.col(url_col), F.lit("giant-lane")),
-    ).otherwise(F.xxhash64(F.col(url_col)))
+        F.xxhash64(F.col("url"), F.lit("giant-lane")),
+    ).otherwise(F.xxhash64(F.col("url")))
     return df.repartition(num_partitions, shuffle_key)
 
 
-def spread_small_scan(df: DataFrame, parallelism: int | None = None
-                      ) -> DataFrame:
+def spread_small_scan(df: DataFrame) -> DataFrame:
     """Scale-ADAPTIVE cost-equalizing exchange before per-row-heavy
     compute (optimization guide §2: derive partitioning from the input,
     not a constant).
@@ -75,8 +68,7 @@ def spread_small_scan(df: DataFrame, parallelism: int | None = None
     the actual scan split count first and is a plan no-op whenever the
     scan is already at least as parallel as the session (the 100 TB
     case), so it never adds an exchange at scale."""
-    sc = df.sparkSession.sparkContext
-    p = parallelism or sc.defaultParallelism
+    p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= p:
         return df
     return df.repartition(p)

@@ -1,13 +1,16 @@
-"""Structured Streaming variants of the event operators and the streaming
-face of the extraction pipeline.
+"""Structured Streaming variants of the event operators and the sink for
+the streaming face of the extraction pipeline.
 
 The reference's only streaming machinery is a Redis task queue with manual
 ack (rag/svr/task_executor.py:137-188) — at-least-once batch resume, which
 this engine maps to the manifest protocol (ragflow_spark.plans.manifest).
 These operators cover the genuinely-streaming workloads a crawl/event feed
-adds on top: watermarked tumbling-window aggregation, and a streaming
-extraction that runs the same Arrow UDF per micro-batch with exactly-once
-sink semantics via checkpointing.
+adds on top: watermarked tumbling-window aggregation, stateful sessions and
+dedup. Streaming extraction has no operator of its own: it is
+``operators.extract.extract_chunks`` over a ``readStream`` of pages (the
+same plan as batch, giant lane and ``template_cfg`` included), written by
+``run_stream_to_parquet`` with exactly-once sink semantics via
+checkpointing.
 """
 
 from __future__ import annotations
@@ -42,26 +45,6 @@ def windowed_counts_stream(events: DataFrame, watermark: str = "2 hours",
             "window_start", F.col("window_start").cast("timestamp_ntz")
         )
     return out
-
-
-def extract_chunks_stream(pages: DataFrame, num_partitions: int = 32) -> DataFrame:
-    """Streaming extraction: the same mapInPandas parity-core UDF applied to
-    a readStream of pages (e.g. a parquet/Iceberg landing zone written by a
-    crawler). Stateless per row → no watermark needed; exactly-once comes
-    from the sink checkpoint + deterministic content_hash ids."""
-    from ragflow_spark.operators.extract import (
-        CHUNKS_SCHEMA,
-        DOC_MAXIMUM_SIZE,
-        _extract_batches,
-    )
-    from ragflow_spark.plans.partitioning import with_partition_id
-
-    plan = (
-        pages.select("url", "warc_ts", "html", "lang", "parser", "fmt")
-        .filter(F.length(F.col("html")) <= DOC_MAXIMUM_SIZE)
-    )
-    plan = with_partition_id(plan, num_partitions)
-    return plan.mapInPandas(_extract_batches, schema=CHUNKS_SCHEMA)
 
 
 def run_stream_to_parquet(stream_df: DataFrame, out_path: str,

@@ -172,35 +172,6 @@ def test_streaming_windowed_counts(spark, tmpdir_path):
     assert j.filter("n_events != n2 or abs(sum_value - s2) > 1e-6").count() == 0
 
 
-def test_streaming_extraction_matches_batch(spark, tmpdir_path):
-    from ragflow_spark.operators.extract import extract_chunks
-    from ragflow_spark.sources.pages import generate_pages_df
-    from ragflow_spark.streaming.events import (
-        extract_chunks_stream,
-        run_stream_to_parquet,
-    )
-
-    src = os.path.join(tmpdir_path, "pages_src")
-    pages = generate_pages_df(spark, 40, parallelism=2)
-    pages.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = os.path.join(tmpdir_path, "chunks_out")
-    q = run_stream_to_parquet(
-        extract_chunks_stream(stream, num_partitions=8),
-        out, os.path.join(tmpdir_path, "ckpt2"),
-    )
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out).select("url", "chunk_idx", "content_hash")
-    want = extract_chunks(spark.read.parquet(src), num_partitions=8).select(
-        "url", "chunk_idx", "content_hash"
-    )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
 # ------------------------------------------------------------------- docx
 
 def test_docx_parse_and_templates():

@@ -323,6 +323,60 @@ def test_dropped_band_count_audit(boilerplate_df):
     dedup.release(ok)
 
 
+LSH_EDGE_TEXTS = [
+    "",
+    " ",
+    "one",
+    "two tokens",
+    "tab\tseparated\ttokens here",
+    "new\nline\nseparated tokens",
+    "\tedge tab and edge newline\n",
+    "no\u00a0break\u3000space is not a separator",
+    "  leading and trailing spaces  ",
+    "数据 查询 引擎 分区 过滤 合并 文档",
+    "Ünïcödé àccents naïve café résumé",
+    "repeat repeat repeat repeat repeat repeat",
+    "UPPER lower MiXeD case UPPER lower",
+    "the quick brown fox jumps over the lazy dog. " * 40,
+]
+
+
+def test_lsh_arrow_base_matches_native_expressions(spark):
+    """The Arrow bases are the only path of minhash_pairs/simhash_pairs;
+    the native expressions are the oracle-checked reference. Pin them
+    equal on whitespace/Unicode/short-text edge cases."""
+    from ragflow_spark.functions.text import (
+        lsh_bands,
+        minhash_signature,
+        word_shingles,
+    )
+
+    df = spark.createDataFrame(list(enumerate(LSH_EDGE_TEXTS)),
+                               "doc_id long, text string")
+    arrow = {
+        r._id: (r._sh, r._sig, r._bands)
+        for r in dedup.minhash_base_arrow(df, "doc_id", "text").collect()
+    }
+    sig = minhash_signature(F.col("text"), 16, 3)
+    native = {
+        r.doc_id: (r.sh, r.sig, r.bands)
+        for r in df.select(
+            "doc_id",
+            word_shingles(F.col("text"), 3).alias("sh"),
+            sig.alias("sig"),
+            lsh_bands(sig, 4, 4).alias("bands"),
+        ).collect()
+    }
+    assert len(native) == len(LSH_EDGE_TEXTS)
+    assert arrow == native
+
+    def simhashes(fn):
+        return {r.doc_id: (r.simhash_hi, r.simhash_lo)
+                for r in fn(df, "doc_id", "text").collect()}
+
+    assert simhashes(dedup.simhash64_arrow) == simhashes(dedup.simhash64)
+
+
 def test_drop_common_segments_regex_special_delim(spark):
     # '|' is regex-special: unescaped it splits between every character
     rows = [(1, "shared|unique one"), (2, "shared|unique two")]
@@ -336,7 +390,9 @@ def test_extract_scan_prunes_unused_columns(spark, tmpdir_path):
     """The pages scan must not read the wide 'text' column (the UDF only
     consumes url/warc_ts/html/lang/parser/fmt) — column pruning reaching
     the parquet ReadSchema is the difference between scanning 100 TB and
-    scanning the 60% of it the pipeline actually uses."""
+    scanning the 60% of it the pipeline actually uses. Batch and
+    readStream sources must get the same plan: one giant-lane
+    REPARTITION_BY_NUM exchange feeding the UDF."""
     import os
 
     from ragflow_spark.operators.extract import extract_chunks
@@ -344,16 +400,25 @@ def test_extract_scan_prunes_unused_columns(spark, tmpdir_path):
 
     path = os.path.join(tmpdir_path, "pages_prune")
     pages_src.write_pages(spark, 32, path, parallelism=2)
-    plan = extract_chunks(spark.read.parquet(path), num_partitions=4)
-    explained = plan._jdf.queryExecution().explainString(
-        plan._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    scan = [ln for ln in explained.split("\n") if "ReadSchema" in ln]
-    assert scan, explained
-    assert "text" not in scan[0].split("ReadSchema:")[1]
-    assert "html" in scan[0]
+    batch = spark.read.parquet(path)
+    trees = []
+    for pages in (batch, spark.readStream.schema(batch.schema).parquet(path)):
+        explained = _formatted_plan(extract_chunks(pages, num_partitions=4))
+        exchanges = [ln for ln in explained.split("\n")
+                     if "REPARTITION_BY_NUM" in ln]
+        assert len(exchanges) == 1, explained
+        assert "giant-lane" in exchanges[0], explained
+        # operator tree above the source leaf
+        trees.append([ln.split("(")[0] for ln in
+                      explained.split("\n\n")[0].split("\n")[1:-1]])
+        if pages.isStreaming:
+            assert "StreamingRelation" in explained, explained
+            continue
+        scan = [ln for ln in explained.split("\n") if "ReadSchema" in ln]
+        assert scan, explained
+        assert "text" not in scan[0].split("ReadSchema:")[1]
+        assert "html" in scan[0]
+    assert trees[0] == trees[1] and "MapInPandas" in trees[0][1], trees
 
 
 def test_resume_reprocesses_drifted_partitions(spark, tmpdir_path):

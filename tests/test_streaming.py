@@ -11,7 +11,6 @@ from ragflow_spark.operators.events import sessionize
 from ragflow_spark.operators.extract import extract_chunks
 from ragflow_spark.sources import pages as pages_src
 from ragflow_spark.streaming.events import (
-    extract_chunks_stream,
     run_stream_to_parquet,
     sessionize_stateful,
 )
@@ -22,24 +21,19 @@ def test_stream_extraction_equals_batch(spark, tmpdir_path):
     pages_src.generate_pages_df(spark, 48, parallelism=2).write.parquet(src)
     pages = spark.read.parquet(src)
 
-    batch = {
-        (r.url, r.chunk_idx): (r.chunk_text, r.content_hash)
-        for r in extract_chunks(pages, num_partitions=8)
-        .select("url", "chunk_idx", "chunk_text", "content_hash").collect()
-    }
+    cols = ["url", "chunk_idx", "chunk_text", "content_hash"]
+    batch = sorted(map(tuple, extract_chunks(pages, num_partitions=8)
+                       .select(cols).collect()))
 
     stream = spark.readStream.schema(pages.schema).parquet(src)
     out = os.path.join(tmpdir_path, "chunks")
     q = run_stream_to_parquet(
-        extract_chunks_stream(stream, num_partitions=8),
+        extract_chunks(stream, num_partitions=8),
         out, os.path.join(tmpdir_path, "ckpt"),
     )
     q.awaitTermination(300)
-    streamed = {
-        (r.url, r.chunk_idx): (r.chunk_text, r.content_hash)
-        for r in spark.read.parquet(out)
-        .select("url", "chunk_idx", "chunk_text", "content_hash").collect()
-    }
+    # row multisets: a duplicated or dropped chunk row fails
+    streamed = sorted(map(tuple, spark.read.parquet(out).select(cols).collect()))
     assert streamed == batch
 
 
@@ -190,7 +184,7 @@ def test_stream_extraction_checkpoint_resume_no_reprocess(spark, tmpdir_path):
     def drain():
         stream = spark.readStream.schema(schema).parquet(src)
         q = run_stream_to_parquet(
-            extract_chunks_stream(stream, num_partitions=8), out, ckpt
+            extract_chunks(stream, num_partitions=8), out, ckpt
         )
         q.awaitTermination(300)
 
