@@ -92,24 +92,3 @@ def render_table_html(table_md: str) -> str:
         out.append("</tr>")
     out += ["</tbody>", "</table>"]
     return "\n".join(out)
-
-
-def render_table_text(table_md: str) -> str:
-    """Plain-text rendering of an extracted markdown table. The reference
-    renders tables to HTML via the ``markdown`` package (rag/app/naive.py:
-    178-180); that package is absent here, so tables become
-    'header: value; …' row lines (the same natural-language shape the
-    reference's table tier emits via ``tokenize_table``)."""
-    rows = [r.strip() for r in table_md.strip().split("\n") if r.strip()]
-    if len(rows) < 2:
-        return table_md.strip()
-    def cells(row: str) -> list[str]:
-        return [c.strip() for c in row.strip("|").split("|")]
-    header = cells(rows[0])
-    out = []
-    for row in rows[2:]:  # row 1 is the ---|--- separator
-        vals = cells(row)
-        out.append("; ".join(
-            f"{h}: {v}" for h, v in zip(header, vals) if v
-        ))
-    return "\n".join(out)

@@ -59,14 +59,3 @@ def parse_spans(txt: str) -> list[Span]:
         for pn in pages:
             out.append(Span(pn, left, right, top, bottom))
     return out
-
-
-def positions_to_lists(spans: list[Span]) -> tuple[list[int], list[tuple], list[int]]:
-    """``add_positions`` semantics (rag/nlp/__init__.py:291-303): 1-based
-    pages, int-cast coordinates."""
-    page_nums, positions, tops = [], [], []
-    for pn, left, right, top, bottom in spans:
-        page_nums.append(int(pn + 1))
-        tops.append(int(top))
-        positions.append((int(pn + 1), int(left), int(right), int(top), int(bottom)))
-    return page_nums, positions, tops

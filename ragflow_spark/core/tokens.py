@@ -37,14 +37,6 @@ _PRETOK = re.compile(
 _CJK = re.compile(r"[⺀-鿿぀-ヿ가-힯]")
 
 
-def _word_tokens(piece: str) -> int:
-    """Sub-token count for one standalone word (used by truncate)."""
-    n = len(piece)
-    if n <= 4:
-        return 1
-    return (n + 3) // 4
-
-
 def num_tokens_from_string(s: str) -> int:
     """Deterministic token count standing in for
     ``len(cl100k_base.encode(s))`` (rag/utils/__init__.py:82-86).

@@ -26,21 +26,3 @@ def norm(a) -> Column:
             a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
         )
     )
-
-
-def cosine(a, b) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_dist(a, b) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

@@ -11,8 +11,9 @@ shuffle-on-key jobs with no driver state, sized for 10^9+ docs.
              verify on the pair
 - simhash:   64-bit sign-aggregated fingerprint, candidates via 4×16-bit
              chunk banding, hamming ≤ d verify (bit_count is native)
-- ngram:     exact n-gram Jaccard within a blocking group (for modest
-             group sizes; the honest O(g²) baseline the LSH variants beat)
+- ngram:     exact n-gram Jaccard within a blocking group via one BLAS
+             intersection-count matmul per group (modest group sizes; the
+             exact baseline the LSH variants beat)
 - embedding: cosine ≥ τ pairs within a blocking group over array<float>
 """
 
@@ -25,22 +26,23 @@ from ragflow_spark.functions.text import (
     fingerprint_md5,
     word_shingles,
 )
-from ragflow_spark.functions.vectors import cosine, dot, norm
+from ragflow_spark.functions.vectors import dot, norm
 
-# default hot-band cap for the LSH pair joins (minhash + simhash). A band
-# key shared by k docs emits k² candidate pairs; above this cap the band is
-# dropped. Default-ON because an unguarded band join is the one thing that
-# turns these from O(n) into O(n²) on a real crawl; callers can pass None
-# to disable for small audits.
+# default hot-band cap for the bucket pair joins (minhash, simhash and the
+# winnowing fingerprints of substring_dup_pairs). A band key shared by k
+# docs emits k² candidate pairs; above this cap the band is dropped.
+# Default-ON because an unguarded band join is the one thing that turns
+# these from O(n) into O(n²) on a real crawl; callers can pass None to
+# disable for small audits.
 #
 # RECALL CAVEAT (audit before relying on the cap): dropping a hot band
 # loses MORE than identical content. A pair of genuinely near-duplicate,
 # non-identical docs whose only shared bands happen to be hot (e.g. both
 # docs are mostly shared boilerplate plus a small distinct tail) is
 # silently missed — exact dedup only covers the byte-identical subset.
-# Both LSH operators therefore attach the number of dropped hot bands to
-# their result (`_rs_dropped_bands`, read it via ``dropped_band_count``)
-# so callers can audit the loss instead of trusting it is zero.
+# Every guarded operator therefore attaches the dropped hot-key set to its
+# result (`_rs_hot_bands`, count it via ``dropped_band_count``) so callers
+# can audit the loss instead of trusting it is zero.
 DEFAULT_MAX_BAND_SIZE = 1024
 
 
@@ -51,6 +53,43 @@ def dropped_band_count(df: DataFrame) -> int:
     action reads the cache — no second pass over the corpus."""
     hot = getattr(df, "_rs_hot_bands", None)
     return 0 if hot is None else hot.count()
+
+
+def _drop_hot_keys(
+    rows: DataFrame, key: str, cap: int | None
+) -> tuple[DataFrame, DataFrame | None]:
+    """The hot-key guard every bucket self-join shares: a key held by k
+    rows emits k² candidate pairs, so keys held by more than ``cap`` rows
+    (boilerplate-degenerate at web scale: navigation chrome, legal
+    footers) are anti-joined away. Returns ``(rows, hot)`` where ``hot``
+    is the persisted set of dropped keys, small by construction and
+    broadcast into the anti-join, or None when ``cap`` is None (guard
+    off). See DEFAULT_MAX_BAND_SIZE for the recall caveat; ``hot`` goes
+    on the result via ``_with_cache`` so ``dropped_band_count`` can
+    audit the loss."""
+    if cap is None:
+        return rows, None
+    hot = (
+        rows.groupBy(key)
+        .count()
+        .filter(F.col("count") > cap)
+        .select(key)
+        .persist()
+    )
+    return rows.join(F.broadcast(hot), key, "left_anti"), hot
+
+
+def _with_cache(
+    out: DataFrame, cached: list[DataFrame], hot: DataFrame | None
+) -> DataFrame:
+    """Attach an operator's persisted intermediates to its result
+    (``_rs_cached``, freed by ``release``) and the hot-key set, if any
+    (``_rs_hot_bands``, counted by ``dropped_band_count``)."""
+    out._rs_cached = list(cached)
+    if hot is not None:
+        out._rs_hot_bands = hot
+        out._rs_cached.append(hot)
+    return out
 
 
 def release(df: DataFrame) -> None:
@@ -241,22 +280,10 @@ def minhash_pairs(
                               bands).persist()
     # candidate generation on (id, band) ONLY — the shingle arrays must not
     # ride through the k² band join (they dominate shuffle bytes otherwise)
-    band_rows = base.select("_id", F.explode("_bands").alias("_band"))
-    hot = None
-    if max_band_size is not None:
-        # hot-band guard: a band shared by k docs emits k² candidates; bands
-        # over the cap are boilerplate-degenerate (at web scale: navigation
-        # chrome, legal footers) and are dropped. See DEFAULT_MAX_BAND_SIZE
-        # for the recall caveat; the drop set is persisted and surfaced on
-        # the result for auditing via ``dropped_band_count``.
-        hot = (
-            band_rows.groupBy("_band")
-            .count()
-            .filter(F.col("count") > max_band_size)
-            .select("_band")
-            .persist()
-        )
-        band_rows = band_rows.join(F.broadcast(hot), "_band", "left_anti")
+    band_rows, hot = _drop_hot_keys(
+        base.select("_id", F.explode("_bands").alias("_band")),
+        "_band", max_band_size,
+    )
     cand = (
         band_rows.alias("a")
         .join(band_rows.alias("b"), on="_band")
@@ -281,11 +308,7 @@ def minhash_pairs(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    out._rs_cached = [base]  # caller releases via dedup.release(out)
-    if hot is not None:
-        out._rs_hot_bands = hot
-        out._rs_cached.append(hot)
-    return out
+    return _with_cache(out, [base], hot)
 
 
 # ------------------- incremental dedup (new batch vs a historical store)
@@ -392,19 +415,12 @@ def incremental_minhash_pairs(
     nb = new_base.select(
         F.col("doc_id").alias("id_new"), F.explode("bands").alias("_band")
     )
-    hb = store.select(
-        F.col("doc_id").alias("id_hist"), F.explode("bands").alias("_band")
-    ).join(nb.select("_band").dropDuplicates(), "_band", "left_semi")
-    hot = None
-    if max_band_size is not None:
-        hot = (
-            hb.groupBy("_band")
-            .count()
-            .filter(F.col("count") > max_band_size)
-            .select("_band")
-            .persist()
-        )
-        hb = hb.join(F.broadcast(hot), "_band", "left_anti")
+    hb, hot = _drop_hot_keys(
+        store.select(
+            F.col("doc_id").alias("id_hist"), F.explode("bands").alias("_band")
+        ).join(nb.select("_band").dropDuplicates(), "_band", "left_semi"),
+        "_band", max_band_size,
+    )
     cand = (
         nb.join(hb, "_band")
         .select("id_new", "id_hist")
@@ -437,12 +453,7 @@ def incremental_minhash_pairs(
         .filter(F.col("est_jaccard") >= est_threshold)
         .select("id_new", "id_hist", "est_jaccard")
     )
-    cached = [new_base]
-    if hot is not None:
-        out._rs_hot_bands = hot
-        cached.append(hot)
-    out._rs_cached = cached  # caller releases via dedup.release(out)
-    return out
+    return _with_cache(out, [new_base], hot)
 
 
 # ---------------------------------------------------------------- simhash
@@ -578,19 +589,7 @@ def simhash_pairs(
             )
         ).alias("_chunk"),
     )
-    hot = None
-    if max_band_size is not None:
-        # same recall caveat as minhash_pairs (see DEFAULT_MAX_BAND_SIZE):
-        # near-dup pairs whose only shared chunks are hot are missed; the
-        # drop set is surfaced for auditing via ``dropped_band_count``.
-        hot = (
-            chunks.groupBy("_chunk")
-            .count()
-            .filter(F.col("count") > max_band_size)
-            .select("_chunk")
-            .persist()
-        )
-        chunks = chunks.join(F.broadcast(hot), "_chunk", "left_anti")
+    chunks, hot = _drop_hot_keys(chunks, "_chunk", max_band_size)
     a = chunks.select(
         F.col("_id").alias("id_a"),
         F.col("simhash_hi").alias("hi_a"), F.col("simhash_lo").alias("lo_a"),
@@ -612,14 +611,16 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    out._rs_cached = [sh]  # caller releases via dedup.release(out)
-    if hot is not None:
-        out._rs_hot_bands = hot
-        out._rs_cached.append(hot)
-    return out
+    return _with_cache(out, [sh], hot)
 
 
 # ------------------------------------------------------------ ngram exact
+
+# float32 represents every integer below 2²⁴ exactly, so the 0/1 matmul
+# intersection counts of a group stay exact while its distinct-shingle
+# universe is below this
+_MAX_GROUP_VOCAB = 1 << 24
+
 
 def ngram_jaccard_pairs(
     df: DataFrame,
@@ -628,140 +629,41 @@ def ngram_jaccard_pairs(
     group_col: str,
     threshold: float = 0.5,
     shingle_n: int = 3,
-    method: str = "matmul",
 ) -> DataFrame:
-    """Exact pairwise Jaccard within a blocking group.
-
-    ``method="matmul"`` (default, r8) generates candidate pairs per group
-    with one dense numpy intersection-count matmul (see
-    :func:`_ngram_jaccard_matmul`), then runs the SAME exact verify
-    predicate on the candidates — lossless, so the output is identical.
-    ``method="prefix"`` is the AllPairs/PPJoin prefix filter before the
-    exact verify — see :func:`_ngram_jaccard_prefix`; it stays the
-    unbounded-scale path (every stage linear in tokens, no per-group
-    dense state), and the right choice when token frequencies are
-    Zipfian (real web shingles) so prefixes rarely collide. The matmul
-    path exists because a DENSE token universe (small vocab, CJK char
-    shingles — the r8 bench corpus is vocab-31) makes every prefix
-    bucket hold most of the group: the bucket self-join emits Σk² ≈ g²
-    candidate rows through a shuffle+dedup, where BLAS does the same
-    Σk² multiply-adds in-core at memory bandwidth (sf1.0 measured:
-    92.4 s → 5.0 s, same rows). ``method="exact"``
-    keeps the direct O(g²) self-join below: fewest stages, right when
-    groups are tiny.
-    All methods return identical pairs (same verify predicate), so the
-    DuckDB oracle and goldens hold for any of them.
-
-    O(g²) baseline notes (method="exact"):
-    Use only when groups are bounded (e.g. same host); at web scale prefer
-    minhash_pairs or method="prefix".
-
-    Plan shape: ONE self-join on the group key (shuffle volume is the n
-    input rows per side — the g² blowup is streamed join output, never
-    shuffled). All pair predicates go into a SINGLE conjunction ordered
-    cheap→expensive, because Catalyst pushes them into the join condition
-    in chained-filter order REVERSED (CombineFilters prepends): chaining
-    .filter(id<).filter(jaccard) puts the O(L) jaccard set ops FIRST and
-    evaluates them on every ordered pair — measured 40% slower at sf0.1.
-    With the explicit order below, id_a<id_b halves the pairs and the exact
-    size prune (jaccard = |∩|/|∪| ≤ min/max sizes) drops unreachable ones
-    before any intersect/union runs."""
-    sh = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(id_col).alias("_id"),
-        word_shingles(F.col(text_col), shingle_n).alias("_sh"),
-    ).withColumn("_n", F.size("_sh")).persist()  # see release()
-    if method == "matmul":
-        return _ngram_jaccard_matmul(sh, group_col, threshold)
-    if method == "prefix":
-        return _ngram_jaccard_prefix(sh, group_col, threshold)
-    if method != "exact":
-        raise ValueError(f"unknown method: {method!r}")
-    a = sh.select(
-        F.col("_g"), F.col("_id").alias("id_a"),
-        F.col("_sh").alias("sh_a"), F.col("_n").alias("n_a"),
-    )
-    b = sh.select(
-        F.col("_g"), F.col("_id").alias("id_b"),
-        F.col("_sh").alias("sh_b"), F.col("_n").alias("n_b"),
-    )
-    out = (
-        a.join(b, on="_g")
-        .filter(_jaccard_verify_cond(threshold))
-        .select(
-            F.col("_g").alias(group_col), "id_a", "id_b",
-            _jaccard_value().alias("jaccard"),
-        )
-    )
-    out._rs_cached = [sh]  # caller releases via dedup.release(out)
-    return out
-
-
-def _jaccard_value():
-    """round(|∩|/|∪|, 6) over (sh_a, n_a, sh_b, n_b) pair columns. The
-    shingle arrays are array_distinct'ed sets, so |A∪B| = |A|+|B|-|A∩B|
-    exactly — the sizes are already materialized as n_a/n_b and the second
-    per-pair set build (array_union) becomes two column adds
-    (same-session A/B at sf0.1 local[32]: 10.24 s → 8.63 s median)."""
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    return F.round(inter / union, 6)
-
-
-def _jaccard_verify_cond(threshold: float):
-    """The ONE exact pair predicate both methods share, as a single
-    conjunction ordered cheap→expensive: Catalyst pushes chained filters
-    into the join condition in REVERSED order (CombineFilters prepends),
-    so chaining .filter(id<).filter(jaccard) puts the O(L) jaccard set ops
-    FIRST and evaluates them on every ordered pair — measured 40% slower
-    at sf0.1. Here id_a<id_b halves the pairs and the exact size prune
-    (jaccard ≤ min/max sizes) drops unreachable ones before any intersect
-    runs."""
-    return (
-        (F.col("id_a") < F.col("id_b"))
-        & (
-            F.least("n_a", "n_b").cast("double")
-            >= F.lit(threshold) * F.greatest("n_a", "n_b").cast("double")
-        )
-        & (_jaccard_value() >= threshold)
-    )
-
-
-def _ngram_jaccard_matmul(sh: DataFrame, group_col: str,
-                          threshold: float) -> DataFrame:
-    """Per-group dense intersection-count candidate generation + the
-    shared exact verify (lossless, like the prefix path — pinned by
-    test_ngram_prefix_filter_lossless).
+    """Exact pairwise shingle Jaccard ≥ ``threshold`` within a blocking
+    group → (group, id_a, id_b, jaccard), id_a < id_b.
 
     Candidate stage: one applyInPandas task per group builds the binary
     doc×token matrix A and computes every pairwise intersection count as
-    C = A·Aᵀ — counts are EXACT integers (0/1 sums in float32, exact up
-    to 2²⁴), identical to ``size(array_intersect(sh_a, sh_b))`` because
-    both count the distinct shared tokens of two array_distinct'ed sets
-    (pinned by test_ngram_prefix_filter_lossless's three-way A/B).
+    C = A·Aᵀ — counts are EXACT integers (0/1 sums in float32, exact
+    below 2²⁴; a group whose token universe reaches ``_MAX_GROUP_VOCAB``
+    raises ValueError naming the group), identical to
+    ``size(array_intersect(sh_a, sh_b))`` because both count the distinct
+    shared tokens of two array_distinct'ed sets.
     ``inter/union ≥ t − 1e-6`` keeps every pair the verify could accept
     (round-half-up at 6 dp can lift a value by at most 5e-7).
 
     Verify stage: each candidate leaves Python as (id_a, id_b, n_a, n_b,
     inter) integer rows, and the jaccard value + threshold decision are
-    computed by the IDENTICAL Catalyst expression sequence the other
-    methods use (`_jaccard_value` over exact ints: int-sum → cast-double
-    → subtract → divide → round-half-up), so values — and the oracle
-    hash — cannot move. No pair-side join, no per-pair set ops: on a
-    dense token universe where every prefix bucket holds most of the
-    group (the r8 bench corpus is vocab-31), this replaces the Σk² ≈ g²
-    candidate shuffle + array_intersect verify with one BLAS pass
-    (sf1.0 measured: 92.4 s → 5.0 s, same rows).
+    the SAME Catalyst predicate the O(g²) self-join reference
+    ``_ngram_jaccard_exact`` uses (``_jaccard_verify_cond`` over exact
+    ints), so values — and the oracle hash — cannot move; the lossless
+    test pins the two equal. No pair-side join, no per-pair set ops: the
+    g² pair stream stays in-core at memory bandwidth (sf1.0 on a vocab-31
+    corpus: 92.4 s for the prefix-filtered join this replaced → 5.0 s,
+    same rows).
 
     Memory envelope per group task: g·V float32 for A (vocab-chunked
     above ~2²⁸ cells) plus a B·g float32 slab for the C row-block —
-    ~100 MB at g=2500/V=40k. This is the exact-baseline operator for
-    modest blocked groups (docstring above); at unbounded group sizes
-    use method="prefix" or minhash_pairs."""
+    ~100 MB at g=2500/V=40k. Use it only when groups are bounded (e.g.
+    same host); for unbounded groups the scale path is ``minhash_pairs``.
+    The shingle table is persisted; free it with ``release()``."""
     import numpy as np
     import pandas as pd
 
+    sh = _ngram_shingles(df, id_col, text_col, group_col, shingle_n)
     types = dict(sh.dtypes)
+    max_vocab = _MAX_GROUP_VOCAB  # read on the driver, shipped by value
     margin = 1e-6          # > round-6 half-up step (5e-7) + FP div error
     row_block = 2048       # C slab rows: bounds peak memory at B·g
     cell_budget = 1 << 28  # dense A cells before vocab chunking kicks in
@@ -775,6 +677,7 @@ def _ngram_jaccard_matmul(sh: DataFrame, group_col: str,
         g = len(pdf)
         if g < 2:
             return empty
+        gval = pdf["_g"].iloc[0]
         ids = pdf["_id"].to_numpy()
         n = pdf["_n"].to_numpy(dtype=np.int64)
         vocab: dict[str, int] = {}
@@ -785,12 +688,16 @@ def _ngram_jaccard_matmul(sh: DataFrame, group_col: str,
                 doc_idx.append(i)
                 tok_idx.append(j)
         V = len(vocab)
-        assert V < (1 << 24), "token universe too large for exact f32 counts"
+        if V >= max_vocab:
+            raise ValueError(
+                f"ngram_jaccard_pairs: group {gval!r} has {V} distinct "
+                f"shingles, float32 counts are exact only below {max_vocab}"
+                "; block it finer or use minhash_pairs"
+            )
         di = np.asarray(doc_idx, dtype=np.int64)
         ti = np.asarray(tok_idx, dtype=np.int64)
         chunk = V if g * V <= cell_budget else max(1, cell_budget // g)
         parts = []
-        gval = pdf["_g"].iloc[0]
         for b0 in range(0, g, row_block):
             b1 = min(b0 + row_block, g)
             C = np.zeros((b1 - b0, g), dtype=np.float32)
@@ -819,131 +726,88 @@ def _ngram_jaccard_matmul(sh: DataFrame, group_col: str,
         schema=(f"_g {types['_g']}, id_a {types['_id']}, "
                 f"id_b {types['_id']}, n_a int, n_b int, inter int"),
     )
-    # the exact-int twin of _jaccard_value()/_jaccard_verify_cond: same
-    # arithmetic sequence over the same exact integers
-    inter = F.col("inter").cast("double")
+    inter = F.col("inter")
+    out = cand.filter(_jaccard_verify_cond(threshold, inter)).select(
+        F.col("_g").alias(group_col), "id_a", "id_b",
+        _jaccard_value(inter).alias("jaccard"),
+    )
+    return _with_cache(out, [sh], None)
+
+
+def _ngram_shingles(df: DataFrame, id_col: str, text_col: str,
+                    group_col: str, shingle_n: int) -> DataFrame:
+    """(_g, _id, _sh, _n): each doc's distinct word shingles and their
+    count, persisted (the pair stage reads it more than once)."""
+    return df.select(
+        F.col(group_col).alias("_g"),
+        F.col(id_col).alias("_id"),
+        word_shingles(F.col(text_col), shingle_n).alias("_sh"),
+    ).withColumn("_n", F.size("_sh")).persist()
+
+
+def _ngram_jaccard_exact(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    group_col: str,
+    threshold: float = 0.5,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """The O(g²) self-join reference for ``ngram_jaccard_pairs``: same
+    rows and jaccard doubles, computed with per-pair set ops instead of a
+    matmul. Kept for the lossless test, not as an operator.
+
+    Plan shape: ONE self-join on the group key (shuffle volume is the n
+    input rows per side — the g² blowup is streamed join output, never
+    shuffled), filtered by ``_jaccard_verify_cond``."""
+    sh = _ngram_shingles(df, id_col, text_col, group_col, shingle_n)
+    a = sh.select(
+        F.col("_g"), F.col("_id").alias("id_a"),
+        F.col("_sh").alias("sh_a"), F.col("_n").alias("n_a"),
+    )
+    b = sh.select(
+        F.col("_g"), F.col("_id").alias("id_b"),
+        F.col("_sh").alias("sh_b"), F.col("_n").alias("n_b"),
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    out = (
+        a.join(b, on="_g")
+        .filter(_jaccard_verify_cond(threshold, inter))
+        .select(
+            F.col("_g").alias(group_col), "id_a", "id_b",
+            _jaccard_value(inter).alias("jaccard"),
+        )
+    )
+    return _with_cache(out, [sh], None)
+
+
+def _jaccard_value(inter):
+    """round(|∩|/|∪|, 6) from a pair's intersection count ``inter`` and
+    its set sizes n_a/n_b. The shingle arrays are array_distinct'ed sets,
+    so |A∪B| = |A|+|B|-|A∩B| exactly — the sizes are already materialized
+    and the second per-pair set build (array_union) becomes two column
+    adds (paired A/B at sf0.1 local[32]: 10.24 s → 8.63 s median)."""
+    inter = inter.cast("double")
     union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    jac = F.round(inter / union, 6)
-    out = (
-        cand.filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.least("n_a", "n_b").cast("double")
-               >= F.lit(threshold) * F.greatest("n_a", "n_b").cast("double"))
-            & (jac >= threshold)
-        )
-        .select(
-            F.col("_g").alias(group_col), "id_a", "id_b",
-            jac.alias("jaccard"),
-        )
-    )
-    out._rs_cached = [sh]  # caller releases via dedup.release(out)
-    return out
+    return F.round(inter / union, 6)
 
 
-def _ngram_jaccard_prefix(sh: DataFrame, group_col: str,
-                          threshold: float) -> DataFrame:
-    """Prefix-filtered exact Jaccard join (the AllPairs/PPJoin family,
-    Bayardo et al. WWW'07 / Xiao et al. WWW'08 — public algorithms): under
-    ANY one total order of the token universe, J(A,B) ≥ t implies the
-    first |A| − ⌈t·|A|⌉ + 1 tokens of A (its "prefix") intersect B's
-    prefix — if all ≥ ⌈t·|A|⌉ intersection tokens sat in A's last
-    ⌈t·|A|⌉ − 1 positions, there would be too few slots. So only pairs
-    sharing a PREFIX token are candidates, and the filter is LOSSLESS:
-    the exact verify predicate (same as method="exact") runs on the
-    candidates, so the output is bit-identical.
-
-    The order used is ascending GLOBAL token frequency (ties by token):
-    prefixes then hold each doc's rarest tokens, so candidate buckets
-    stay near-singleton except for true near-dup clusters — whose pairs
-    are output anyway. That's what makes this the 100 TB scale path:
-    every stage is linear in tokens; no g² stream, no silent cap (unlike
-    minhash's probabilistic bands, this path misses NOTHING).
-
-    Plan: one token-count aggregation, one ordered-array rebuild
-    (explode → count join → sort_array rebuild), one slim (group, token)
-    candidate self-join over prefixes only, then two array re-attach
-    joins for the verify. All shuffles are O(tokens) or O(candidates)."""
-    toks = sh.select(F.explode("_sh").alias("_t")).groupBy("_t").agg(
-        F.count(F.lit(1)).alias("_cnt"))
-    ordered = (
-        sh.select("_g", "_id", "_n", F.explode("_sh").alias("_t"))
-        .join(toks, "_t")
-        .groupBy("_g", "_id", "_n")
-        .agg(F.transform(
-            F.array_sort(F.collect_list(F.struct("_cnt", "_t"))),
-            lambda s: s["_t"],
-        ).alias("_sh"))
-        .withColumn(
-            "_pref",
-            # ceil(t·n) with a downward epsilon: an upward float error on
-            # a mathematically-integral t·n would round the ceiling up,
-            # SHORTEN the prefix, and silently lose pairs — the epsilon
-            # errs toward a one-longer prefix (more candidates, still
-            # lossless), never a shorter one
-            F.slice("_sh", 1,
-                    F.col("_n")
-                    - F.ceil(F.lit(threshold) * F.col("_n") - F.lit(1e-9))
-                    + F.lit(1)),
+def _jaccard_verify_cond(threshold: float, inter):
+    """The ONE exact pair predicate, as a single conjunction ordered
+    cheap→expensive: Catalyst pushes chained filters into the join
+    condition in REVERSED order (CombineFilters prepends), so chaining
+    .filter(id<).filter(jaccard) puts the O(L) jaccard set ops FIRST and
+    evaluates them on every ordered pair — measured 40% slower at sf0.1.
+    Here id_a<id_b halves the pairs and the exact size prune (jaccard ≤
+    min/max sizes) drops unreachable ones before ``inter`` is computed."""
+    return (
+        (F.col("id_a") < F.col("id_b"))
+        & (
+            F.least("n_a", "n_b").cast("double")
+            >= F.lit(threshold) * F.greatest("n_a", "n_b").cast("double")
         )
-        .persist()
+        & (_jaccard_value(inter) >= threshold)
     )
-    pref = ordered.select(
-        "_g", "_id", "_n", F.posexplode("_pref").alias("_p", "_t"))
-    # PPJoin positional bound (Xiao et al. WWW'08 §3.2): for the MINIMAL
-    # shared token of a true pair, sitting at 0-indexed positions (pa._p,
-    # pb._p), every other shared token lies strictly after it in BOTH
-    # ordered arrays, so overlap ≤ 1 + min(n_a−p_a−1, n_b−p_b−1). J ≥ t
-    # needs overlap ≥ t/(1+t)·(n_a+n_b); rows violating that can't be the
-    # pair's first shared token. A pair survives if ANY of its shared
-    # prefix-token rows passes — the minimal-token row of a true pair
-    # always does, so the filter is lossless (pinned by
-    # test_ngram_prefix_filter_lossless). The epsilon errs toward keeping
-    # a candidate, never dropping one.
-    _overlap_floor = (F.lit(threshold / (1.0 + threshold))
-                      * (F.col("pa._n") + F.col("pb._n")).cast("double")
-                      - F.lit(1e-9))
-    cand = (
-        pref.alias("pa")
-        .join(pref.alias("pb"),
-              (F.col("pa._g") == F.col("pb._g"))
-              & (F.col("pa._t") == F.col("pb._t"))
-              & (F.col("pa._id") < F.col("pb._id"))
-              # AllPairs length filter AT CANDIDATE TIME: J ≥ t forces
-              # |smaller| ≥ t·|larger|, so size-mismatched pairs never
-              # enter the candidate set. Same predicate re-runs in the
-              # verify (harmless); here it prunes before the dedup
-              # shuffle and the two array re-attach joins — the lever
-              # that matters when a dense token universe (small-vocab
-              # corpora, CJK char shingles) makes prefixes collide.
-              & (F.least("pa._n", "pb._n").cast("double")
-                 >= F.lit(threshold)
-                 * F.greatest("pa._n", "pb._n").cast("double"))
-              & ((F.lit(1)
-                  + F.least(F.col("pa._n") - F.col("pa._p") - F.lit(1),
-                            F.col("pb._n") - F.col("pb._p") - F.lit(1))
-                  ).cast("double") >= _overlap_floor))
-        .select(F.col("pa._g").alias("_g"),
-                F.col("pa._id").alias("id_a"),
-                F.col("pb._id").alias("id_b"))
-        .dropDuplicates(["_g", "id_a", "id_b"])
-    )
-    arr_a = ordered.select(
-        "_g", F.col("_id").alias("id_a"),
-        F.col("_sh").alias("sh_a"), F.col("_n").alias("n_a"))
-    arr_b = ordered.select(
-        "_g", F.col("_id").alias("id_b"),
-        F.col("_sh").alias("sh_b"), F.col("_n").alias("n_b"))
-    out = (
-        cand.join(arr_a, ["_g", "id_a"])
-        .join(arr_b, ["_g", "id_b"])
-        .filter(_jaccard_verify_cond(threshold))
-        .select(
-            F.col("_g").alias(group_col), "id_a", "id_b",
-            _jaccard_value().alias("jaccard"),
-        )
-    )
-    out._rs_cached = [sh, ordered]  # caller releases via dedup.release(out)
-    return out
 
 
 # ------------------------------------------- exact-substring dedup (winnow)
@@ -967,9 +831,10 @@ def substring_dup_pairs(
     Scale shape mirrors minhash_pairs: explode each doc's (already
     window-sampled, ~1/window of positions) distinct fingerprints, one
     groupBy counts bucket sizes, buckets over ``max_bucket_size`` drop
-    (the k² boilerplate bomb is exact dedup's job — same hot-band policy
-    as minhash, same auditability argument), and the slim (fp, id)
-    self-join emits pairs with their shared-fingerprint count.
+    (the k² boilerplate bomb is exact dedup's job — the same hot-key guard
+    as minhash, auditable via ``dropped_band_count``; free the persisted
+    drop set with ``release()``), and the slim (fp, id) self-join emits
+    pairs with their shared-fingerprint count.
 
     The defaults target corpus-scale spans (k=50, window=16 → any shared
     run ≥ 65 chars is guaranteed detected — the char analog of Lee et
@@ -986,14 +851,9 @@ def substring_dup_pairs(
         F.col("doc_id").alias("_id"),
         F.explode(F.array_distinct("fingerprints")).alias("fp"),
     )
-    ok = (
-        ex.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("_k"))
-        .filter((F.col("_k") >= 2) & (F.col("_k") <= max_bucket_size))
-        .select("fp")
-    )
-    e2 = ex.join(ok, "fp")
-    return (
+    # singleton buckets need no filter: they cannot satisfy a._id < b._id
+    e2, hot = _drop_hot_keys(ex, "fp", max_bucket_size)
+    out = (
         e2.alias("a")
         .join(
             e2.alias("b"),
@@ -1005,6 +865,7 @@ def substring_dup_pairs(
         )
         .agg(F.count(F.lit(1)).alias("shared_fps"))
     )
+    return _with_cache(out, [], hot)
 
 
 # -------------------------------------------------- paragraph-level dedup
@@ -1139,12 +1000,15 @@ def dup_clusters(
     wrong labels are worse than a loud failure; at the default 50 rounds,
     convergence is guaranteed for any graph below ~2^25 nodes, far past
     the 10^12-doc design point). The converged round count is attached as
-    ``_rs_rounds`` for observability."""
+    ``_rs_rounds`` for observability.
+
+    Nothing is persisted: the result is the converged star forest itself
+    (each non-root's (doc, root) row plus one (root, root) row per
+    component), so ``release`` has nothing to free."""
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     # fixed point: small-star output is a stable star forest (every node
     # points at its component min). Detect via (row count, order-free
@@ -1160,12 +1024,6 @@ def dup_clusters(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    nodes = (
-        edges.select(F.col("u").alias("doc_id"))
-        .union(edges.select(F.col("v").alias("doc_id")))
-        .distinct()
-        .persist()
-    )
     cur = _small_star(edges).localCheckpoint()
     sig = probe(cur)
     rounds = 1
@@ -1180,26 +1038,20 @@ def dup_clusters(
             break
         sig = nsig
     if not converged:
-        edges.unpersist()
-        nodes.unpersist()
         raise RuntimeError(
             f"dup_clusters: not converged after {max_iter} star rounds — "
             "component structure is adversarial beyond design range"
         )
-    # converged star forest: every non-root points at its root; roots are
-    # exactly the nodes never appearing on the u side
-    out = (
-        nodes.join(
-            cur.select(F.col("u").alias("doc_id"), F.col("v").alias("_root")),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id", F.coalesce("_root", F.col("doc_id")).alias("cluster_id")
-        )
+    # converged star forest: every non-root points at its root and roots
+    # never appear on the u side, so the labels are cur's (u, v) rows plus
+    # one (root, root) row per distinct root
+    out = cur.select(
+        F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
+    ).union(
+        cur.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))
+        .distinct()
     )
-    out._rs_rounds = rounds
-    out._rs_cached = [edges, nodes]  # cur is checkpointed, GC'd on deref
+    out._rs_rounds = rounds  # cur is checkpointed, GC'd on deref
     return out
 
 
@@ -1212,28 +1064,29 @@ def embedding_near_dup_pairs(
     group_col: str | None = None,
     threshold: float = 0.95,
     allow_full_scan: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """Cosine ≥ τ pairs, blocked by ``group_col`` when given. Without a
-    group this is an O(n²) full self-join — a scale foot-gun — so the call
-    raises unless the caller explicitly passes ``allow_full_scan=True``
-    (bounded audits only; at scale block by an LSH/IVF bucket first, see
-    ``embedding_near_dup_lsh`` / operators.similarity).
+    """Cosine ≥ τ pairs (id_a < id_b), blocked by ``group_col``.
 
-    Grouped + ``use_arrow`` (default, r8): candidate pairs come from one
-    BLAS matmul per group (C = V·Vᵀ over the group's vectors, inside
-    applyInPandas) with a 1e-4 slack under the threshold, and the exact
-    cosine — the SAME Catalyst expression the join path uses, so values
-    and the oracle hash cannot move — is recomputed only for the
-    candidates. The g² pair stream thus stays in-core at memory
+    Grouped: candidate pairs come from one BLAS matmul per group (C = V·Vᵀ
+    over the group's vectors, inside applyInPandas) with a 1e-4 slack
+    under the threshold, and the exact cosine — a Catalyst expression, so
+    values and the oracle hash are engine-defined — is recomputed only for
+    the candidates. The g² pair stream thus stays in-core at memory
     bandwidth instead of streaming through a per-pair aggregate(zip_with)
     join (sf1.0, 20k vecs in 10 groups: 124.5 s → 1.1 s, same rows).
     Slack soundness: float64 matmul and the sequential fold differ by
     ≤ ~1e-13 relative, and round-half-up at 6 dp lifts a value by at
     most 5e-7 — both orders of magnitude under 1e-4; non-finite cosines
     (zero-norm vectors) are kept as candidates so the exact expression
-    decides them identically either way."""
-    if group_col is None and not allow_full_scan:
+    decides them. Groups must be bounded (a group's g·d matrix sits in
+    one task); for unbounded groups use ``embedding_near_dup_lsh``.
+
+    Without a group (None or empty) this is an O(n²) crossJoin — a scale
+    foot-gun — so the call raises unless the caller explicitly passes
+    ``allow_full_scan=True`` (bounded audits only; at scale block by an
+    LSH/IVF bucket first, see ``embedding_near_dup_lsh`` /
+    operators.similarity)."""
+    if not group_col and not allow_full_scan:
         raise ValueError(
             "embedding_near_dup_pairs without group_col is an O(n²) "
             "crossJoin; pass allow_full_scan=True for bounded inputs or "
@@ -1243,40 +1096,27 @@ def embedding_near_dup_pairs(
     if group_col:
         cols.append(F.col(group_col).alias("_g"))
     # norms are per-VECTOR, so compute them once on the n input rows, not
-    # per ordered pair inside the join (g× redundant per vector in a
-    # g-row group); the pair expression keeps the identical FP sequence
-    # (sqrt(Σx²)·sqrt(Σy²)), so values — and the oracle hash — don't move
+    # per ordered pair (g× redundant per vector in a g-row group); the
+    # pair expression keeps the FP sequence sqrt(Σx²)·sqrt(Σy²)
     base = df.select(*cols).withColumn("_n", norm(F.col("_v")))
-    pair_cos = F.round(
-        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
-    if group_col and use_arrow:
-        base = base.persist()  # 3 consumers: candidates + two re-attaches
-        cand = _emb_near_dup_candidates(base, threshold)
-        a = base.select(F.col("_id").alias("id_a"),
-                        F.col("_v").alias("va"), F.col("_n").alias("na"))
-        b = base.select(F.col("_id").alias("id_b"),
-                        F.col("_v").alias("vb"), F.col("_n").alias("nb"))
-        out = (
-            cand.join(a, "id_a").join(b, "id_b")
-            .withColumn("cos", pair_cos)
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos")
-        )
-        out._rs_cached = [base]  # caller releases via dedup.release(out)
-        return out
-    on = ["_g"] if group_col else None
-    g = ["_g"] if group_col else []
-    a = base.select(*g, F.col("_id").alias("id_a"),
+    # grouped, base has 3 consumers: candidates + two re-attaches
+    cached = [base.persist()] if group_col else []
+    a = base.select(F.col("_id").alias("id_a"),
                     F.col("_v").alias("va"), F.col("_n").alias("na"))
-    b = base.select(*g, F.col("_id").alias("id_b"),
+    b = base.select(F.col("_id").alias("id_b"),
                     F.col("_v").alias("vb"), F.col("_n").alias("nb"))
-    joined = a.join(b, on=on) if on else a.crossJoin(b)
-    return (
-        joined.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", pair_cos)
+    if group_col:
+        pairs = (_emb_near_dup_candidates(base, threshold)
+                 .join(a, "id_a").join(b, "id_b"))
+    else:
+        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    out = (
+        pairs.withColumn("cos", F.round(
+            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
+    return _with_cache(out, cached, None)
 
 
 def _emb_near_dup_candidates(base: DataFrame, threshold: float) -> DataFrame:

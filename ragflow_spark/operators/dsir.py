@@ -103,27 +103,20 @@ def doc_bucket_counts(
     id_col: str,
     text_col: str,
     num_buckets: int = DEFAULT_BUCKETS,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-(doc, bucket) gram occurrence counts — each gram is hashed
     exactly ONCE; both the corpus model (re-aggregate by bucket) and the
     per-doc weights (join λ, weighted sum) derive from this frame.
 
-    ``use_arrow`` (default, r8) counts each document's buckets INSIDE
-    one Arrow pass, so the frame is produced map-side with ZERO
-    shuffle — the expression path's ``explode → groupBy(id, bucket)``
-    shuffled one row per gram occurrence (5M rows at sf1.0) with almost
-    no map-side reduction, the single biggest exchange in doc_dsir.
-    Same counts by construction: ``_java_ws_tokens`` is the pinned JVM
-    split twin (minhash/simhash Arrow precedent) and hashlib.md5 ==
-    F.md5 on utf-8 bytes; the expression path stays the oracle-checked
-    reference."""
-    if not use_arrow:
-        return (
-            gram_buckets(df, id_col, text_col, num_buckets)
-            .groupBy(id_col, "bucket")
-            .agg(F.count("*").alias("n"))
-        )
+    Each document's buckets are counted INSIDE one Arrow pass, so the
+    frame is produced map-side with ZERO shuffle — the expression form
+    ``gram_buckets(...).groupBy(id, bucket).count()`` shuffles one row
+    per gram occurrence (5M rows at sf1.0) with almost no map-side
+    reduction, which was the single biggest exchange in doc_dsir. Same
+    counts by construction: ``_java_ws_tokens`` is the pinned JVM split
+    twin (minhash/simhash Arrow precedent) and hashlib.md5 == F.md5 on
+    utf-8 bytes; ``gram_buckets`` stays the oracle-checked expression
+    reference, pinned equal by test."""
     import hashlib
 
     from ragflow_spark.operators.dedup import _java_ws_tokens

@@ -33,8 +33,3 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             df.createOrReplaceTempView(name)
             out[name] = df
     return out
-
-
-def load_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Load a pages corpus written by ``ragflow_spark.sources.pages``."""
-    return spark.read.parquet(path)

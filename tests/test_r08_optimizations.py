@@ -2,7 +2,7 @@
 row/bit-identical to the shape it replaced.
 
 - spread_small_scan: adaptive (spreads a 1-split scan, no-op at scale)
-- dsir.doc_bucket_counts: Arrow featurizer == expression featurizer
+- dsir.doc_bucket_counts: Arrow featurizer == gram_buckets expression
 - db_postprocess._convex_hull: point-reduced chain == full monotone chain
 - db_postprocess.fill_poly_mask: vectorized scanline == reference loops
 """
@@ -53,8 +53,9 @@ def test_dsir_doc_bucket_counts_arrow_matches_expression(spark):
         (7, None),                    # null text
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    a = dsir.doc_bucket_counts(d, "doc_id", "text", 64, use_arrow=False)
-    b = dsir.doc_bucket_counts(d, "doc_id", "text", 64, use_arrow=True)
+    a = dsir.gram_buckets(d, "doc_id", "text", 64).groupBy(
+        "doc_id", "bucket").count()
+    b = dsir.doc_bucket_counts(d, "doc_id", "text", 64)
     ka = sorted(map(tuple, a.collect()))
     kb = sorted(map(tuple, b.collect()))
     assert ka == kb

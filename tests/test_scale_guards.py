@@ -100,11 +100,10 @@ def test_ngram_pairs_id_only_join_same_results(spark):
     assert got == {("g1", 1, 2, 0.6)}
 
 
-def test_ngram_prefix_filter_lossless(spark):
-    """The prefix-filtered path (default) must return the EXACT pair set
-    of the O(g²) baseline for any threshold/shingle config — the filter
-    is provably lossless (AllPairs/PPJoin prefix theorem), and this pins
-    the implementation to the proof across near-dup chains, an exact-dup
+def test_ngram_matmul_matches_exact_join(spark):
+    """The matmul candidate stage is lossless: for any threshold/shingle
+    config the operator returns the EXACT rows (and jaccard doubles) of
+    the O(g²) self-join reference, across near-dup chains, an exact-dup
     cluster, empty docs, and cross-group isolation."""
     import random
 
@@ -122,27 +121,47 @@ def test_ngram_prefix_filter_lossless(spark):
         else:
             text = " ".join(rng.choices(words, k=rng.randint(4, 30)))
         rows.append((i, f"g{i % 3}", text))
+    # pairs whose unigram Jaccard is exactly 3/6 and 4/5: on-threshold
+    # pairs the candidate slack must keep
+    rows += [(300, "edge", "e1 e2 e3 e4"), (301, "edge", "e1 e2 e3 e5 e6"),
+             (302, "edge", "f1 f2 f3 f4 f5"), (303, "edge", "f1 f2 f3 f4")]
     df = spark.createDataFrame(rows, "doc_id long, src string, text string")
     for threshold, n in ((0.5, 1), (0.3, 2), (0.8, 1)):
-        ex = dedup.ngram_jaccard_pairs(df, "doc_id", "text", "src",
-                                       threshold=threshold, shingle_n=n,
-                                       method="exact")
-        pf = dedup.ngram_jaccard_pairs(df, "doc_id", "text", "src",
-                                       threshold=threshold, shingle_n=n,
-                                       method="prefix")
+        ex = dedup._ngram_jaccard_exact(df, "doc_id", "text", "src",
+                                        threshold=threshold, shingle_n=n)
         mm = dedup.ngram_jaccard_pairs(df, "doc_id", "text", "src",
-                                       threshold=threshold, shingle_n=n,
-                                       method="matmul")
+                                       threshold=threshold, shingle_n=n)
         e = sorted(map(tuple, ex.collect()))
-        p = sorted(map(tuple, pf.collect()))
         m = sorted(map(tuple, mm.collect()))
         dedup.release(ex)
-        dedup.release(pf)
         dedup.release(mm)
-        assert e == p and e, (threshold, n, len(e), len(p))
-        # r8 matmul candidates + exact-int Catalyst verify: same rows AND
-        # same jaccard doubles as the join-based exact baseline
-        assert e == m, (threshold, n, len(e), len(m))
+        assert e == m and e, (threshold, n, len(e), len(m))
+
+
+def test_ngram_group_vocab_limit_raises(spark, monkeypatch):
+    """Float32 matmul counts are exact only below _MAX_GROUP_VOCAB
+    distinct shingles per group; at the limit the operator raises a
+    ValueError naming the group (an explicit check, not an assert that
+    python -O strips)."""
+    df = spark.createDataFrame(
+        [(1, "big", "a b c"), (2, "big", "c d e"), (3, "small", "a b")],
+        "doc_id long, src string, text string",
+    )
+
+    def run():
+        out = dedup.ngram_jaccard_pairs(df, "doc_id", "text", "src",
+                                        threshold=0.2, shingle_n=1)
+        try:
+            return {(r.src, r.id_a, r.id_b) for r in out.collect()}
+        finally:
+            dedup.release(out)
+
+    # group 'big' has 5 distinct shingles: a limit of 6 admits it
+    monkeypatch.setattr(dedup, "_MAX_GROUP_VOCAB", 6)
+    assert run() == {("big", 1, 2)}
+    monkeypatch.setattr(dedup, "_MAX_GROUP_VOCAB", 5)
+    with pytest.raises(Exception, match=r"ValueError.*group 'big' has 5"):
+        run()
 
 
 def test_dup_clusters_chain_and_islands(spark):
@@ -153,6 +172,35 @@ def test_dup_clusters_chain_and_islands(spark):
     got = {r.doc_id: r.cluster_id for r in out.collect()}
     dedup.release(out)
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 5: 5, 7: 5}
+
+    # seeded random multigraph: duplicate pairs in both orientations and
+    # a self-loop, against a Python union-find
+    import random
+
+    rng = random.Random(5)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(220)]
+    edges += [(b, a) for a, b in edges[:40]] + edges[40:60]
+    a0 = next(a for a, b in edges if a != b)
+    edges.append((a0, a0))
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in list(parent)}
+    out = dedup.dup_clusters(
+        spark.createDataFrame(edges, "id_a long, id_b long"))
+    rows = [(r.doc_id, r.cluster_id) for r in out.collect()]
+    assert len(rows) == len({d for d, _ in rows}), "one row per node"
+    assert dict(rows) == want
 
 
 # ------------------------------------------- manifest modulus guard
@@ -265,21 +313,23 @@ def test_embedding_near_dup_full_scan_requires_opt_in(spark):
     )
     with pytest.raises(ValueError, match="allow_full_scan"):
         dedup.embedding_near_dup_pairs(df, "vec_id", "embedding")
+    with pytest.raises(ValueError, match="allow_full_scan"):
+        dedup.embedding_near_dup_pairs(df, "vec_id", "embedding", "")
     out = dedup.embedding_near_dup_pairs(
         df, "vec_id", "embedding", allow_full_scan=True
     )
     assert out.count() == 1
 
 
-def test_embedding_near_dup_arrow_matches_join_path(spark):
-    """r8 matmul-candidate path vs the per-pair join expression path:
-    identical (id_a, id_b, cos) rows — the candidates come from BLAS but
-    every emitted cosine is the same Catalyst expression, so even the
-    float doubles must agree bit-for-bit. Covers near-threshold pairs,
-    negative cosines and anti-parallel vectors. (Zero-norm vectors raise
-    ANSI DIVIDE_BY_ZERO on BOTH paths — the arrow path keeps non-finite
-    numpy cosines as candidates precisely so the exact expression fires
-    for them the same way it always did.)"""
+def test_embedding_near_dup_grouped_matches_full_scan(spark):
+    """The grouped matmul-candidate path vs the ``allow_full_scan``
+    crossJoin restricted to same-group pairs: identical (id_a, id_b, cos)
+    rows — the candidates come from BLAS but every emitted cosine is the
+    same Catalyst expression, so even the float doubles must agree
+    bit-for-bit. Covers near-threshold pairs, negative cosines and
+    anti-parallel vectors. (Zero-norm vectors raise ANSI DIVIDE_BY_ZERO
+    on BOTH paths — the grouped path keeps non-finite numpy cosines as
+    candidates precisely so the exact expression fires for them.)"""
     import math
     import random
 
@@ -297,13 +347,15 @@ def test_embedding_near_dup_arrow_matches_join_path(spark):
         rows.append((i, g, [float(x) for x in vec]))
     df = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<double>")
+    group = {r[0]: r[1] for r in rows}
     for t in (0.95, 0.35, -0.5):
         ar = dedup.embedding_near_dup_pairs(
-            df, "vec_id", "embedding", "label", threshold=t, use_arrow=True)
-        jn = dedup.embedding_near_dup_pairs(
-            df, "vec_id", "embedding", "label", threshold=t, use_arrow=False)
+            df, "vec_id", "embedding", "label", threshold=t)
+        fs = dedup.embedding_near_dup_pairs(
+            df, "vec_id", "embedding", threshold=t, allow_full_scan=True)
         a = sorted(map(tuple, ar.collect()))
-        j = sorted(map(tuple, jn.collect()))
+        j = sorted(r for r in map(tuple, fs.collect())
+                   if group[r[0]] == group[r[1]])
         dedup.release(ar)
         assert a == j and a, (t, len(a), len(j))
 
@@ -541,15 +593,15 @@ def test_substring_dup_pairs_guarantee_and_guard(spark):
     rows += [(100 + i, "identical boilerplate content here " * 4)
              for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {
-        (r.id_a, r.id_b): r.shared_fps
-        for r in dedup.substring_dup_pairs(
-            df, "doc_id", "text", k=8, window=4, max_bucket_size=20
-        ).collect()
-    }
+    out = dedup.substring_dup_pairs(
+        df, "doc_id", "text", k=8, window=4, max_bucket_size=20
+    )
+    pairs = {(r.id_a, r.id_b): r.shared_fps for r in out.collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] >= 1
     assert all(a < 100 and b < 100 for a, b in pairs), pairs
     assert not any(3 in p for p in pairs)
+    assert dedup.dropped_band_count(out) > 0
+    dedup.release(out)
 
 
 def test_charlm_scoring_plan_is_zero_shuffle(spark):
