@@ -1504,9 +1504,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         df = spark.createDataFrame(
             rows, "media_id string, pixels binary, width int, height int"
         ).repartition(4)
-        out = detect_text_regions(
-            df, backend="fake", batch_size=16, box_thresh=0.5
-        )
+        out = detect_text_regions(df, backend="fake")
         return out.select(
             "media_id",
             "n_boxes",
@@ -1531,7 +1529,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         df = spark.createDataFrame(
             rows, "line_id string, pixels binary, width int, height int"
         ).repartition(3)
-        return recognize_text_lines(df, backend="fake", batch_size=16)
+        return recognize_text_lines(df, backend="fake")
 
     def media_ocr_lines(spark, sf):
         """The composed OCR loop (ocr.py:581-630) distributed: det boxes
@@ -1548,7 +1546,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         df = spark.createDataFrame(
             rows, "media_id string, pixels binary, width int, height int"
         ).repartition(3)
-        out = ocr_images(df, backend="fake", batch_size=16, box_thresh=0.5)
+        out = ocr_images(df, backend="fake")
         return out.select(
             "media_id", "line_no", "text", "conf",
             F.md5(F.to_json(F.transform(

@@ -294,9 +294,13 @@ def scanned_pdf_pages(blob: bytes, cfg: dict | None = None
     ``_layouts_rec``). Returns None when no page has a decodable image
     (nothing to OCR — the caller keeps its empty text-layer result).
 
+    Each page raster goes through ``operators.detect.ocr_image_boxes``,
+    the same det → crop → rec loop the distributed ``ocr_images`` runs.
     ``cfg["ocr_backend"]`` selects the detector/recognizer backend; the
     default "none" raises NotImplementedError (honest: this sandbox has
-    no ONNX runtime/weights; "fake" exercises the full plumbing)."""
+    no ONNX runtime/weights; "fake" exercises the full plumbing), and
+    "onnx" raises ValueError unless ``cfg["det_model_path"]`` and
+    ``cfg["rec_model_path"]`` are set."""
     cfg = cfg or {}
     import numpy as np
 

@@ -855,9 +855,11 @@ def chunk_picture(blob: bytes, fmt: str, lang: str = "English",
     Pixels come from the real BMP codec (core/bmp.py) for .bmp bytes, or
     raw (h·w·3) RGB via ``cfg["width"]/cfg["height"]`` for pre-decoded
     input (the multimodal contract — compressed codecs stay stubbed).
+    The OCR is ``operators.detect.ocr_image_boxes`` (quads dropped).
     ``cfg["ocr_backend"]`` selects the detector/recognizer backend
-    ("none" honest default / "fake" deterministic / "onnx" + model
-    paths)."""
+    ("none" honest default / "fake" deterministic / "onnx", which needs
+    ``cfg["det_model_path"]`` and ``cfg["rec_model_path"]`` — missing
+    ones raise ValueError)."""
     import numpy as np
 
     cfg = dict(cfg or {})
@@ -876,15 +878,15 @@ def chunk_picture(blob: bytes, fmt: str, lang: str = "English",
             "pre-decoded raw supported; compressed codecs are stubbed "
             "per the multimodal contract)"
         )
-    from ragflow_spark.operators.detect import ocr_image_array
+    from ragflow_spark.operators.detect import ocr_image_boxes
 
-    lines = ocr_image_array(
+    lines = ocr_image_boxes(
         im,
         backend=cfg.get("ocr_backend", "none"),
         det_model_path=cfg.get("det_model_path"),
         rec_model_path=cfg.get("rec_model_path"),
     )
-    txt = "\n".join(t for t, _conf in lines if t)
+    txt = "\n".join(t for _quad, t, _conf in lines if t)
     eng = lang.lower() == "english"
     if (eng and len(txt.split(" ")) > 32) or len(txt) > 32:
         return _finish([txt])

@@ -28,6 +28,9 @@ import numpy as np
 
 IMAGENET_MEAN = [0.485, 0.456, 0.406]
 IMAGENET_STD = [0.229, 0.224, 0.225]
+# the reference TextDetector's DetResizeForTest config (pre_process_list,
+# deepdoc/vision/ocr.py:355-391: limit_side_len 960, limit_type "max")
+DET_LIMIT_SIDE_LEN = 960
 
 
 def standardize_image(im: np.ndarray, mean, std, is_scale: bool = True,
@@ -154,13 +157,11 @@ def detector_input(im: np.ndarray, target_size=800,
     return to_chw(padded), im_info
 
 
-def det_resize_for_test(im: np.ndarray, limit_side_len: int = 960,
-                        limit_type: str = "max"
-                        ) -> tuple[np.ndarray, tuple[int, int]]:
+def det_resize_for_test(im: np.ndarray) -> tuple[np.ndarray, tuple[int, int]]:
     """DetResizeForTest port (deepdoc/vision/operators.py:306-410,
-    resize_image_type0 branch): the TEXT detector's resize — no
-    upscaling under ``limit_type='max'`` (ratio 1.0 unless a side
-    exceeds the cap), then EACH side independently rounded to the
+    resize_image_type0 branch, ``limit_type='max'``): the TEXT detector's
+    resize — no upscaling (ratio 1.0 unless a side exceeds
+    ``DET_LIMIT_SIDE_LEN``), then EACH side independently rounded to the
     nearest /32 multiple via resize (not zero-pad), floor 32. Images
     with h+w < 64 are zero-padded to at least 32×32 first, exactly like
     the reference's image_padding. Returns (resized image, (out_h,
@@ -172,16 +173,8 @@ def det_resize_for_test(im: np.ndarray, limit_side_len: int = 960,
         pad[:h, :w] = im
         im = pad
         h, w = im.shape[:2]
-    if limit_type == "max":
-        ratio = float(limit_side_len) / max(h, w) \
-            if max(h, w) > limit_side_len else 1.0
-    elif limit_type == "min":
-        ratio = float(limit_side_len) / min(h, w) \
-            if min(h, w) < limit_side_len else 1.0
-    elif limit_type == "resize_long":
-        ratio = float(limit_side_len) / max(h, w)
-    else:
-        raise ValueError(f"unsupported limit_type {limit_type!r}")
+    ratio = float(DET_LIMIT_SIDE_LEN) / max(h, w) \
+        if max(h, w) > DET_LIMIT_SIDE_LEN else 1.0
     resize_h = int(h * ratio)
     resize_w = int(w * ratio)
     # python round() = banker's rounding, as the reference uses
@@ -191,16 +184,14 @@ def det_resize_for_test(im: np.ndarray, limit_side_len: int = 960,
     return out, (resize_h, resize_w)
 
 
-def text_det_input(im: np.ndarray, limit_side_len: int = 960,
-                   limit_type: str = "max"
-                   ) -> tuple[np.ndarray, tuple[int, int]]:
+def text_det_input(im: np.ndarray) -> tuple[np.ndarray, tuple[int, int]]:
     """The TEXT detector's full preprocessing chain (TextDetector
     pre_process_list, deepdoc/vision/ocr.py:355-391): DetResizeForTest →
     NormalizeImage (1/255 + ImageNet mean/std, HWC) → ToCHW. Unlike the
     layout chain (:func:`detector_input`) there is NO PadStride — both
     sides are already /32 multiples — and no upscaling of small pages.
     Returns (CHW float32 tensor, (map_h, map_w))."""
-    resized, hw = det_resize_for_test(im, limit_side_len, limit_type)
+    resized, hw = det_resize_for_test(im)
     standardized = standardize_image(resized, IMAGENET_MEAN, IMAGENET_STD)
     return to_chw(standardized), hw
 

@@ -7,12 +7,21 @@ a PER-PYTHON-WORKER session singleton feeding Arrow-batched tensors
 (SURVEY §4: batch 16, ``intra_op_num_threads`` kept small so ORT threads
 don't oversubscribe against ``spark.task.cpus``).
 
-This module is that plumbing, end-to-end real EXCEPT the weights:
+This module is that plumbing, end-to-end real EXCEPT the weights. One
+worker-side core serves every entry point: ``_head`` builds a det or rec
+head, ``_decode_rows`` turns an Arrow batch into images, and
+``_ocr_lines`` is the one det → ``sorted_boxes`` → perspective crop →
+rec → ``DROP_SCORE`` loop. ``ocr_images`` runs it per Arrow batch,
+``ocr_image_boxes`` per document (the picture template and the
+scanned-PDF fallback). The reference's OCR config is fixed as module
+constants (``BATCH_SIZE`` … ``INTRA_OP_THREADS``); only the backend, the
+model paths and the rec charset are settings.
 
-- ``backend="onnx"``  loads ``model_path`` in an onnxruntime session —
-  the production path; raises cleanly when onnxruntime is absent (it is
-  not installed in this sandbox, and the reference repo does not vendor
-  the weights either — it downloads them at runtime).
+- ``backend="onnx"``  loads the model file in an onnxruntime session —
+  the production path; raises ``ValueError`` when a model path is
+  missing and ImportError when onnxruntime is absent (it is not
+  installed in this sandbox, and the reference repo does not vendor the
+  weights either — it downloads them at runtime).
 - ``backend="fake"``  a deterministic stand-in session with the SAME
   ``run(["maps"], {"x": batch})`` contract: the probability map is the
   de-standardized channel mean of the input tensor, so bright painted
@@ -39,6 +48,19 @@ from pyspark.sql import DataFrame
 DET_SCHEMA = (
     "media_id string, n_boxes int, boxes array<array<double>>"
 )
+
+# The reference OCR config, which no caller varies: TextDetector's DB
+# postprocess thresholds (deepdoc/vision/ocr.py:376-377: thresh 0.3,
+# box_thresh 0.5, unclip_ratio 1.5; its 960/max DetResizeForTest cap is
+# vision_prep.DET_LIMIT_SIDE_LEN), OCR.__call__'s drop_score 0.5, and
+# the SURVEY §4 batching shape (mini-batches of 16, a 2-thread ORT
+# intra-op pool so sessions don't oversubscribe spark.task.cpus).
+BATCH_SIZE = 16
+DET_THRESH = 0.3
+DET_BOX_THRESH = 0.5
+DET_UNCLIP_RATIO = 1.5
+DROP_SCORE = 0.5
+INTRA_OP_THREADS = 2
 
 # per-python-worker-process session singleton (the SURVEY §4 model-load
 # pattern: one session per executor process, reused across tasks when
@@ -72,8 +94,8 @@ class _FakeDetSession:
         return [maps.astype(np.float32)]
 
 
-def _session(backend: str, model_path: str | None, intra_op_threads: int):
-    """onnx sessions only — fake heads are constructed at the call site
+def _session(backend: str, model_path: str):
+    """onnx sessions only — fake heads are constructed by ``_head``
     (they are role-specific: a det map head handed to a rec consumer
     would decode garbage with no error, so the cache never holds them)."""
     if backend == "none":
@@ -93,7 +115,7 @@ def _session(backend: str, model_path: str | None, intra_op_threads: int):
         opts = ort.SessionOptions()
         # don't oversubscribe: spark.task.cpus cores are already
         # claimed by the task; ORT gets a small fixed intra-op pool
-        opts.intra_op_num_threads = intra_op_threads
+        opts.intra_op_num_threads = INTRA_OP_THREADS
         sess = ort.InferenceSession(
             model_path, sess_options=opts,
             providers=["CPUExecutionProvider"],
@@ -107,6 +129,63 @@ def _session(backend: str, model_path: str | None, intra_op_threads: int):
             _SESS_CACHE.pop(next(iter(_SESS_CACHE)))
         _SESS_CACHE[key] = sess
     return sess
+
+
+def _head(role: str, backend: str, model_path: str | None,
+          characters: list[str] | None = None):
+    """One ``role`` ("det" or "rec") head: (session, postprocess), where
+    the postprocess is the DB box extractor for det and the CTC decoder
+    over ``characters`` (default ``DEFAULT_CHARSET``) for rec. Fake
+    sessions are built fresh per call; onnx ones come from ``_session``'s
+    per-worker cache."""
+    if role == "det":
+        from ragflow_spark.core.db_postprocess import DBPostProcess
+
+        post = DBPostProcess(thresh=DET_THRESH, box_thresh=DET_BOX_THRESH,
+                             unclip_ratio=DET_UNCLIP_RATIO,
+                             score_mode="fast")
+        if backend == "fake":
+            return _FakeDetSession(), post
+    else:
+        from ragflow_spark.core.ocr_decode import (
+            DEFAULT_CHARSET,
+            CTCLabelDecode,
+        )
+
+        chars = list(characters) if characters is not None else list(
+            DEFAULT_CHARSET)
+        post = CTCLabelDecode(characters=chars)
+        if backend == "fake":
+            return _FakeRecSession(num_classes=len(chars) + 1), post
+    return _session(backend, model_path), post
+
+
+def _require_paths(backend: str, **paths) -> None:
+    """backend='onnx' loads every model it is given a path for: name the
+    missing path arguments up front, before any session (or onnxruntime)
+    loads, instead of failing deep inside ``os.stat(None)``."""
+    missing = [name for name, path in paths.items() if path is None]
+    if backend == "onnx" and missing:
+        raise ValueError(
+            f"backend='onnx' needs {' and '.join(missing)}: got None")
+
+
+def _decode_rows(pdf, id_col: str):
+    """Arrow batch → (ids, imgs, bad_ids): the well-formed rows' ids and
+    ``pixels`` as HxWx3 uint8 views, and the ids of rows whose bytes
+    don't match ``width``×``height``×3 (each operator emits its own
+    malformed-row output for those)."""
+    import numpy as np
+
+    ids, imgs, bad_ids = [], [], []
+    for r in pdf.itertuples():
+        h, w, raw = int(r.height), int(r.width), r.pixels
+        if h <= 0 or w <= 0 or raw is None or len(raw) != h * w * 3:
+            bad_ids.append(getattr(r, id_col))
+            continue
+        ids.append(getattr(r, id_col))
+        imgs.append(np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3))
+    return ids, imgs, bad_ids
 
 
 def synth_image_rows(n: int, seed: int = 7):
@@ -140,14 +219,14 @@ def synth_image_rows(n: int, seed: int = 7):
     return out
 
 
-def _det_boxes(sess, post, imgs, batch_size: int,
-               limit_side_len: int = 960, limit_type: str = "max"):
-    """Worker-side det core shared by detect_text_regions and ocr_images:
-    list of HxWx3 uint8 images → list of (n_i, 4, 2) float box arrays in
-    source pixels. Preprocessing is the reference TextDetector's
-    DetResizeForTest chain (max-side cap 960, each side resized to a /32
-    multiple, NO upscaling — deepdoc/vision/ocr.py:355-391), not the
-    layout detector's LinearResize, so with real DB weights the input
+def _det_boxes(det, imgs):
+    """Worker-side det core shared by detect_text_regions and _ocr_lines:
+    ``det`` head + list of HxWx3 uint8 images → list of (n_i, 4, 2)
+    float box arrays in source pixels. Preprocessing is the reference
+    TextDetector's DetResizeForTest chain (max-side cap 960, each side
+    resized to a /32 multiple, NO upscaling —
+    deepdoc/vision/ocr.py:355-391), not the layout detector's
+    LinearResize, so with real DB weights the input
     tensors match the reference. One session.run per mini-batch padded to
     the group max (the reference runs det one image at a time; batching
     is our throughput concession — the zero-pad region is cropped off the
@@ -158,6 +237,7 @@ def _det_boxes(sess, post, imgs, batch_size: int,
 
     from ragflow_spark.core.vision_prep import text_det_input
 
+    sess, post = det
     results: list = [None] * len(imgs)
     group: list = []
 
@@ -180,30 +260,30 @@ def _det_boxes(sess, post, imgs, batch_size: int,
 
     for idx, im in enumerate(imgs):
         h, w = im.shape[:2]
-        tensor, (rs_h, rs_w) = text_det_input(
-            im, limit_side_len=limit_side_len, limit_type=limit_type)
+        tensor, (rs_h, rs_w) = text_det_input(im)
         group.append((idx, tensor, (h, w), (rs_h, rs_w)))
-        if len(group) >= batch_size:
+        if len(group) >= BATCH_SIZE:
             flush()
     flush()
     return results
 
 
-def _rec_texts(sess, decoder, imgs, batch_size: int):
+def _rec_texts(rec, imgs):
     """Worker-side rec core shared by recognize_text_lines and
-    ocr_images: list of line images → list of (text, conf) in input
-    order, with the reference's aspect-ratio-sorted mini-batches and
-    per-batch max_wh_ratio sizing (ocr.py:307-352)."""
+    _ocr_lines: ``rec`` head + list of line images → list of (text,
+    conf) in input order, with the reference's aspect-ratio-sorted
+    mini-batches and per-batch max_wh_ratio sizing (ocr.py:307-352)."""
     import numpy as np
 
     from ragflow_spark.core.vision_prep import rec_resize_norm
 
+    sess, decoder = rec
     texts: list = [("", 0.0)] * len(imgs)
     if not imgs:
         return texts
     order = np.argsort([im.shape[1] / im.shape[0] for im in imgs])
-    for beg in range(0, len(imgs), batch_size):
-        chunk = order[beg:beg + batch_size]
+    for beg in range(0, len(imgs), BATCH_SIZE):
+        chunk = order[beg:beg + BATCH_SIZE]
         max_wh = max(
             [320 / 48.0]
             + [imgs[i].shape[1] / imgs[i].shape[0] for i in chunk]
@@ -215,71 +295,76 @@ def _rec_texts(sess, decoder, imgs, batch_size: int):
     return texts
 
 
+def _ocr_lines(heads, imgs):
+    """The reference's OCR loop (deepdoc/vision/ocr.py:581-630
+    ``OCR.__call__``) over a list of HxWx3 uint8 images with ``heads`` =
+    (det head, rec head): det boxes → ``sorted_boxes`` reading order →
+    ``get_rotate_crop_image`` perspective rectification → rec over the
+    crops of ALL images pooled into common mini-batches (small images
+    don't run underfull batches) → ``conf >= DROP_SCORE`` filter.
+    Returns, per image, the kept [(quad (4,2) ndarray in image pixels,
+    text, conf), …] in reading order."""
+    from ragflow_spark.core.ocr_geom import (
+        get_rotate_crop_image,
+        sorted_boxes,
+    )
+
+    det, rec = heads
+    crops, owners = [], []
+    for i, boxes in enumerate(_det_boxes(det, imgs)):
+        for b in sorted_boxes(boxes) if len(boxes) else []:
+            try:
+                crops.append(get_rotate_crop_image(imgs[i], b.copy()))
+            except Exception:
+                # degenerate quad (coords collapsed by rounding →
+                # singular homography): skip the box, keep the task —
+                # cv2 degrades instead of raising here
+                continue
+            owners.append((i, b))
+    lines: list[list] = [[] for _ in imgs]
+    for (i, b), (txt, conf) in zip(owners, _rec_texts(rec, crops)):
+        if conf >= DROP_SCORE:
+            lines[i].append((b, txt, conf))
+    return lines
+
+
 def detect_text_regions(
     df: DataFrame,
-    id_col: str = "media_id",
-    pixels_col: str = "pixels",
-    width_col: str = "width",
-    height_col: str = "height",
     backend: str = "none",
     model_path: str | None = None,
-    batch_size: int = 16,
-    limit_side_len: int = 960,
-    limit_type: str = "max",
-    thresh: float = 0.3,
-    box_thresh: float = 0.5,
-    unclip_ratio: float = 1.5,
-    intra_op_threads: int = 2,
 ) -> DataFrame:
-    """Image rows → det boxes, distributed: preprocess each image through
-    the reference TextDetector's ``text_det_input`` chain
-    (DetResizeForTest 960/max — no upscaling, /32 per-side resize), assemble mini-batches of
-    ``batch_size`` padded to the group max (the det forward runs ONE
+    """Image rows (media_id, pixels, width, height) → det boxes,
+    distributed: preprocess each image through the reference
+    TextDetector's ``text_det_input`` chain (DetResizeForTest 960/max —
+    no upscaling, /32 per-side resize), assemble mini-batches of
+    ``BATCH_SIZE`` padded to the group max (the det forward runs ONE
     ``session.run`` per mini-batch, not per row), crop each image's map
     back to its unpadded resize region, and run the ported DBPostProcess
     to boxes in SOURCE pixel coordinates.
 
     Returns (media_id, n_boxes, boxes) where each box is
-    [x0,y0, x1,y1, x2,y2, x3,y3] clockwise from top-left.
+    [x0,y0, x1,y1, x2,y2, x3,y3] clockwise from top-left; malformed rows
+    come first in each batch, with n_boxes = -1 and no boxes.
     """
 
+    _require_paths(backend, model_path=model_path)
+
     def run(batches):
-        import numpy as np
         import pandas as pd
 
-        from ragflow_spark.core.db_postprocess import DBPostProcess
-
-        sess = _FakeDetSession() if backend == "fake" \
-            else _session(backend, model_path, intra_op_threads)
-        post = DBPostProcess(thresh=thresh, box_thresh=box_thresh,
-                             unclip_ratio=unclip_ratio, score_mode="fast")
-
+        det = _head("det", backend, model_path)
         for pdf in batches:
-            out = {"media_id": [], "n_boxes": [], "boxes": []}
-            ids, imgs = [], []
-            for r in pdf.itertuples():
-                h, w = int(getattr(r, height_col)), int(getattr(r, width_col))
-                raw = getattr(r, pixels_col)
-                if h <= 0 or w <= 0 or raw is None or len(raw) != h * w * 3:
-                    out["media_id"].append(getattr(r, id_col))
-                    out["n_boxes"].append(-1)  # malformed row marker
-                    out["boxes"].append([])
-                    continue
-                ids.append(getattr(r, id_col))
-                imgs.append(
-                    np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3))
-            for mid, boxes in zip(
-                ids, _det_boxes(sess, post, imgs, batch_size,
-                                limit_side_len, limit_type)
-            ):
-                out["media_id"].append(mid)
-                out["n_boxes"].append(len(boxes))
-                out["boxes"].append([
-                    [float(v) for v in b.reshape(-1)] for b in boxes
-                ])
-            yield pd.DataFrame(out)
+            ids, imgs, bad_ids = _decode_rows(pdf, "media_id")
+            boxes = _det_boxes(det, imgs)
+            yield pd.DataFrame({
+                "media_id": bad_ids + ids,
+                "n_boxes": [-1] * len(bad_ids) + [len(bs) for bs in boxes],
+                "boxes": [[] for _ in bad_ids] + [
+                    [[float(v) for v in b.reshape(-1)] for b in bs]
+                    for bs in boxes],
+            })
 
-    return df.select(id_col, pixels_col, width_col, height_col).mapInPandas(
+    return df.select("media_id", "pixels", "width", "height").mapInPandas(
         run, schema=DET_SCHEMA
     )
 
@@ -336,62 +421,35 @@ class _FakeRecSession:
 
 def recognize_text_lines(
     df: DataFrame,
-    id_col: str = "line_id",
-    pixels_col: str = "pixels",
-    width_col: str = "width",
-    height_col: str = "height",
     backend: str = "none",
     model_path: str | None = None,
     characters: list[str] | None = None,
-    batch_size: int = 16,
-    intra_op_threads: int = 2,
 ) -> DataFrame:
-    """Cropped line images → (text, conf), distributed with the
-    reference TextRecognizer's exact batching discipline
-    (deepdoc/vision/ocr.py:307-352): lines sorted by aspect ratio so a
-    mini-batch shares a width, per-mini-batch ``max_wh_ratio`` sizing,
-    ``rec_resize_norm`` preprocessing, ONE session.run per mini-batch of
-    ``batch_size``, CTC label decode (``core.ocr_decode``, the ported
-    deterministic half), results restored to input order."""
+    """Cropped line images (line_id, pixels, width, height) → (text,
+    conf), distributed with the reference TextRecognizer's exact batching
+    discipline (deepdoc/vision/ocr.py:307-352): lines sorted by aspect
+    ratio so a mini-batch shares a width, per-mini-batch ``max_wh_ratio``
+    sizing, ``rec_resize_norm`` preprocessing, ONE session.run per
+    mini-batch of ``BATCH_SIZE``, CTC label decode (``core.ocr_decode``,
+    the ported deterministic half), results restored to input order.
+    Malformed rows follow the good ones with text "" and conf -1.0."""
+
+    _require_paths(backend, model_path=model_path)
 
     def run(batches):
-        import numpy as np
         import pandas as pd
 
-        from ragflow_spark.core.ocr_decode import (
-            DEFAULT_CHARSET,
-            CTCLabelDecode,
-        )
-
-        chars = list(characters) if characters is not None else list(
-            DEFAULT_CHARSET)
-        decoder = CTCLabelDecode(characters=chars)
-        if backend == "fake":
-            sess = _FakeRecSession(num_classes=len(chars) + 1)
-        else:
-            sess = _session(backend, model_path, intra_op_threads)
-
+        rec = _head("rec", backend, model_path, characters)
         for pdf in batches:
-            ids, imgs = [], []
-            bad_ids = []
-            for r in pdf.itertuples():
-                h, w = int(getattr(r, height_col)), int(getattr(r, width_col))
-                raw = getattr(r, pixels_col)
-                if h <= 0 or w <= 0 or raw is None or len(raw) != h * w * 3:
-                    bad_ids.append(getattr(r, id_col))
-                    continue
-                ids.append(getattr(r, id_col))
-                imgs.append(
-                    np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3))
-            texts = _rec_texts(sess, decoder, imgs, batch_size)
-            out = pd.DataFrame({
+            ids, imgs, bad_ids = _decode_rows(pdf, "line_id")
+            texts = _rec_texts(rec, imgs)
+            yield pd.DataFrame({
                 "line_id": ids + bad_ids,
                 "text": [t for t, _ in texts] + [""] * len(bad_ids),
                 "conf": [c for _, c in texts] + [-1.0] * len(bad_ids),
             })
-            yield out
 
-    return df.select(id_col, pixels_col, width_col, height_col).mapInPandas(
+    return df.select("line_id", "pixels", "width", "height").mapInPandas(
         run, schema=REC_SCHEMA
     )
 
@@ -438,107 +496,40 @@ OCR_SCHEMA = ("media_id string, line_no int, box array<double>, "
 
 def ocr_images(
     df: DataFrame,
-    id_col: str = "media_id",
-    pixels_col: str = "pixels",
-    width_col: str = "width",
-    height_col: str = "height",
     backend: str = "none",
     det_model_path: str | None = None,
     rec_model_path: str | None = None,
     characters: list[str] | None = None,
-    batch_size: int = 16,
-    limit_side_len: int = 960,
-    limit_type: str = "max",
-    thresh: float = 0.3,
-    box_thresh: float = 0.5,   # the reference OCR det config (ocr.py:376)
-    unclip_ratio: float = 1.5,
-    drop_score: float = 0.5,
-    intra_op_threads: int = 2,
 ) -> DataFrame:
-    """The reference's full OCR loop (deepdoc/vision/ocr.py:581-630
-    ``OCR.__call__``) distributed: det boxes → ``sorted_boxes`` ordering →
-    ``get_rotate_crop_image`` perspective rectification per box →
-    aspect-sorted rec mini-batches → CTC decode → ``drop_score`` filter.
-    Both forward passes share the per-worker session pattern; crops from
-    EVERY image in an Arrow batch pool into common rec mini-batches, so
-    small images don't run underfull batches.
+    """The reference's full OCR loop (``_ocr_lines``) distributed over
+    image rows (media_id, pixels, width, height). Both forward passes
+    share the per-worker session pattern; crops from EVERY image in an
+    Arrow batch pool into common rec mini-batches. Malformed rows
+    contribute no lines.
 
-    Output: one row per kept line — (media_id, line_no in reading order,
-    box [x0,y0,…,x3,y3], text, conf)."""
+    Output: one row per kept line — (media_id, line_no, box
+    [x0,y0,…,x3,y3], text, conf), line_no numbered densely per image in
+    reading order over the kept lines."""
+
+    _require_paths(backend, det_model_path=det_model_path,
+                   rec_model_path=rec_model_path)
 
     def run(batches):
-        import numpy as np
         import pandas as pd
 
-        from ragflow_spark.core.db_postprocess import DBPostProcess
-        from ragflow_spark.core.ocr_decode import (
-            DEFAULT_CHARSET,
-            CTCLabelDecode,
-        )
-        from ragflow_spark.core.ocr_geom import (
-            get_rotate_crop_image,
-            sorted_boxes,
-        )
-
-        chars = list(characters) if characters is not None else list(
-            DEFAULT_CHARSET)
-        decoder = CTCLabelDecode(characters=chars)
-        if backend == "fake":
-            det_sess = _FakeDetSession()
-            rec_sess = _FakeRecSession(num_classes=len(chars) + 1)
-        else:
-            det_sess = _session(backend, det_model_path, intra_op_threads)
-            rec_sess = _session(backend, rec_model_path, intra_op_threads)
-        post = DBPostProcess(thresh=thresh, box_thresh=box_thresh,
-                             unclip_ratio=unclip_ratio, score_mode="fast")
-
+        heads = (_head("det", backend, det_model_path),
+                 _head("rec", backend, rec_model_path, characters))
         for pdf in batches:
-            ids, imgs = [], []
-            for r in pdf.itertuples():
-                h, w = int(getattr(r, height_col)), int(getattr(r, width_col))
-                raw = getattr(r, pixels_col)
-                if h <= 0 or w <= 0 or raw is None or len(raw) != h * w * 3:
-                    continue  # malformed rows contribute no lines
-                ids.append(getattr(r, id_col))
-                imgs.append(
-                    np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3))
-            per_img_boxes = _det_boxes(det_sess, post, imgs, batch_size,
-                                       limit_side_len, limit_type)
-            # pool crops across the whole Arrow batch → full rec batches
-            crops, crop_src = [], []
-            ordered_boxes: list[list] = []
-            for i, boxes in enumerate(per_img_boxes):
-                obs = sorted_boxes(boxes) if len(boxes) else []
-                ordered_boxes.append(obs)
-                for ln, b in enumerate(obs):
-                    try:
-                        crops.append(
-                            get_rotate_crop_image(imgs[i], b.copy()))
-                    except Exception:
-                        # degenerate quad (coords collapsed by rounding →
-                        # singular homography): skip the box, keep the
-                        # task — cv2 degrades instead of raising here
-                        continue
-                    crop_src.append((i, ln))
-            texts = _rec_texts(rec_sess, decoder, crops, batch_size)
+            ids, imgs, _bad_ids = _decode_rows(pdf, "media_id")
             out = {"media_id": [], "line_no": [], "box": [],
                    "text": [], "conf": []}
-            # line_no is renumbered CONTIGUOUSLY per image over the KEPT
-            # lines (reading order preserved — crop_src is (i, ln)
-            # ascending): both the drop_score filter and a skipped
-            # degenerate quad would otherwise leave gaps that mis-join
-            # consumers assuming dense numbering per media_id (ADVICE r5)
-            next_no: dict = {}
-            for (i, ln), (txt, conf) in zip(crop_src, texts):
-                if conf < drop_score:  # OCR.__call__'s filter_boxes rule
-                    continue
-                out["media_id"].append(ids[i])
-                out["line_no"].append(next_no.setdefault(i, 0))
-                next_no[i] += 1
-                out["box"].append([
-                    float(v) for v in ordered_boxes[i][ln].reshape(-1)])
-                out["text"].append(txt)
-                out["conf"].append(conf)
+            for mid, lines in zip(ids, _ocr_lines(heads, imgs)):
+                for ln, (b, txt, conf) in enumerate(lines):
+                    out["media_id"].append(mid)
+                    out["line_no"].append(ln)
+                    out["box"].append([float(v) for v in b.reshape(-1)])
+                    out["text"].append(txt)
+                    out["conf"].append(conf)
             # explicit object dtype: an empty partition would otherwise
             # infer float64 for the list column and break Arrow conversion
             yield pd.DataFrame({
@@ -549,7 +540,7 @@ def ocr_images(
                 "conf": pd.Series(out["conf"], dtype="float64"),
             })
 
-    return df.select(id_col, pixels_col, width_col, height_col).mapInPandas(
+    return df.select("media_id", "pixels", "width", "height").mapInPandas(
         run, schema=OCR_SCHEMA
     )
 
@@ -605,86 +596,23 @@ def synth_ocr_pages(n: int = 12, seed: int = 13):
     return out
 
 
-def ocr_image_array(
-    im,
-    backend: str = "none",
-    det_model_path: str | None = None,
-    rec_model_path: str | None = None,
-    characters: list[str] | None = None,
-    batch_size: int = 16,
-    limit_side_len: int = 960,
-    limit_type: str = "max",
-    box_thresh: float = 0.5,
-    unclip_ratio: float = 1.5,
-    drop_score: float = 0.5,
-) -> list[tuple[str, float]]:
-    """Single-image OCR through the same det→sort→crop→rec cores the
-    distributed ``ocr_images`` uses — the per-doc entry the picture
-    template calls inside its extraction task (rag/app/picture.py:31-33
-    ``ocr(np.array(img))``). Returns [(text, conf), …] in reading
-    order after the drop_score filter."""
-    return [(txt, conf) for _b, txt, conf in ocr_image_boxes(
-        im, backend=backend, det_model_path=det_model_path,
-        rec_model_path=rec_model_path, characters=characters,
-        batch_size=batch_size, limit_side_len=limit_side_len,
-        limit_type=limit_type, box_thresh=box_thresh,
-        unclip_ratio=unclip_ratio, drop_score=drop_score)]
-
-
 def ocr_image_boxes(
     im,
     backend: str = "none",
     det_model_path: str | None = None,
     rec_model_path: str | None = None,
     characters: list[str] | None = None,
-    batch_size: int = 16,
-    limit_side_len: int = 960,
-    limit_type: str = "max",
-    box_thresh: float = 0.5,
-    unclip_ratio: float = 1.5,
-    drop_score: float = 0.5,
 ) -> list:
-    """``ocr_image_array`` with geometry: [(quad (4,2) ndarray in image
-    pixel coords, text, conf), …] in reading order — what the scanned-PDF
-    fallback needs to synthesize LAYOUT boxes that ride the same merge
-    pipeline text-layer boxes do (the reference feeds OCR output into the
-    identical downstream, pdf_parser.py ``__ocr``)."""
-    from ragflow_spark.core.db_postprocess import DBPostProcess
-    from ragflow_spark.core.ocr_decode import (
-        DEFAULT_CHARSET,
-        CTCLabelDecode,
-    )
-    from ragflow_spark.core.ocr_geom import (
-        get_rotate_crop_image,
-        sorted_boxes,
-    )
-
-    chars = list(characters) if characters is not None else list(
-        DEFAULT_CHARSET)
-    decoder = CTCLabelDecode(characters=chars)
-    if backend == "fake":
-        det_sess = _FakeDetSession()
-        rec_sess = _FakeRecSession(num_classes=len(chars) + 1)
-    else:
-        det_sess = _session(backend, det_model_path, 2)
-        rec_sess = _session(backend, rec_model_path, 2)
-    # reference OCR det config (ocr.py:376-377): thresh 0.3 / box 0.5 /
-    # unclip 1.5 — the same defaults every entry point shares
-    post = DBPostProcess(thresh=0.3, box_thresh=box_thresh,
-                         unclip_ratio=unclip_ratio, score_mode="fast")
-    boxes = _det_boxes(det_sess, post, [im], batch_size,
-                       limit_side_len, limit_type)[0]
-    obs = sorted_boxes(boxes) if len(boxes) else []
-    crops, kept = [], []
-    for b in obs:
-        try:
-            crops.append(get_rotate_crop_image(im, b.copy()))
-            kept.append(b)
-        except Exception:
-            continue  # degenerate quad — skip the box, keep the doc
-    return [
-        (b, txt, conf)
-        for b, (txt, conf) in zip(
-            kept, _rec_texts(rec_sess, decoder, crops, batch_size))
-        if conf >= drop_score
-    ]
+    """Single-image OCR through the same ``_ocr_lines`` loop the
+    distributed ``ocr_images`` runs — the per-doc entry the extraction
+    task calls: the picture template (rag/app/picture.py:31-33
+    ``ocr(np.array(img))``) and the scanned-PDF fallback, which turns the
+    quads into LAYOUT boxes that ride the same merge pipeline text-layer
+    boxes do (pdf_parser.py ``__ocr``). Returns [(quad (4,2) ndarray in
+    image pixel coords, text, conf), …] in reading order after the
+    ``DROP_SCORE`` filter."""
+    _require_paths(backend, det_model_path=det_model_path,
+                   rec_model_path=rec_model_path)
+    heads = (_head("det", backend, det_model_path),
+             _head("rec", backend, rec_model_path, characters))
+    return _ocr_lines(heads, [im])[0]

@@ -6,10 +6,12 @@ surrounding code (detector_input preproc, mini-batch padding, per-worker
 session singleton, DBPostProcess, map→source geometry). Painted bright
 rectangles on dark backgrounds must come back as det boxes containing
 the painted centers, across images of varying sizes spanning multiple
-Arrow batches, partitions, and >batch_size mini-batch flushes.
+Arrow batches, partitions, and >BATCH_SIZE mini-batch flushes.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
@@ -55,13 +57,11 @@ def _rows(n):
 
 
 def test_detect_e2e_fake_backend(spark):
-    rows, expect = _rows(24)  # > batch_size → multiple mini-batch flushes
+    rows, expect = _rows(24)  # > BATCH_SIZE → multiple mini-batch flushes
     df = spark.createDataFrame(
         rows, "media_id string, pixels binary, width int, height int"
     ).repartition(4)
-    out = detect_text_regions(
-        df, backend="fake", batch_size=16, box_thresh=0.5
-    ).collect()
+    out = detect_text_regions(df, backend="fake").collect()
     assert len(out) == len(rows)
     for r in out:
         rects = expect[r["media_id"]]
@@ -115,6 +115,77 @@ def test_fake_session_contract_shapes():
     assert 0.98 <= maps[0, 0, 10, 10] <= 1.0
 
 
+def test_onnx_session_cache(monkeypatch, tmp_path):
+    """The per-worker onnx session cache, against a stub onnxruntime:
+    same (path, mtime) reuses the session, touching the file reloads it,
+    a third model evicts only the oldest entry, ORT gets the fixed
+    2-thread intra-op pool, and fake heads never enter the cache."""
+    import sys
+    import types
+
+    from ragflow_spark.operators import detect
+
+    class SessionOptions:
+        intra_op_num_threads = 0
+
+    class InferenceSession:
+        def __init__(self, path, sess_options, providers):
+            self.path, self.opts = path, sess_options
+
+    ort = types.ModuleType("onnxruntime")
+    ort.SessionOptions, ort.InferenceSession = SessionOptions, InferenceSession
+    monkeypatch.setitem(sys.modules, "onnxruntime", ort)
+    monkeypatch.setattr(detect, "_SESS_CACHE", {})
+
+    paths = []
+    for name in ("det.onnx", "rec.onnx", "other.onnx"):
+        (tmp_path / name).write_bytes(b"model")
+        paths.append(str(tmp_path / name))
+    det, rec, other = paths
+
+    s1 = detect._session("onnx", det)
+    assert detect._session("onnx", det) is s1
+    assert s1.path == det and s1.opts.intra_op_num_threads == 2
+    st = os.stat(det)
+    os.utime(det, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    s2 = detect._session("onnx", det)
+    assert s2 is not s1
+    s3 = detect._session("onnx", rec)
+    assert [k[1] for k in detect._SESS_CACHE] == [det, rec]
+    detect._session("onnx", other)
+    assert [k[1] for k in detect._SESS_CACHE] == [rec, other]
+    assert detect._session("onnx", rec) is s3
+
+    before = dict(detect._SESS_CACHE)
+    for role in ("det", "rec"):
+        sess, _post = detect._head(role, "fake", None)
+        assert sess is not detect._head(role, "fake", None)[0]
+    assert detect._SESS_CACHE == before
+
+
+def test_onnx_backend_without_model_path_names_it(spark):
+    """backend="onnx" with a missing model path raises ValueError naming
+    the argument before any session or onnxruntime import."""
+    from ragflow_spark.core.bmp import encode_bmp
+    from ragflow_spark.core.templates import run_template
+    from ragflow_spark.operators.detect import ocr_image_boxes, ocr_images
+
+    blob = encode_bmp(np.zeros((8, 8, 3), dtype=np.uint8))
+    with pytest.raises(ValueError, match="det_model_path and rec_model_path"):
+        run_template("picture", blob, "bmp", "English",
+                     cfg={"ocr_backend": "onnx"})
+    with pytest.raises(ValueError, match="needs rec_model_path"):
+        ocr_image_boxes(np.zeros((8, 8, 3), dtype=np.uint8), backend="onnx",
+                        det_model_path=__file__)
+    rows, _ = _rows(1)
+    df = spark.createDataFrame(
+        rows, "media_id string, pixels binary, width int, height int")
+    with pytest.raises(ValueError, match="needs model_path"):
+        detect_text_regions(df, backend="onnx")
+    with pytest.raises(ValueError, match="needs det_model_path"):
+        ocr_images(df, backend="onnx", rec_model_path=__file__)
+
+
 # ------------------------------------------------- recognition plumbing
 
 def _paint_text(text: str, chars: list[str]):
@@ -152,7 +223,7 @@ def test_recognize_e2e_fake_backend(spark):
         rows, "line_id string, pixels binary, width int, height int"
     ).repartition(3)
     out = {r["line_id"]: r for r in recognize_text_lines(
-        df, backend="fake", batch_size=16).collect()}
+        df, backend="fake").collect()}
     assert len(out) == len(words)
     for i, wtext in enumerate(words):
         r = out[f"ln{i:02d}"]
@@ -181,24 +252,38 @@ def test_ocr_compose_e2e(spark):
     """The full det → sorted_boxes → get_rotate_crop_image → rec loop
     distributed: pages with red-signal text rows carrying band-encoded
     strings must come back as exactly those strings in top-to-bottom
-    reading order."""
-    from ragflow_spark.operators.detect import ocr_images, synth_ocr_pages
+    reading order — and line for line (box, text, conf) as the per-doc
+    ``ocr_image_boxes`` entry returns them. A malformed row in the input
+    yields no lines and leaves its neighbours' lines intact."""
+    from ragflow_spark.operators.detect import (
+        ocr_image_boxes,
+        ocr_images,
+        synth_ocr_pages,
+    )
 
     pages = synth_ocr_pages(12)
     rows = [(m, p, w, h) for m, p, w, h, _t in pages]
+    rows.append(("bad", b"\x00" * 10, 100, 100))  # wrong byte count
     truth = {m: t for m, _p, _w, _h, t in pages}
     df = spark.createDataFrame(
         rows, "media_id string, pixels binary, width int, height int"
     ).repartition(3)
-    out = ocr_images(df, backend="fake", batch_size=16,
-                     box_thresh=0.5).collect()
+    out = ocr_images(df, backend="fake").collect()
     got: dict[str, list] = {}
     for r in out:
-        got.setdefault(r["media_id"], []).append((r["line_no"], r["text"]))
+        got.setdefault(r["media_id"], []).append(
+            (r["line_no"], [round(v, 6) for v in r["box"]], r["text"],
+             r["conf"]))
     assert set(got) == set(truth)
-    for mid, expect in truth.items():
-        lines = [t for _ln, t in sorted(got[mid])]
-        assert lines == expect, (mid, lines, expect)
+    for m, p, w, h, expect in pages:
+        lines = sorted(got[m])
+        assert [ln for ln, *_ in lines] == list(range(len(lines))), m
+        assert [t for _ln, _b, t, _c in lines] == expect, (m, lines, expect)
+        im = np.frombuffer(p, dtype=np.uint8).reshape(h, w, 3)
+        per_doc = [
+            ([round(float(v), 6) for v in quad.reshape(-1)], t, c)
+            for quad, t, c in ocr_image_boxes(im, backend="fake")]
+        assert [tuple(x[1:]) for x in lines] == per_doc, m
 
 
 # ------------------------------------------------ picture template (bmp)

@@ -305,6 +305,16 @@ def test_scanned_template_honest_default_raises():
         run_template("naive", blob, "pdf", "English")
 
 
+def test_scanned_onnx_without_model_path_raises_value_error():
+    """The scanned-PDF fallback with backend "onnx" and no model paths
+    names the missing arguments instead of failing in os.stat(None)."""
+    from ragflow_spark.core.pdf_layout import scanned_pdf_pages
+
+    blob, _ = _scanned_fixture()
+    with pytest.raises(ValueError, match="det_model_path and rec_model_path"):
+        scanned_pdf_pages(blob, {"ocr_backend": "onnx"})
+
+
 def test_scanned_undecodable_codec_raises_not_empty():
     from ragflow_spark.core.pdf_layout import scanned_pdf_pages
 

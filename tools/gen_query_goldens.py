@@ -242,9 +242,7 @@ def check_det_vs_ground_truth(spark) -> None:
     df = spark.createDataFrame(
         rows, "media_id string, pixels binary, width int, height int"
     ).repartition(4)
-    out = detect_text_regions(
-        df, backend="fake", batch_size=16, box_thresh=0.5
-    ).collect()
+    out = detect_text_regions(df, backend="fake").collect()
     if len(out) != len(rows):
         raise SystemExit(f"media_det_boxes row count {len(out)} != {len(rows)}")
     for r in out:

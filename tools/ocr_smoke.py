@@ -60,8 +60,7 @@ def main() -> None:
     # synthesis cost into the reported pages/s
 
     def run():
-        out = ocr_images(pages, backend="fake", batch_size=16,
-                         box_thresh=0.5)
+        out = ocr_images(pages, backend="fake")
         lines = out.groupBy("media_id").agg(
             F.concat_ws(
                 "\n", F.transform(F.array_sort(F.collect_list(
