@@ -19,9 +19,9 @@ model paths and the rec charset are settings.
 
 - ``backend="onnx"``  loads the model file in an onnxruntime session —
   the production path; raises ``ValueError`` when a model path is
-  missing and ImportError when onnxruntime is absent (it is not
-  installed in this sandbox, and the reference repo does not vendor the
-  weights either — it downloads them at runtime).
+  missing and ImportError when onnxruntime is not installed (the
+  reference repo does not vendor the weights either — it downloads them
+  at runtime).
 - ``backend="fake"``  a deterministic stand-in session with the SAME
   ``run(["maps"], {"x": batch})`` contract: the probability map is the
   de-standardized channel mean of the input tensor, so bright painted
@@ -161,9 +161,9 @@ def _head(role: str, backend: str, model_path: str | None,
 
 
 def _require_paths(backend: str, **paths) -> None:
-    """backend='onnx' loads every model it is given a path for: name the
-    missing path arguments up front, before any session (or onnxruntime)
-    loads, instead of failing deep inside ``os.stat(None)``."""
+    """With backend='onnx' every model path argument is required: raise
+    ValueError naming the missing ones before any session or onnxruntime
+    loads (``os.stat(None)`` would otherwise fail with a TypeError)."""
     missing = [name for name, path in paths.items() if path is None]
     if backend == "onnx" and missing:
         raise ValueError(
