@@ -2,8 +2,11 @@
 
 All variants are DataFrame-native (the LSH family uses only md5/array
 higher-order functions, so results are engine-portable and DuckDB-checkable).
-Scale notes per operator are in each docstring — these run as
+Scale notes per operator are in each docstring — the pair miners run as
 shuffle-on-key jobs with no driver state, sized for 10^9+ docs.
+``dup_clusters`` is the one operator that holds driver state, and only
+bounded: a pair graph of at most T edges (T from the driver heap) is
+labelled in driver memory, and larger graphs run star rounds first.
 
 - exact:     hash-groupBy on normalized text (1 shuffle)
 - minhash:   shingle → K md5-minima → B band keys → explode + self-join on
@@ -15,6 +18,9 @@ shuffle-on-key jobs with no driver state, sized for 10^9+ docs.
              intersection-count matmul per group (modest group sizes; the
              exact baseline the LSH variants beat)
 - embedding: cosine ≥ τ pairs within a blocking group over array<float>
+- clusters:  connected components of the pair graph → min-id cluster per
+             doc (driver hook-and-jump up to T edges, large/small-star
+             rounds above)
 """
 
 from __future__ import annotations
@@ -192,12 +198,23 @@ def minhash_base_arrow(
     131k run extrapolates. The Arrow path is the only path of
     ``minhash_pairs``; the expression path remains the oracle-checked
     reference implementation (doc_minhash_sig/bands queries), and
-    tests/test_scale_guards.py pins the two equal."""
+    tests/test_scale_guards.py pins the two equal.
+
+    Each band hashes ``num_hashes // bands`` signature rows, so ``bands``
+    must divide ``num_hashes`` exactly: otherwise trailing hashes would
+    be ignored, and with more bands than hashes every band would be
+    empty and every doc would share all of its band keys. Raises
+    ValueError naming both values when it does not."""
     import hashlib
 
     import numpy as np
     import pandas as pd
 
+    if not 1 <= bands <= num_hashes or num_hashes % bands:
+        raise ValueError(
+            f"minhash: bands={bands} must divide num_hashes={num_hashes} "
+            "into equal bands of at least one row"
+        )
     rows = num_hashes // bands
     id_type = dict(df.dtypes)[id_col]
     mod = np.uint64(MINHASH_MOD)
@@ -968,6 +985,72 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr_edges.union(self_edges).distinct()
 
 
+# Driver bytes budgeted per edge when dup_clusters finishes in driver
+# memory: the JVM-side Arrow collect buffer, the pyarrow and numpy copies
+# of both id columns, and the labelling temporaries (dense ids, parent
+# and hooked arrays, the output table). 1 KiB is generous for two ids;
+# it admits ~1M edges at a 1 GiB driver heap.
+_DRIVER_EDGE_BYTES = 1024
+
+
+def _driver_cap(spark) -> int:
+    """Most edges ``dup_clusters`` labels in driver memory: the driver
+    JVM's max heap over ``_DRIVER_EDGE_BYTES``."""
+    runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+    return int(runtime.maxMemory()) // _DRIVER_EDGE_BYTES
+
+
+def _min_labels(u, v):
+    """Connected components of the undirected edges ``u[i]–v[i]`` (numpy
+    id arrays) → (nodes, labels), each node's label being its component's
+    minimum id. Ids are densed with ``np.unique`` (sorted, so the dense
+    minimum is the id minimum), then hook-and-jump: every tree root
+    hooks onto the smallest root across its edges (``np.minimum.at``),
+    and pointer jumping flattens the forest back to stars. Parents only
+    ever decrease, so no cycle forms and each root is its tree's minimum;
+    every unfinished tree merges each round, so rounds are O(log n)."""
+    import numpy as np
+
+    nodes, dense = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = dense[:len(u)], dense[len(u):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        low = np.minimum(ra, rb)
+        hooked = parent.copy()
+        np.minimum.at(hooked, ra, low)
+        np.minimum.at(hooked, rb, low)
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        if np.array_equal(hooked, parent):
+            return nodes, nodes[parent]
+        parent = hooked
+
+
+def _clusters_on_driver(spark, edges, id_type: str) -> DataFrame:
+    """(doc_id, cluster_id) for a collected pyarrow edge table (u, v),
+    labelled by ``_min_labels``. The result goes back through Arrow —
+    building it from a Python list would go through a pickled RDD and
+    start Python workers."""
+    import pyarrow as pa
+
+    arrow_type = edges.schema.field("u").type
+    nodes, labels = _min_labels(
+        edges.column("u").to_numpy(zero_copy_only=False),
+        edges.column("v").to_numpy(zero_copy_only=False),
+    )
+    table = pa.table({
+        "doc_id": pa.array(nodes, type=arrow_type),
+        "cluster_id": pa.array(labels, type=arrow_type),
+    })
+    return spark.createDataFrame(table).select(
+        F.col("doc_id").cast(id_type), F.col("cluster_id").cast(id_type)
+    )
+
+
 def dup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -976,40 +1059,66 @@ def dup_clusters(
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id) with
     cluster_id = min doc id in the component (the canonical keeper, matching
-    ``exact_dedup_groups``'s min-id convention).
+    ``exact_dedup_groups``'s min-id convention). Null ids and self-loops
+    are dropped, so a doc appears iff it has an edge to another doc.
 
-    Algorithm: alternating large-star / small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — O(log n)
-    rounds even on adversarial long-chain graphs, vs O(diameter) for naive
-    min-label propagation (a 10k-doc near-dup chain converges in ~2·log₂ n
-    rounds here; the propagation variant needs 10k). Each round is two
-    groupBy-min passes + two shuffle joins on the node key, all
-    map-side-combinable; every round's edge set is LOCAL-CHECKPOINTED,
-    not merely persisted — persist alone leaves the previous round's full
-    logical plan nested inside the next one, and the driver OOMs planning
-    round ~14 (measured on a 10k path graph). Checkpointing truncates
-    lineage, so driver planning stays O(1) per round and executor storage
-    holds ~2 snapshots of |edges| (long,long) rows (older ones GC'd by the
-    ContextCleaner). On a multi-executor cluster prefer
-    ``setCheckpointDir`` + ``.checkpoint()`` for executor-loss tolerance;
-    localCheckpoint trades that for speed, right for this single-JVM
-    harness. The driver reads only a 2-value (count, checksum) fixed-point
-    probe per round.
+    Driver finish: a graph of at most T edges, T = driver max heap //
+    ``_DRIVER_EDGE_BYTES`` (~1M at a 1 GiB heap), is labelled in driver
+    memory by ``_min_labels``. The first job is a bounded probe —
+    ``limit(T + 1)`` of the raw edges, no distinct, so no dedup shuffle —
+    collected as Arrow; at most T rows back means no star round runs and
+    that probe is the only job (the labels return as an Arrow-built local
+    table). Each star round costs a checkpoint job and a probe job.
 
-    Raises RuntimeError if unconverged after ``max_iter`` rounds (silent
-    wrong labels are worse than a loud failure; at the default 50 rounds,
-    convergence is guaranteed for any graph below ~2^25 nodes, far past
-    the 10^12-doc design point). The converged round count is attached as
-    ``_rs_rounds`` for observability.
+    Star rounds, for larger graphs: alternating large-star / small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14) — O(log n) rounds even on adversarial long-chain graphs, vs
+    O(diameter) for naive min-label propagation (a 10k-doc near-dup chain
+    converges in ~2·log₂ n rounds here; the propagation variant needs
+    10k). Each round is two groupBy-min passes + two shuffle joins on the
+    node key, all map-side-combinable; every round's edge set is
+    LOCAL-CHECKPOINTED, not merely persisted — persist alone leaves the
+    previous round's full logical plan nested inside the next one, and
+    the driver OOMs planning round ~14 (measured on a 10k path graph).
+    Checkpointing truncates lineage, so driver planning stays O(1) per
+    round and executor storage holds ~2 snapshots of |edges| (long,long)
+    rows (older ones GC'd by the ContextCleaner). On a multi-executor
+    cluster prefer ``setCheckpointDir`` + ``.checkpoint()`` for
+    executor-loss tolerance; localCheckpoint trades that for speed, right
+    for this single-JVM harness. The driver reads a 2-value (count,
+    checksum) fixed-point probe per round. Handoff: once a round leaves
+    at most T edges, the checkpointed edge set is collected and finished
+    on the driver — star rounds preserve the components and the node
+    set, so the labels are the same, and the round that would only
+    confirm the fixed point is skipped.
 
-    Nothing is persisted: the result is the converged star forest itself
-    (each non-root's (doc, root) row plus one (root, root) row per
-    component), so ``release`` has nothing to free."""
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    Raises RuntimeError if the star rounds are unconverged after
+    ``max_iter`` rounds (silent wrong labels are worse than a loud
+    failure; at the default 50 rounds, convergence is guaranteed for any
+    graph below ~2^25 nodes, far past the 10^12-doc design point). The
+    result carries ``_rs_rounds``, the star rounds run (0 when the whole
+    graph was labelled on the driver), and ``_rs_driver_cap``, T.
+
+    Nothing is persisted: the result is either the driver-built Arrow
+    table or the converged star forest itself (each non-root's (doc,
+    root) row plus one (root, root) row per component), so ``release``
+    has nothing to free."""
+    spark = pairs.sparkSession
+    cap = _driver_cap(spark)
+    raw = pairs.select(
+        F.col(id_a).alias("u"), F.col(id_b).alias("v")
+    ).filter(F.col("u") != F.col("v"))
+    id_type = dict(raw.dtypes)["u"]
+
+    def labelled(out: DataFrame, rounds: int) -> DataFrame:
+        out._rs_rounds = rounds
+        out._rs_driver_cap = cap
+        return out
+
+    head = raw.limit(cap + 1).toArrow()
+    if head.num_rows <= cap:
+        return labelled(_clusters_on_driver(spark, head, id_type), 0)
+    edges = raw.distinct()
     # fixed point: small-star output is a stable star forest (every node
     # points at its component min). Detect via (row count, order-free
     # checksum) — two scalar aggregates per round, no comparison join.
@@ -1027,32 +1136,28 @@ def dup_clusters(
     cur = _small_star(edges).localCheckpoint()
     sig = probe(cur)
     rounds = 1
-    converged = False
-    for _ in range(max_iter):
+    while sig[0] > cap:
+        if rounds > max_iter:
+            raise RuntimeError(
+                f"dup_clusters: not converged after {max_iter} star rounds"
+                " — component structure is adversarial beyond design range"
+            )
         nxt = _small_star(_large_star(cur)).localCheckpoint()
         nsig = probe(nxt)
-        cur = nxt
+        cur = nxt  # checkpointed, GC'd on deref
         rounds += 1
         if nsig == sig:
-            converged = True
-            break
+            # converged star forest: every non-root points at its root and
+            # roots never appear on the u side, so the labels are cur's
+            # (u, v) rows plus one (root, root) row per distinct root
+            return labelled(cur.select(
+                F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
+            ).union(
+                cur.select(F.col("v").alias("doc_id"),
+                           F.col("v").alias("cluster_id")).distinct()
+            ), rounds)
         sig = nsig
-    if not converged:
-        raise RuntimeError(
-            f"dup_clusters: not converged after {max_iter} star rounds — "
-            "component structure is adversarial beyond design range"
-        )
-    # converged star forest: every non-root points at its root and roots
-    # never appear on the u side, so the labels are cur's (u, v) rows plus
-    # one (root, root) row per distinct root
-    out = cur.select(
-        F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
-    ).union(
-        cur.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))
-        .distinct()
-    )
-    out._rs_rounds = rounds  # cur is checkpointed, GC'd on deref
-    return out
+    return labelled(_clusters_on_driver(spark, cur.toArrow(), id_type), rounds)
 
 
 # -------------------------------------------------------------- embedding

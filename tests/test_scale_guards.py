@@ -164,25 +164,11 @@ def test_ngram_group_vocab_limit_raises(spark, monkeypatch):
         run()
 
 
-def test_dup_clusters_chain_and_islands(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (5, 7)], "id_a long, id_b long"
-    )
-    out = dedup.dup_clusters(pairs)
-    got = {r.doc_id: r.cluster_id for r in out.collect()}
-    dedup.release(out)
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 5: 5, 7: 5}
-
-    # seeded random multigraph: duplicate pairs in both orientations and
-    # a self-loop, against a Python union-find
-    import random
-
-    rng = random.Random(5)
-    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(220)]
-    edges += [(b, a) for a, b in edges[:40]] + edges[40:60]
-    a0 = next(a for a, b in edges if a != b)
-    edges.append((a0, a0))
-    parent: dict[int, int] = {}
+def _component_mins(edges) -> dict:
+    """{node: component min} of an undirected edge list by a Python
+    union-find; null ids and self-loops are dropped, as dup_clusters
+    drops them."""
+    parent: dict = {}
 
     def find(x):
         parent.setdefault(x, x)
@@ -192,15 +178,41 @@ def test_dup_clusters_chain_and_islands(spark):
         return x
 
     for a, b in edges:
-        if a != b:
+        if a is not None and b is not None and a != b:
             ra, rb = find(a), find(b)
             parent[max(ra, rb)] = min(ra, rb)
-    want = {x: find(x) for x in list(parent)}
+    return {x: find(x) for x in list(parent)}
+
+
+def _random_multigraph() -> list:
+    """Seeded random multigraph: duplicate pairs in both orientations and
+    a self-loop."""
+    import random
+
+    rng = random.Random(5)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(220)]
+    edges += [(b, a) for a, b in edges[:40]] + edges[40:60]
+    a0 = next(a for a, b in edges if a != b)
+    edges.append((a0, a0))
+    return edges
+
+
+def test_dup_clusters_chain_and_islands(spark):
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (5, 7)], "id_a long, id_b long"
+    )
+    out = dedup.dup_clusters(pairs)
+    got = {r.doc_id: r.cluster_id for r in out.collect()}
+    dedup.release(out)
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 5: 5, 7: 5}
+
+    # against a Python union-find
+    edges = _random_multigraph()
     out = dedup.dup_clusters(
         spark.createDataFrame(edges, "id_a long, id_b long"))
     rows = [(r.doc_id, r.cluster_id) for r in out.collect()]
     assert len(rows) == len({d for d, _ in rows}), "one row per node"
-    assert dict(rows) == want
+    assert dict(rows) == _component_mins(edges)
 
 
 # ------------------------------------------- manifest modulus guard
@@ -282,11 +294,14 @@ def test_drop_common_segments(spark):
 
 # ------------------------------------------- round-3 guards
 
-def test_dup_clusters_path_graph_logarithmic_rounds(spark):
+def test_dup_clusters_path_graph_logarithmic_rounds(spark, monkeypatch):
     """Adversarial 10k-node path graph: large-star/small-star must converge
-    in O(log n) rounds (naive min-label propagation needs ~n rounds)."""
+    in O(log n) rounds (naive min-label propagation needs ~n rounds). The
+    driver cap is pinned to 0 so the graph is not finished on the
+    driver."""
     import math
 
+    monkeypatch.setattr(dedup, "_driver_cap", lambda spark: 0)
     n = 10_000
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
@@ -299,12 +314,143 @@ def test_dup_clusters_path_graph_logarithmic_rounds(spark):
     dedup.release(out)
 
 
-def test_dup_clusters_nonconvergence_raises(spark):
+def test_dup_clusters_nonconvergence_raises(spark, monkeypatch):
+    # cap 0: the star rounds run, so max_iter=0 cannot converge
+    monkeypatch.setattr(dedup, "_driver_cap", lambda spark: 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="not converged"):
         dedup.dup_clusters(pairs, max_iter=0)
+
+
+# dup_clusters finishes on the driver once the edge set is at most the cap
+# T. "star" pins T to 0 (star rounds only), "handoff" pins it to the edge
+# count of the converged star forest (the rounds hand off once they reach
+# it) and "default" keeps the heap-derived T (no star round runs).
+_CC_GRAPHS = {
+    "chain_islands": [(1, 2), (2, 3), (10, 11), (5, 7)],
+    "multigraph": _random_multigraph(),
+    "path10k": [(i, i + 1) for i in range(9_999)],
+}
+
+
+def _check_dup_clusters(spark, monkeypatch, edges, id_type, cap):
+    """dup_clusters over ``edges`` under ``cap``: the rows are the
+    union-find's, the schema is the same on every path, and
+    ``_rs_rounds``/``_rs_driver_cap`` plus the edge counts handed to
+    ``_min_labels`` show which path ran."""
+    want = _component_mins(edges)
+    forest = sum(x != m for x, m in want.items())
+    if cap != "default":
+        pinned = {"star": 0, "handoff": forest}[cap]
+        monkeypatch.setattr(dedup, "_driver_cap", lambda spark: pinned)
+    labelled = []
+    min_labels = dedup._min_labels
+
+    def spy(u, v):
+        labelled.append(len(u))
+        return min_labels(u, v)
+
+    monkeypatch.setattr(dedup, "_min_labels", spy)
+    out = dedup.dup_clusters(spark.createDataFrame(
+        edges, f"id_a {id_type}, id_b {id_type}"))
+    assert sorted(map(tuple, out.collect())) == sorted(want.items())
+    assert out.schema == spark.createDataFrame(
+        [], f"doc_id {id_type}, cluster_id {id_type}").schema
+    edge_rows = sum(a is not None and b is not None and a != b
+                    for a, b in edges)
+    if not edge_rows:  # empty graph: nothing for a star round to do
+        assert out._rs_rounds == 0 and labelled == [0]
+    elif cap == "star":
+        assert out._rs_driver_cap == 0
+        assert out._rs_rounds >= 2 and labelled == []
+    elif cap == "handoff":
+        assert out._rs_driver_cap == forest < edge_rows
+        assert out._rs_rounds >= 1 and labelled == [forest]
+    else:
+        assert out._rs_driver_cap == dedup._driver_cap(spark) > edge_rows
+        assert out._rs_rounds == 0 and labelled == [edge_rows]
+
+
+@pytest.mark.parametrize("cap", ["star", "handoff", "default"])
+@pytest.mark.parametrize("graph", sorted(_CC_GRAPHS))
+def test_dup_clusters_driver_and_star_paths_agree(spark, monkeypatch,
+                                                  graph, cap):
+    # every edge in both orientations: the same components, and more raw
+    # edges than the star forest has, so "handoff" runs at least a round
+    edges = _CC_GRAPHS[graph] + [(b, a) for a, b in _CC_GRAPHS[graph]]
+    _check_dup_clusters(spark, monkeypatch, edges, "bigint", cap)
+
+
+@pytest.mark.parametrize("cap", ["star", "handoff", "default"])
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+def test_dup_clusters_id_types_and_null_ids(spark, monkeypatch, id_type,
+                                            cap):
+    # a cycle and a repeated pair give more raw edges than the star
+    # forest; null ids and the self-loop are dropped
+    conv = str if id_type == "string" else int
+    edges = [
+        tuple(None if x is None else conv(x) for x in e)
+        for e in [(1, 2), (2, 3), (3, 1), (2, 1), (10, 11), (5, 7),
+                  (None, 4), (8, None), (None, None), (6, 6)]
+    ]
+    _check_dup_clusters(spark, monkeypatch, edges, id_type, cap)
+
+
+@pytest.mark.parametrize("cap", ["star", "default"])
+def test_dup_clusters_empty_input(spark, monkeypatch, cap):
+    _check_dup_clusters(spark, monkeypatch, [], "bigint", cap)
+
+
+def test_dup_clusters_driver_path_job_count(spark, monkeypatch):
+    """96 disjoint pairs, the planted-pair shape of perfbench's
+    curate_dedup: the driver path is one bounded-probe job, the star path
+    two jobs (checkpoint + probe) per round."""
+    import uuid
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(2 * i, 2 * i + 1) for i in range(96)], "id_a long, id_b long")
+
+    def jobs():
+        group = f"dup_clusters-{uuid.uuid4()}"
+        sc.setJobGroup(group, group)
+        try:
+            out = dedup.dup_clusters(pairs)
+            assert len(out.collect()) == 192
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    driver_jobs = jobs()
+    monkeypatch.setattr(dedup, "_driver_cap", lambda spark: 0)
+    star_jobs = jobs()
+    assert driver_jobs <= 1 < star_jobs
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(16, 32), (16, 5), (16, 0)])
+def test_minhash_rejects_bands_not_dividing_num_hashes(spark, num_hashes,
+                                                       bands):
+    """bands > num_hashes made every band empty (one shared key per band
+    number, all dropped as hot → no pairs); a remainder ignored trailing
+    hashes. All three minhash entry points refuse both."""
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma epsilon")],
+        "doc_id long, text string")
+    store = dedup.minhash_store(df, "doc_id", "text")
+    kw = {"num_hashes": num_hashes, "bands": bands}
+    calls = [
+        lambda: dedup.minhash_pairs(df, "doc_id", "text", **kw),
+        lambda: dedup.minhash_store(df, "doc_id", "text", **kw),
+        lambda: dedup.incremental_minhash_pairs(df, store, "doc_id", "text",
+                                                **kw),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError,
+                           match=f"bands={bands} .*num_hashes={num_hashes}"):
+            call()
 
 
 def test_embedding_near_dup_full_scan_requires_opt_in(spark):

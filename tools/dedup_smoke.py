@@ -116,11 +116,13 @@ def main() -> None:
     result["minhash_sec"] = round(time.perf_counter() - t0, 2)
     result["minhash_dropped_bands"] = dedup.dropped_band_count(mh)
 
-    # connected components over the mined pairs: star rounds at real volume
+    # connected components over the mined pairs: labelled on the driver
+    # when the edge set fits its cap, else star rounds first
     t0 = time.perf_counter()
     cc = dedup.dup_clusters(mh_pairs)
     result["cc_docs"] = cc.count()
     result["cc_rounds"] = cc._rs_rounds
+    result["cc_driver_cap"] = cc._rs_driver_cap
     result["cc_sec"] = round(time.perf_counter() - t0, 2)
     dedup.release(cc)
     mh_pairs.unpersist()
@@ -160,6 +162,13 @@ def main() -> None:
     result["ts"] = time.strftime("%Y-%m-%d %H:%M:%S")
     print(json.dumps(result))
 
+    # which dup_clusters path ran: 0 star rounds means the whole pair
+    # graph fit the driver cap
+    cap = f"{result['cc_driver_cap']:,}"
+    cc_path = (f"labelled on the driver, ≤ {cap}-edge cap"
+               if result["cc_rounds"] == 0 else
+               f"{result['cc_rounds']} large/small-star rounds, "
+               f"{cap}-edge driver cap")
     ng_row = ""
     if "ngram_matmul_sec" in result:
         ng_row = (f"\n| ngram_jaccard_pairs (matmul, 1024-doc blocks,"
@@ -174,7 +183,7 @@ boilerplate ({n_docs // 64:,} copies — the k² band bomb), rest unique. Measur
 | miner | wall sec | pairs found |
 |---|---|---|
 | minhash_pairs (guarded, default) | {result['minhash_sec']} | {result['minhash_pairs']:,} |
-| dup_clusters over those pairs (large/small-star, {result['cc_rounds']} rounds) | {result['cc_sec']} | {result['cc_docs']:,} labeled docs |
+| dup_clusters over those pairs ({cc_path}) | {result['cc_sec']} | {result['cc_docs']:,} labeled docs |
 | simhash_pairs (hamming ≤ 3, guarded) | {result['simhash_sec']} | {result['simhash_pairs']:,} |
 | exact_dedup_groups (dup groups) | {result['exact_sec']} | {result['exact_dup_groups']:,} |{ng_row}
 
