@@ -5,8 +5,9 @@ higher-order functions, so results are engine-portable and DuckDB-checkable).
 Scale notes per operator are in each docstring — the pair miners run as
 shuffle-on-key jobs with no driver state, sized for 10^9+ docs.
 ``dup_clusters`` is the one operator that holds driver state, and only
-bounded: a pair graph of at most T edges (T from the driver heap) is
-labelled in driver memory, and larger graphs run star rounds first.
+bounded: an integer-id pair graph of at most T edges (T from the driver
+heap) is labelled in driver memory; larger graphs and string ids run the
+star rounds.
 
 - exact:     hash-groupBy on normalized text (1 shuffle)
 - minhash:   shingle → K md5-minima → B band keys → explode + self-join on
@@ -26,6 +27,7 @@ labelled in driver memory, and larger graphs run star rounds first.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
 from ragflow_spark.functions.text import (
     MINHASH_MOD,
@@ -985,17 +987,23 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr_edges.union(self_edges).distinct()
 
 
-# Driver bytes budgeted per edge when dup_clusters finishes in driver
-# memory: the JVM-side Arrow collect buffer, the pyarrow and numpy copies
+# Driver bytes budgeted per edge when dup_clusters labels in driver
+# memory: the JVM-side Arrow collect buffers, the pyarrow and numpy copies
 # of both id columns, and the labelling temporaries (dense ids, parent
-# and hooked arrays, the output table). 1 KiB is generous for two ids;
-# it admits ~1M edges at a 1 GiB driver heap.
+# and hooked arrays, the output table). 1 KiB admits ~1M edges at a 1 GiB
+# driver heap. Measured on 1M random bigint edges (1.3M nodes, local[2]):
+# the driver path also completes at a 512 MiB heap, and the Python driver's
+# RSS rises ~170 B/edge (outside the JVM heap). String ids have no width
+# bound: at 1M edges, 12-char ids kept 937 MiB in use after GC in a 1 GiB
+# heap and cost 308 B/edge of Python object arrays, and 64-char ids ran
+# the heap out of memory in the single-partition collect — so only
+# integer ids take this path.
 _DRIVER_EDGE_BYTES = 1024
 
 
 def _driver_cap(spark) -> int:
-    """Most edges ``dup_clusters`` labels in driver memory: the driver
-    JVM's max heap over ``_DRIVER_EDGE_BYTES``."""
+    """Most integer-id edges ``dup_clusters`` labels in driver memory: the
+    driver JVM's max heap over ``_DRIVER_EDGE_BYTES``."""
     runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
     return int(runtime.maxMemory()) // _DRIVER_EDGE_BYTES
 
@@ -1063,12 +1071,14 @@ def dup_clusters(
     are dropped, so a doc appears iff it has an edge to another doc.
 
     Driver finish: a graph of at most T edges, T = driver max heap //
-    ``_DRIVER_EDGE_BYTES`` (~1M at a 1 GiB heap), is labelled in driver
-    memory by ``_min_labels``. The first job is a bounded probe —
+    ``_DRIVER_EDGE_BYTES`` (~1M at a 1 GiB heap) for integer ids and 0
+    for string ids (unbounded width), is labelled in driver memory by
+    ``_min_labels``. The first job is a bounded probe —
     ``limit(T + 1)`` of the raw edges, no distinct, so no dedup shuffle —
     collected as Arrow; at most T rows back means no star round runs and
     that probe is the only job (the labels return as an Arrow-built local
-    table). Each star round costs a checkpoint job and a probe job.
+    table). More than T rows back: the star rounds run over the whole
+    graph, each costing a checkpoint job and a probe job.
 
     Star rounds, for larger graphs: alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -1086,11 +1096,7 @@ def dup_clusters(
     cluster prefer ``setCheckpointDir`` + ``.checkpoint()`` for
     executor-loss tolerance; localCheckpoint trades that for speed, right
     for this single-JVM harness. The driver reads a 2-value (count,
-    checksum) fixed-point probe per round. Handoff: once a round leaves
-    at most T edges, the checkpointed edge set is collected and finished
-    on the driver — star rounds preserve the components and the node
-    set, so the labels are the same, and the round that would only
-    confirm the fixed point is skipped.
+    checksum) fixed-point probe per round.
 
     Raises RuntimeError if the star rounds are unconverged after
     ``max_iter`` rounds (silent wrong labels are worse than a loud
@@ -1099,25 +1105,30 @@ def dup_clusters(
     result carries ``_rs_rounds``, the star rounds run (0 when the whole
     graph was labelled on the driver), and ``_rs_driver_cap``, T.
 
-    Nothing is persisted: the result is either the driver-built Arrow
-    table or the converged star forest itself (each non-root's (doc,
-    root) row plus one (root, root) row per component), so ``release``
-    has nothing to free."""
+    The raw edges are persisted for the probe, so a costly upstream pair
+    plan (e.g. ``minhash_pairs``' uncached joins) runs once on either
+    path; they are unpersisted once the driver has the probe rows or the
+    first star round is checkpointed. The result is either the
+    driver-built Arrow table or the converged star forest itself (each
+    non-root's (doc, root) row plus one (root, root) row per component),
+    so ``release`` has nothing to free."""
     spark = pairs.sparkSession
-    cap = _driver_cap(spark)
+    # persisted: the probe computes the whole upstream pair plan, and the
+    # star rounds read it again through distinct()
     raw = pairs.select(
         F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).filter(F.col("u") != F.col("v"))
+    ).filter(F.col("u") != F.col("v")).persist()
     id_type = dict(raw.dtypes)["u"]
-
-    def labelled(out: DataFrame, rounds: int) -> DataFrame:
-        out._rs_rounds = rounds
-        out._rs_driver_cap = cap
-        return out
+    integral = isinstance(raw.schema["u"].dataType, IntegralType)
+    cap = _driver_cap(spark) if integral else 0
 
     head = raw.limit(cap + 1).toArrow()
     if head.num_rows <= cap:
-        return labelled(_clusters_on_driver(spark, head, id_type), 0)
+        raw.unpersist()
+        out = _clusters_on_driver(spark, head, id_type)
+        out._rs_rounds = 0
+        out._rs_driver_cap = cap
+        return out
     edges = raw.distinct()
     # fixed point: small-star output is a stable star forest (every node
     # points at its component min). Detect via (row count, order-free
@@ -1134,30 +1145,36 @@ def dup_clusters(
         return (row["n"], row["h"])
 
     cur = _small_star(edges).localCheckpoint()
+    raw.unpersist()
     sig = probe(cur)
     rounds = 1
-    while sig[0] > cap:
-        if rounds > max_iter:
-            raise RuntimeError(
-                f"dup_clusters: not converged after {max_iter} star rounds"
-                " — component structure is adversarial beyond design range"
-            )
+    converged = False
+    for _ in range(max_iter):
         nxt = _small_star(_large_star(cur)).localCheckpoint()
         nsig = probe(nxt)
-        cur = nxt  # checkpointed, GC'd on deref
+        cur = nxt
         rounds += 1
         if nsig == sig:
-            # converged star forest: every non-root points at its root and
-            # roots never appear on the u side, so the labels are cur's
-            # (u, v) rows plus one (root, root) row per distinct root
-            return labelled(cur.select(
-                F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
-            ).union(
-                cur.select(F.col("v").alias("doc_id"),
-                           F.col("v").alias("cluster_id")).distinct()
-            ), rounds)
+            converged = True
+            break
         sig = nsig
-    return labelled(_clusters_on_driver(spark, cur.toArrow(), id_type), rounds)
+    if not converged:
+        raise RuntimeError(
+            f"dup_clusters: not converged after {max_iter} star rounds — "
+            "component structure is adversarial beyond design range"
+        )
+    # converged star forest: every non-root points at its root and roots
+    # never appear on the u side, so the labels are cur's (u, v) rows plus
+    # one (root, root) row per distinct root
+    out = cur.select(
+        F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
+    ).union(
+        cur.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))
+        .distinct()
+    )
+    out._rs_rounds = rounds  # cur is checkpointed, GC'd on deref
+    out._rs_driver_cap = cap
+    return out
 
 
 # -------------------------------------------------------------- embedding

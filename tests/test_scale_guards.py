@@ -324,10 +324,10 @@ def test_dup_clusters_nonconvergence_raises(spark, monkeypatch):
         dedup.dup_clusters(pairs, max_iter=0)
 
 
-# dup_clusters finishes on the driver once the edge set is at most the cap
-# T. "star" pins T to 0 (star rounds only), "handoff" pins it to the edge
-# count of the converged star forest (the rounds hand off once they reach
-# it) and "default" keeps the heap-derived T (no star round runs).
+# dup_clusters labels the graph on the driver when the edge set is at most
+# the cap T. "star" pins T to 0 (star rounds only) and "default" keeps the
+# heap-derived T (no star round runs for integer ids; string ids always
+# take the star rounds).
 _CC_GRAPHS = {
     "chain_islands": [(1, 2), (2, 3), (10, 11), (5, 7)],
     "multigraph": _random_multigraph(),
@@ -341,10 +341,8 @@ def _check_dup_clusters(spark, monkeypatch, edges, id_type, cap):
     ``_rs_rounds``/``_rs_driver_cap`` plus the edge counts handed to
     ``_min_labels`` show which path ran."""
     want = _component_mins(edges)
-    forest = sum(x != m for x, m in want.items())
-    if cap != "default":
-        pinned = {"star": 0, "handoff": forest}[cap]
-        monkeypatch.setattr(dedup, "_driver_cap", lambda spark: pinned)
+    if cap == "star":
+        monkeypatch.setattr(dedup, "_driver_cap", lambda spark: 0)
     labelled = []
     min_labels = dedup._min_labels
 
@@ -362,33 +360,28 @@ def _check_dup_clusters(spark, monkeypatch, edges, id_type, cap):
                     for a, b in edges)
     if not edge_rows:  # empty graph: nothing for a star round to do
         assert out._rs_rounds == 0 and labelled == [0]
-    elif cap == "star":
+    elif cap == "star" or id_type == "string":
         assert out._rs_driver_cap == 0
         assert out._rs_rounds >= 2 and labelled == []
-    elif cap == "handoff":
-        assert out._rs_driver_cap == forest < edge_rows
-        assert out._rs_rounds >= 1 and labelled == [forest]
     else:
         assert out._rs_driver_cap == dedup._driver_cap(spark) > edge_rows
         assert out._rs_rounds == 0 and labelled == [edge_rows]
 
 
-@pytest.mark.parametrize("cap", ["star", "handoff", "default"])
+@pytest.mark.parametrize("cap", ["star", "default"])
 @pytest.mark.parametrize("graph", sorted(_CC_GRAPHS))
 def test_dup_clusters_driver_and_star_paths_agree(spark, monkeypatch,
                                                   graph, cap):
-    # every edge in both orientations: the same components, and more raw
-    # edges than the star forest has, so "handoff" runs at least a round
+    # every edge in both orientations: the same components
     edges = _CC_GRAPHS[graph] + [(b, a) for a, b in _CC_GRAPHS[graph]]
     _check_dup_clusters(spark, monkeypatch, edges, "bigint", cap)
 
 
-@pytest.mark.parametrize("cap", ["star", "handoff", "default"])
+@pytest.mark.parametrize("cap", ["star", "default"])
 @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
 def test_dup_clusters_id_types_and_null_ids(spark, monkeypatch, id_type,
                                             cap):
-    # a cycle and a repeated pair give more raw edges than the star
-    # forest; null ids and the self-loop are dropped
+    # a cycle and a repeated pair; null ids and the self-loop are dropped
     conv = str if id_type == "string" else int
     edges = [
         tuple(None if x is None else conv(x) for x in e)
@@ -401,6 +394,30 @@ def test_dup_clusters_id_types_and_null_ids(spark, monkeypatch, id_type,
 @pytest.mark.parametrize("cap", ["star", "default"])
 def test_dup_clusters_empty_input(spark, monkeypatch, cap):
     _check_dup_clusters(spark, monkeypatch, [], "bigint", cap)
+
+
+@pytest.mark.parametrize("cap", ["star", "default"])
+def test_dup_clusters_runs_upstream_pairs_once(spark, monkeypatch, cap):
+    """The probe's pass over an uncached pair plan is reused by the star
+    rounds: a Python UDF in the plan counts one call per pair row on
+    either path."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        calls.add(1)
+        return x
+
+    if cap == "star":
+        monkeypatch.setattr(dedup, "_driver_cap", lambda spark: 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(50)], "a long, b long"
+    ).select(
+        F.udf(counted, "long").asNondeterministic()("a").alias("id_a"),
+        F.col("b").alias("id_b"),
+    )
+    out = dedup.dup_clusters(pairs)
+    assert sorted(map(tuple, out.collect())) == [(i, 0) for i in range(51)]
+    assert calls.value == 50
 
 
 def test_dup_clusters_driver_path_job_count(spark, monkeypatch):

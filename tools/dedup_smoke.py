@@ -117,7 +117,7 @@ def main() -> None:
     result["minhash_dropped_bands"] = dedup.dropped_band_count(mh)
 
     # connected components over the mined pairs: labelled on the driver
-    # when the edge set fits its cap, else star rounds first
+    # when the edge set fits its cap, else by star rounds
     t0 = time.perf_counter()
     cc = dedup.dup_clusters(mh_pairs)
     result["cc_docs"] = cc.count()
