@@ -13,6 +13,12 @@ manifested as done (the driver collects the list of partition ids still to
 do and filters the pages with isin on it); chunk ids are deterministic
 (md5(chunk_text||url)) so per-partition overwrite is idempotent.
 
+Write layout: the task that parses a document owns its partition_id, so
+each attempt writes one parquet file per partition (plus at most one per
+giant document, which parse on their own scattered lane). When a resume
+re-runs only k of the partitions, each is split over --partitions // k
+tasks and gets that many files.
+
 Build the zip with: python tools/package.py
 """
 

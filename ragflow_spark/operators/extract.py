@@ -2,23 +2,29 @@
 
 Maps the reference's whole task_executor orchestration
 (rag/svr/task_executor.py:449-558 — fetch blob → FACTORY[parser].chunk →
-per-chunk md5 id) onto a single ``mapInPandas`` over the salted/size-bucketed
-repartition from ``ragflow_spark.plans.partitioning``:
+per-chunk md5 id) onto a single ``mapInPandas`` over the partition-aligned,
+size-bucketed repartition from ``ragflow_spark.plans.partitioning``:
 
     pages (url, warc_ts, html, text, lang, parser, fmt)
       │ F1 size-cap filter (native Catalyst filter → parquet pushdown)
       │ with_partition_id  (stable resume key)
-      │ partition_for_extract (physical skew-aware shuffle)
+      │ partition_for_extract (one shuffle: task t owns partition_id t,
+      │                        giants on their own scattered lane)
       ▼ mapInPandas(extract)   — Arrow batches, per-doc parity core
     chunks (url, warc_ts, chunk_idx, chunk_text, tag_text, spans, title,
             parser, fmt, content_hash, partition_id, error)
+
+Because the task that parses a document owns its ``partition_id``, the
+job's ``partitionBy("partition_id")`` write opens one file per partition
+(plus at most one per giant), not one per (task, partition).
 
 The plan is built in one place, ``_stage`` (prune, cap, partition_id) then
 ``_parse`` (shuffle, UDF), for every way the stage is driven:
 ``extract_chunks`` over a batch DataFrame, the same call over a
 ``readStream`` DataFrame (the streaming path — exactly-once from the sink
 checkpoint plus the deterministic ids), and ``run_extraction_job``, which
-adds only its noindex and resume filters between the two steps.
+adds only its noindex and resume filters between the two steps and
+hands the shuffle the partition ids it kept.
 
 Per-document failures NEVER kill the job: a failing doc emits one row with
 ``error`` set and chunk_idx = -1 (the 100 TB contract — one malformed PDF
@@ -183,15 +189,23 @@ def _stage(pages: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def _parse(staged: DataFrame, num_partitions: int,
-           template_cfg: dict | None) -> DataFrame:
-    """Cost-equalizing shuffle, then the parity-core UDF. The shuffle
-    always runs: scan splits bound BYTES, not parse COST — parse cost per
-    byte varies 10-100× across formats, so byte-bounded splits inherit the
-    corpus layout's cost skew. Measured at 1M docs / local[32]: shuffled
-    8 702 docs/s with task p99/median 1.69, vs 6 899 docs/s at 2.13
-    without (+26%); the shuffle is linear in input bytes with no
-    degenerate keys (url hash + giant lane)."""
-    return partition_for_extract(staged, num_partitions).mapInPandas(
+           template_cfg: dict | None,
+           pids: list[int] | None = None) -> DataFrame:
+    """Partition-aligned shuffle, then the parity-core UDF. ``pids`` are
+    the partition ids left in ``staged`` (default: all): each of the
+    ``num_partitions`` tasks parses the docs of one of them — or of one
+    sub-bucket of one, when fewer ids than tasks remain — plus its share
+    of the giant lane, so its output lands in one ``partition_id``
+    directory of the sink.
+
+    The shuffle always runs: scan splits bound BYTES, not parse COST —
+    parse cost per byte varies 10-100× across formats, so byte-bounded
+    splits inherit the corpus layout's cost skew. Measured at 1M docs /
+    local[32]: shuffled 8 702 docs/s with task p99/median 1.69, vs 6 899
+    docs/s at 2.13 without (+26%); the placement stays url-hash balanced
+    (``partition_id`` is itself a url hash) with giants on their own
+    lane."""
+    return partition_for_extract(staged, num_partitions, pids).mapInPandas(
         lambda batches: _extract_batches(batches, template_cfg),
         schema=CHUNKS_SCHEMA,
     )
@@ -231,7 +245,9 @@ def run_extraction_job(
     The resume decision is a driver-side list of partition ids
     (``plans.manifest.resume_partitions``, at most ``num_partitions``):
     the pages are filtered with ``isin`` on it, an empty list returns
-    before any write, and the manifest readback reuses it.
+    before any write, the shuffle places rows by it (one writing task
+    per listed partition, or s = n // len(list) per partition), and the
+    manifest readback reuses it.
 
     ``respect_noindex`` drops pages whose head carries a meta-robots
     noindex directive (``page_noindex``) — the filter rides the same
@@ -254,10 +270,11 @@ def run_extraction_job(
     if not todo_pids:
         return
     chunks = _parse(staged.filter(F.col("partition_id").isin(todo_pids)),
-                    num_partitions, template_cfg)
+                    num_partitions, template_cfg, todo_pids)
     # idempotent per-partition overwrite: rerunning a partition rewrites the
-    # exact same deterministic rows. A per-write option, so the caller's
-    # session keeps its own partitionOverwriteMode.
+    # exact same deterministic rows, one file per parsing task that owns
+    # it. A per-write option, so the caller's session keeps its own
+    # partitionOverwriteMode.
     (
         chunks.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

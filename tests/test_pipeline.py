@@ -91,10 +91,10 @@ def test_giant_docs_scatter(spark):
     hashing into one hot task."""
     from ragflow_spark.plans.partitioning import partition_for_extract
 
-    big = spark.range(0, 32).select(
+    big = with_partition_id(spark.range(0, 32).select(
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
         F.lit(b"x" * 300_000).alias("html"),
-    )
+    ), 8)
     parts = (
         partition_for_extract(big, 8)
         .withColumn("p", F.spark_partition_id())
@@ -102,6 +102,84 @@ def test_giant_docs_scatter(spark):
     )
     counts = [r["count"] for r in parts]
     assert max(counts) <= 12  # 32 giants over 8 partitions, no pileup
+
+
+def _files_per_partition(path) -> dict[int, list[str]]:
+    out = {}
+    for d in glob.glob(os.path.join(path, "partition_id=*")):
+        pid = int(d.rsplit("=", 1)[1])
+        out[pid] = sorted(glob.glob(os.path.join(d, "*.parquet")))
+    return out
+
+
+def _same_rows(a, b):
+    b = b.select(*a.columns)
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+def test_write_layout_one_file_per_partition_plus_giant(
+        spark, pages_df, tmpdir_path):
+    """The task that parses a doc owns its partition_id, so the sink
+    writes one file per partition directory; the one giant parses on its
+    own lane and may add one file to its partition."""
+    from ragflow_spark.plans.partitioning import GIANT_BYTES
+
+    giant_doc = pages_src.make_doc(1000)
+    assert len(giant_doc["html"]) >= GIANT_BYTES
+    giant = spark.createDataFrame([giant_doc], pages_df.schema)
+    pages = pages_df.unionByName(giant)
+    out = os.path.join(tmpdir_path, "chunks")
+    run_extraction_job(pages, out, os.path.join(tmpdir_path, "manifest"),
+                       num_partitions=8)
+    giant_pid = with_partition_id(giant, 8).first().partition_id
+    files = _files_per_partition(out)
+    assert sorted(files) == list(range(8))
+    assert all(len(fs) == 1 for pid, fs in files.items() if pid != giant_pid)
+    assert 1 <= len(files[giant_pid]) <= 2
+    _same_rows(spark.read.parquet(out),
+               extract_chunks(pages, num_partitions=8))
+
+
+def test_partial_resume_spreads_subbuckets_keeps_untouched_files(
+        spark, pages_df, tmpdir_path):
+    """Two of eight partitions drift: the resume splits each over
+    8 // 2 = 4 sub-bucket tasks (every task gets rows, each still writes
+    one directory) and leaves the other directories' files untouched."""
+    from ragflow_spark.plans.manifest import resume_partitions
+    from ragflow_spark.plans.partitioning import partition_for_extract
+
+    staged = with_partition_id(pages_df, 8)
+    by_pid = {}
+    for r in staged.select("url", "partition_id").orderBy("url").collect():
+        by_pid.setdefault(r.partition_id, r.url)
+    drifted = sorted(by_pid)[2:4]
+    late = [by_pid[p] for p in drifted]
+    out = os.path.join(tmpdir_path, "chunks")
+    man = os.path.join(tmpdir_path, "manifest")
+    run_extraction_job(pages_df.filter(~F.col("url").isin(late)), out, man,
+                       num_partitions=8)
+    before = _files_per_partition(out)
+    assert sorted(before) == list(range(8))
+    assert all(len(fs) == 1 for fs in before.values())  # no giants here
+    mtimes = {f: os.stat(f).st_mtime_ns for fs in before.values() for f in fs}
+
+    todo = resume_partitions(staged, read_manifest(spark, man), 8)
+    assert todo == drifted
+    tasks = (partition_for_extract(staged.filter(F.col("partition_id").isin(
+        todo)), 8, todo).select(F.spark_partition_id()).distinct().count())
+    assert tasks == 8
+
+    run_extraction_job(pages_df, out, man, num_partitions=8, attempt=2)
+    after = _files_per_partition(out)
+    for pid in set(range(8)) - set(drifted):
+        assert after[pid] == before[pid]
+        assert all(os.stat(f).st_mtime_ns == mtimes[f] for f in after[pid])
+    for pid in drifted:
+        assert 1 <= len(after[pid]) <= 4
+        assert not set(after[pid]) & set(before[pid])
+    _same_rows(spark.read.parquet(out),
+               extract_chunks(pages_df, num_partitions=8))
 
 
 def test_content_hash_is_deterministic_md5(chunks_df):

@@ -636,6 +636,36 @@ def test_extract_scan_prunes_unused_columns(spark, tmpdir_path):
     assert trees[0] == trees[1] and "MapInPandas" in trees[0][1], trees
 
 
+def test_spark_hash_int_twin_matches_spark(spark):
+    """The driver-side Murmur3 twin that builds the extraction shuffle's
+    slot keys must equal Spark's ``hash()`` of an int column, including
+    negatives and the int32 extremes."""
+    from ragflow_spark.plans.partitioning import spark_hash_int
+
+    vals = list(range(-300, 301)) + [
+        -2**31, -2**31 + 1, 2**31 - 2, 2**31 - 1, 123_456_789, -987_654_321]
+    rows = spark.createDataFrame([(v,) for v in vals], "v int").select(
+        "v", F.hash("v").alias("h")).collect()
+    assert len(rows) == len(vals)
+    assert [(r.v, spark_hash_int(r.v)) for r in rows] == \
+        [(r.v, r.h) for r in rows]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 8, 64, 200])
+def test_slot_keys_place_slot_t_on_task_t(spark, n):
+    """A hash repartition on ``slot_keys(n)[t]`` puts slot t on task t —
+    fails if Spark's ``HashPartitioning`` hash ever changes, which would
+    silently scatter every partition's chunks over many write tasks."""
+    from ragflow_spark.plans.partitioning import slot_keys
+
+    keys = slot_keys(n)
+    placed = spark.createDataFrame(
+        list(enumerate(keys)), "slot int, key int").repartition(n, "key")
+    got = {r.slot: r.task for r in placed.select(
+        "slot", F.spark_partition_id().alias("task")).collect()}
+    assert got == {t: t for t in range(n)}
+
+
 def test_resume_reprocesses_drifted_partitions(spark, tmpdir_path):
     """Input drift: docs appended after a partition was manifested must be
     picked up by the next attempt (count-verified resume), not silently
