@@ -10,16 +10,19 @@ walk. pypdf / pdfplumber are not installed here, so this module provides:
   ``Tj`` per line) — so the extractor below can be tested honestly against
   real PDF bytes it did not itself produce the parse for.
 - ``extract_text_lines(blob)``: a text extractor for text-layer PDFs:
-  walks the page tree (/Root → /Pages → /Kids → /Contents), decodes
-  stream filter chains (FlateDecode incl. PNG predictors, ASCIIHexDecode),
+  walks the page tree depth-first (/Root → /Pages → /Kids → /Contents,
+  handing inherited /Resources and /MediaBox down), decodes stream
+  filter chains (FlateDecode incl. PNG predictors, ASCIIHexDecode),
   expands PDF 1.5 object streams (/Type /ObjStm, where modern writers
   pack every dict), tolerates non-zero generation numbers and /Contents
   arrays, and evaluates BT/ET text blocks (Tj, TJ, ', ", literal AND hex
   strings) with per-font decoding: /ToUnicode CMaps (bfchar + bfrange),
-  Identity-H Type0 2-byte codes, latin-1 simple fonts. Scanned
-  (image-only) PDFs still raise ``UnsupportedPdfError`` — the vision OCR
-  tier (SURVEY.md §2.8) is the reference's answer there and is stubbed
-  behind ``ragflow_spark.operators.multimodal``.
+  Identity-H Type0 2-byte codes, latin-1 simple fonts. ``extract_boxes``,
+  ``page_heights``, ``page_count`` and ``extract_page_images`` read the
+  same page walk, and the box extractor the same content interpreter.
+  Scanned (image-only) PDFs give empty text pages; the template tier
+  then OCRs the page rasters from ``extract_page_images``
+  (``pdf_layout.scanned_pdf_pages``).
 - ``build_cid_pdf`` / ``build_objstm_pdf``: deterministic writers emitting
   exactly those wild-PDF shapes (CID hex text + generated ToUnicode;
   ObjStm + XRef stream + filter chains + gen numbers) so the extractor is
@@ -472,7 +475,6 @@ def build_scanned_pdf(pages: list[tuple[int, int, bytes]]) -> bytes:
 
 _HDR_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b")
 _STREAM_START_RE = re.compile(rb"stream\r?\n")
-_TJ_STR = re.compile(rb"\((?:\\.|[^\\()])*\)")
 
 
 def _parse_objects(blob: bytes) -> dict[int, tuple[bytes, bytes | None]]:
@@ -633,10 +635,6 @@ def _decode_stream(dict_part: bytes, data: bytes | None) -> bytes | None:
                 f"unsupported stream filter /{name.decode('ascii', 'replace')}"
             )
     return data
-
-
-# back-compat alias (pre-hardening name used by older call sites)
-_inflate = _decode_stream
 
 
 def _pdf_unescape_bytes(raw: bytes) -> bytes:
@@ -803,46 +801,78 @@ def _font_decoder(font_dct: bytes | None, objects: dict):
     return lambda raw: raw.decode("latin-1")
 
 
-def _parents_map(objects: dict) -> dict[int, int]:
-    parent_of: dict[int, int] = {}
-    for num, (pdct, _pd) in objects.items():
-        if b"/Type /Pages" in pdct or b"/Type/Pages" in pdct:
-            for m in re.finditer(
-                    rb"(\d+)\s+\d+\s+R", pdct.split(b"/Kids", 1)[-1]):
-                parent_of.setdefault(int(m.group(1)), num)
-    return parent_of
-
-
-def _page_resources(page_num: int, page_dct: bytes, objects: dict
-                    ) -> bytes | None:
-    """The page's /Resources dict, honoring inheritance from the /Pages
-    ancestors (ISO 32000 §7.7.3.4)."""
-    parent_of = _parents_map(objects)
-    dct, node = page_dct, page_num
-    seen: set[int] = set()
-    while True:
-        res = _deref(objects, _dict_value(dct, b"Resources"))
-        if res:
-            return res
-        node = parent_of.get(node)
-        if node is None or node in seen:
-            return None
-        seen.add(node)
-        dct = objects.get(node, (b"", None))[0]
-
-
-def _page_fonts(page_num: int, page_dct: bytes, objects: dict):
-    """{font resource name → decoder} for a page."""
-    res = _page_resources(page_num, page_dct, objects)
+def _page_fonts(res: bytes | None, objects: dict):
+    """{font resource name → decoder} for a page's /Resources dict."""
     fonts: dict[bytes, object] = {}
-    if res:
-        fdict = _deref(objects, _dict_value(res, b"Font"))
-        if fdict:
-            for nm in re.finditer(
-                    rb"/([^\s/\[\]<>()]+)\s+(\d+)\s+\d+\s+R", fdict):
-                fobj = objects.get(int(nm.group(2)), (b"", None))[0]
-                fonts[nm.group(1)] = _font_decoder(fobj, objects)
+    fdict = _deref(objects, _dict_value(res, b"Font")) if res else None
+    if fdict:
+        for nm in re.finditer(
+                rb"/([^\s/\[\]<>()]+)\s+(\d+)\s+\d+\s+R", fdict):
+            fobj = objects.get(int(nm.group(2)), (b"", None))[0]
+            fonts[nm.group(1)] = _font_decoder(fobj, objects)
     return fonts
+
+
+# ------------------------------------------------------------- page tree
+
+_NUM_RE = rb"[-+]?[0-9]*\.?[0-9]+"
+_REF_RE = re.compile(rb"(\d+)\s+\d+\s+R\b")
+_PAGES_TYPE = re.compile(rb"/Type\s*/Pages(?![A-Za-z0-9])")
+_PAGE_TYPE = re.compile(rb"/Type\s*/Page(?![A-Za-z0-9])")
+_MEDIABOX_RE = re.compile(
+    rb"/MediaBox\s*\[\s*(" + _NUM_RE + rb")\s+(" + _NUM_RE + rb")\s+("
+    + _NUM_RE + rb")\s+(" + _NUM_RE + rb")"
+)
+
+
+def _catalog(objects: dict) -> bytes:
+    """The document catalog's dict (lowest-numbered /Type /Catalog)."""
+    return next((dct for _n, (dct, _d) in sorted(objects.items())
+                 if re.search(rb"/Type\s*/Catalog(?![A-Za-z0-9])", dct)),
+                b"")
+
+
+def _pages(objects: dict
+           ) -> list[tuple[int, bytes, bytes | None, tuple[float, float]]]:
+    """(object number, page dict, /Resources, (y0, y1) of the MediaBox)
+    per page, in document order — the one page walk every extractor and
+    ``page_count`` share, so their page lists align index-for-index.
+
+    Depth-first from the catalog's /Pages through each node's bracketed
+    /Kids array (direct or one ``N g R`` away); refs elsewhere in a node,
+    such as /Parent, are not kids. /Resources and /MediaBox are
+    inheritable (ISO 32000-1 §7.7.3.4): a node's own value, else its
+    nearest ancestor's, else none and US-Letter (0, 792). The seen-set
+    makes a /Kids cycle or a shared kid visit once. A document whose tree
+    yields no page falls back to every /Type /Page object in
+    object-number order. The y1 edge is the content y-flip reference;
+    height is y1 - y0."""
+    def walk(nums: list[int]):
+        pages = []
+        seen: set[int] = set()
+        stack = [(n, None, (0.0, 792.0)) for n in reversed(nums)]
+        while stack:
+            num, res, box = stack.pop()
+            if num in seen:
+                continue
+            seen.add(num)
+            dct = objects.get(num, (b"", None))[0]
+            res = _deref(objects, _dict_value(dct, b"Resources")) or res
+            mb = _MEDIABOX_RE.search(dct)
+            if mb:
+                box = (float(mb.group(2)), float(mb.group(4)))
+            if _PAGES_TYPE.search(dct):
+                kids = _deref(objects, _dict_value(dct, b"Kids")) or b""
+                stack += [(int(k), res, box)
+                          for k in reversed(_REF_RE.findall(kids))]
+            elif _PAGE_TYPE.search(dct):
+                pages.append((num, dct, res, box))
+        return pages
+
+    root = _REF_RE.match(_dict_value(_catalog(objects), b"Pages") or b"")
+    return walk([int(root.group(1))] if root else []) or walk(
+        [n for n, (dct, _d) in sorted(objects.items())
+         if _PAGE_TYPE.search(dct)])
 
 
 def extract_page_images(blob: bytes) -> list[list[dict]]:
@@ -862,10 +892,9 @@ def extract_page_images(blob: bytes) -> list[list[dict]]:
         raise UnsupportedPdfError("not a PDF")
     objects = _parse_objects(blob)
     pages: list[list[dict]] = []
-    for num, dct in _page_dicts(objects):
+    for _num, _dct, res, _box in _pages(objects):
         page_no = len(pages) + 1
         imgs: list[dict] = []
-        res = _page_resources(num, dct, objects)
         xdict = _deref(objects, _dict_value(res, b"XObject")) if res else None
         if xdict:
             for nm in re.finditer(
@@ -912,24 +941,39 @@ def extract_page_images(blob: bytes) -> list[list[dict]]:
 
 def _page_content_data(page_dct: bytes, objects: dict) -> bytes | None:
     """Decoded, concatenated page content: single ``/Contents N g R``,
-    or an array of refs (streams joined with a newline per §7.8.2 —
+    or an array of refs, direct or itself behind one ``N g R`` (ISO
+    32000-1 Table 30; streams joined with a newline per §7.8.2 —
     multiple streams form ONE logical stream)."""
     val = _dict_value(page_dct, b"Contents")
     if val is None:
         return None
-    refs = [int(m.group(1))
-            for m in re.finditer(rb"(\d+)\s+\d+\s+R", val)]
+    ref = re.fullmatch(rb"(\d+)\s+\d+\s+R", val.strip())
+    if ref:
+        dct, data = objects.get(int(ref.group(1)), (b"", None))
+        if data is None and dct.lstrip().startswith(b"["):
+            val = dct
     parts = []
-    for r in refs:
-        cdct, cdata = objects.get(r, (b"", None))
+    for m in _REF_RE.finditer(val):
+        cdct, cdata = objects.get(int(m.group(1)), (b"", None))
         data = _decode_stream(cdct, cdata)
         if data is not None:
             parts.append(data)
     return b"\n".join(parts) if parts else None
 
 
+# ------------------------------------------------- content interpreter
+
 _STR_OR_HEX = re.compile(
     rb"\((?:\\.|[^\\()])*\)|<[0-9A-Fa-f\s]*>")
+_TOKEN_RE = re.compile(
+    rb"\((?:\\.|[^\\()])*\)"                      # string
+    rb"|<[0-9A-Fa-f\s]*>(?!<)"                    # hex string
+    rb"|\[(?:\\.|\((?:\\.|[^\\()])*\)|[^\]])*\]"  # TJ array
+    rb"|/[^\s/\[\]<>()]+"                         # name
+    rb"|" + _NUM_RE +                             # number
+    rb"|[A-Za-z'\"*]+"                            # operator
+)
+
 
 def _LATIN1(raw: bytes) -> str:
     return raw.decode("latin-1")
@@ -942,346 +986,185 @@ def _tok_to_bytes(tok: bytes) -> bytes:
     return _hex_bytes(tok)
 
 
-def _content_text_lines(content: bytes, fonts: dict | None = None
-                        ) -> list[str]:
-    """Evaluate text-showing operators in reading order of the stream.
-    Each Tj / ' / " emits onto the current line; T* / Td / TD / TL-driven
-    moves end the line (simple single-column model). String code bytes
-    (literal or hex) go through the CURRENT font's decoder — ToUnicode /
-    Type0 CID text decodes to real Unicode; simple fonts stay latin-1."""
-    fonts = fonts or {}
+def _text_ops(content: bytes, fonts: dict):
+    """Evaluate one page content stream's text operators in stream order.
+
+    Yields ``(text, x, y, size, visible)`` per string shown by Tj, TJ, '
+    or " inside BT…ET, and ``None`` where a line ends: at T*/Td/TD,
+    before ' and ", at ET and at the end of the stream. (x, y) is the
+    baseline origin in PDF user space, tracked through Tm/Td/TD/TL/T*;
+    ``size`` comes from Tf. String code bytes (literal or hex) go through
+    the current font's decoder — ToUnicode / Type0 CID text decodes to
+    real Unicode; simple fonts stay latin-1. ``visible`` is False while
+    the fill colour (g/rg/k, anywhere in the stream, saved and restored
+    by q/Q) is (near-)white — F2's invisible text (pdf_parser.py:178-184
+    ``_has_color``); stroke colour (G/RG/K) does not paint filled text."""
     decoder = _LATIN1
-    lines: list[str] = []
-    current: list[str] = []
-
-    def flush():
-        if current:
-            lines.append("".join(current))
-            current.clear()
-
-    # tokenize coarsely: string literals/hex strings, TJ arrays, names,
-    # operators
-    token_re = re.compile(
-        rb"\((?:\\.|[^\\()])*\)|<[0-9A-Fa-f\s]*>(?!<)"
-        rb"|\[(?:\\.|\((?:\\.|[^\\()])*\)|[^\]])*\]"
-        rb"|/[^\s/\[\]<>()]+|[A-Za-z'\"*]+"
-    )
     in_text = False
-    pending: str | None = None  # last string literal awaiting its operator
+    size = 11.0
+    x = y = tl = 0.0
+    nums: list[bytes] = []
+    pending: str | None = None  # last string awaiting its operator
     last_name: bytes | None = None
-    for m in token_re.finditer(content):
-        tok = m.group(0)
-        if tok == b"BT":
+    visible = True
+    saved: list[bool] = []
+    for m in _TOKEN_RE.finditer(content):
+        t = m.group(0)
+        c = t[:1]
+        if c == b"/":
+            last_name = t[1:]
+            continue
+        if c in b"+-.0123456789":
+            nums.append(t)
+            continue
+        if c == b"(" or c == b"<":
+            if in_text:
+                pending = decoder(_tok_to_bytes(t))
+            continue
+        if c == b"[":
+            if in_text:
+                yield ("".join(decoder(_tok_to_bytes(s))
+                               for s in _STR_OR_HEX.findall(t)),
+                       x, y, size, visible)
+                pending = None
+                nums.clear()
+            continue
+        if t == b"BT":
             in_text = True
-            continue
-        if tok == b"ET":
+        elif t == b"ET":
             in_text = False
-            flush()
-            continue
-        if tok.startswith(b"/"):
-            last_name = tok[1:]
-            continue
-        if not in_text:
-            continue
-        if tok.startswith(b"(") or tok.startswith(b"<"):
-            pending = decoder(_tok_to_bytes(tok))
-            continue
-        if tok.startswith(b"["):
-            # TJ array: concatenate its strings (kern numbers ignored)
-            current.append(
-                "".join(decoder(_tok_to_bytes(s))
-                        for s in _STR_OR_HEX.findall(tok))
-            )
-            pending = None
-            continue
-        if tok == b"Tf":
+            yield None
+        elif t == b"q":
+            saved.append(visible)
+        elif t == b"Q":
+            if saved:
+                visible = saved.pop()
+        elif t == b"g":
+            if nums:
+                visible = float(nums[-1]) < 0.95
+        elif t == b"rg":
+            if len(nums) >= 3:
+                visible = not all(float(v) >= 0.95 for v in nums[-3:])
+        elif t == b"k":
+            if len(nums) >= 4:
+                visible = not all(float(v) <= 0.05 for v in nums[-4:])
+        elif not in_text:  # the operators below act only inside BT…ET
+            pass
+        elif t == b"Tf":
+            if nums:
+                size = float(nums[-1])
             if last_name is not None and last_name in fonts:
                 decoder = fonts[last_name]
-        elif tok == b"Tj":
+        elif t == b"Tm":
+            if len(nums) >= 2:
+                x, y = float(nums[-2]), float(nums[-1])
+        elif t in (b"Td", b"TD"):
+            if len(nums) >= 2:
+                x += float(nums[-2])
+                y += float(nums[-1])
+                if t == b"TD":
+                    tl = -float(nums[-1])
+            yield None
+        elif t == b"TL":
+            if nums:
+                tl = float(nums[-1])
+        elif t == b"T*":
+            y -= tl
+            yield None
+        elif t == b"Tj":
             if pending is not None:
-                current.append(pending)
+                yield pending, x, y, size, visible
                 pending = None
-        elif tok in (b"'", b'"'):
-            flush()
+        elif t in (b"'", b'"'):
+            yield None
+            y -= tl
             if pending is not None:
-                current.append(pending)
+                yield pending, x, y, size, visible
                 pending = None
-        elif tok in (b"T*", b"Td", b"TD"):
-            flush()
-    flush()
-    return lines
+        nums.clear()
+    yield None
 
 
 def extract_text_lines(blob: bytes) -> list[list[str]]:
-    """Per-page text lines for the simple-text-PDF subset."""
+    """Per-page text lines for the simple-text-PDF subset: the strings
+    shown between two line ends, joined — empty and invisible strings
+    included, as PlainParser's pypdf ``extract_text`` keeps them."""
     if not blob.startswith(b"%PDF"):
         raise UnsupportedPdfError("not a PDF")
     objects = _parse_objects(blob)
-    # find page objects in /Kids order when possible
-    page_order: list[int] = []
-    for num, (dct, _data) in sorted(objects.items()):
-        if b"/Type /Pages" in dct or b"/Type/Pages" in dct:
-            for m in re.finditer(rb"(\d+)\s+\d+\s+R", dct.split(b"/Kids", 1)[-1]):
-                n = int(m.group(1))
-                if n in objects and n not in page_order:
-                    page_order.append(n)
-    if not page_order:
-        page_order = [
-            n for n, (dct, _d) in sorted(objects.items())
-            if b"/Type /Page" in dct or b"/Type/Page" in dct
-        ]
     pages: list[list[str]] = []
-    for pn in page_order:
-        dct, _d = objects.get(pn, (b"", None))
-        if b"/Type /Page" not in dct and b"/Type/Page" not in dct:
-            continue
+    for _num, dct, res, _box in _pages(objects):
         data = _page_content_data(dct, objects)
-        if data is None:
-            pages.append([])
-            continue
-        pages.append(_content_text_lines(data, _page_fonts(pn, dct, objects)))
+        lines: list[str] = []
+        current: list[str] = []
+        if data is not None:
+            for show in _text_ops(data, _page_fonts(res, objects)):
+                if show is not None:
+                    current.append(show[0])
+                elif current:
+                    lines.append("".join(current))
+                    current = []
+        pages.append(lines)
     if not pages:
         raise UnsupportedPdfError("no extractable pages")
     return pages
 
 
-# ------------------------------------------------------- box extraction
-
-_NUM_RE = rb"[-+]?[0-9]*\.?[0-9]+"
-
-
-def _content_boxes(content: bytes, page_height: float,
-                   fonts: dict | None = None) -> list[dict]:
-    """Positioned text boxes from one content stream. Tracks the text
-    cursor through Tf/Tm/Td/TD/TL/T* and converts the PDF bottom-left
-    origin to the reference's top-down box coordinates
-    (top = page_height - baseline_y - size; bottom = top + size ≈ ascent
-    box). x1 is estimated from a 0.5·size average glyph advance — the
-    deterministic stand-in for font metrics this heuristic backend uses."""
-    boxes: list[dict] = []
-    fonts = fonts or {}
-    decoder = _LATIN1
-    tok = re.compile(
-        rb"\((?:\\.|[^\\()])*\)"                 # string
-        rb"|<[0-9A-Fa-f\s]*>(?!<)"               # hex string
-        rb"|\[(?:\\.|\((?:\\.|[^\\()])*\)|[^\]])*\]"  # TJ array
-        rb"|/[^\s/\[\]<>()]+"                     # name
-        rb"|" + _NUM_RE +                         # number
-        rb"|[A-Za-z'\"*]+"                        # operator
-    )
-    in_text = False
-    size = 11.0
-    x = y = 0.0
-    tl = 0.0
-    stack_nums: list[float] = []
-    pending: str | None = None
-    last_name: bytes | None = None
-    fill_visible = True  # F2: white-on-white text is dropped at collection
-
-    def emit(text: str) -> None:
-        if not text or not fill_visible:
-            return
-        top = page_height - y - size
-        boxes.append({
-            "text": text,
-            "x0": x,
-            "x1": x + 0.5 * size * max(1, len(text)),
-            "top": top,
-            "bottom": top + size * 1.2,
-        })
-
-    for m in tok.finditer(content):
-        t = m.group(0)
-        if t == b"BT":
-            in_text = True
-            stack_nums.clear()
-            continue
-        if t == b"ET":
-            in_text = False
-            stack_nums.clear()
-            continue
-        if t.startswith(b"/"):
-            last_name = t[1:]
-            continue
-        if not in_text:
-            continue
-        if re.fullmatch(_NUM_RE, t):
-            stack_nums.append(float(t))
-            continue
-        if t.startswith(b"(") or t.startswith(b"<"):
-            pending = decoder(_tok_to_bytes(t))
-            continue
-        if t.startswith(b"["):
-            emit("".join(decoder(_tok_to_bytes(s))
-                         for s in _STR_OR_HEX.findall(t)))
-            pending = None
-            stack_nums.clear()
-            continue
-        # operators
-        if t == b"Tf":
-            if stack_nums:
-                size = stack_nums[-1]
-            if last_name is not None and last_name in fonts:
-                decoder = fonts[last_name]
-        elif t == b"Tm":
-            if len(stack_nums) >= 2:
-                x, y = stack_nums[-2], stack_nums[-1]
-        elif t in (b"Td", b"TD"):
-            if len(stack_nums) >= 2:
-                x += stack_nums[-2]
-                y += stack_nums[-1]
-                if t == b"TD":
-                    tl = -stack_nums[-1]
-        elif t == b"TL":
-            if stack_nums:
-                tl = stack_nums[-1]
-        # F2 invisible chars (pdf_parser.py:178-184 _has_color): text whose
-        # fill color is (near-)white never reaches the box stream. Gray /
-        # RGB / CMYK non-stroking color operators tracked; stroke color (G,
-        # RG, K) is irrelevant for fill-rendered text.
-        elif t == b"g":
-            if stack_nums:
-                fill_visible = stack_nums[-1] < 0.95
-        elif t == b"rg":
-            if len(stack_nums) >= 3:
-                fill_visible = not all(v >= 0.95 for v in stack_nums[-3:])
-        elif t == b"k":
-            if len(stack_nums) >= 4:
-                fill_visible = not all(v <= 0.05 for v in stack_nums[-4:])
-        elif t == b"T*":
-            y -= tl
-        elif t == b"Tj":
-            if pending is not None:
-                emit(pending)
-                pending = None
-        elif t in (b"'", b'"'):
-            y -= tl
-            if pending is not None:
-                emit(pending)
-                pending = None
-        stack_nums.clear()
-    return boxes
-
-
-def _page_order(objects: dict) -> list[int]:
-    """Page object numbers in document order (Kids walk, flat fallback)."""
-    page_order: list[int] = []
-    for num, (dct, _data) in sorted(objects.items()):
-        if b"/Type /Pages" in dct or b"/Type/Pages" in dct:
-            for m in re.finditer(rb"(\d+)\s+\d+\s+R", dct.split(b"/Kids", 1)[-1]):
-                n = int(m.group(1))
-                if n in objects and n not in page_order:
-                    page_order.append(n)
-    if not page_order:
-        page_order = [
-            n for n, (dct, _d) in sorted(objects.items())
-            if b"/Type /Page" in dct or b"/Type/Page" in dct
-        ]
-    return page_order
-
-
-_MEDIABOX_RE = re.compile(
-    rb"/MediaBox\s*\[\s*(" + _NUM_RE + rb")\s+(" + _NUM_RE + rb")\s+("
-    + _NUM_RE + rb")\s+(" + _NUM_RE + rb")"
-)
-
-
-def _page_ybox(dct: bytes, objects: dict,
-               page_num: int | None = None) -> tuple[float, float]:
-    """(y0, y1) of a page's MediaBox. MediaBox is an INHERITABLE page
-    attribute — when the page dict lacks one, the page's ACTUAL /Pages
-    ancestors supply it (nearest first, via the /Kids child→parent map —
-    a document can hold subtrees with different MediaBoxes); US-Letter
-    (0, 792) as last resort. Height is y1 - y0 and the content y-flip
-    reference is y1 (top edge), which only coincide when the origin sits
-    at 0."""
-    mb = _MEDIABOX_RE.search(dct)
-    if mb is None and page_num is not None:
-        parent_of: dict[int, int] = {}
-        for num, (pdct, _pd) in objects.items():
-            if b"/Type /Pages" in pdct or b"/Type/Pages" in pdct:
-                for m in re.finditer(
-                    rb"(\d+)\s+\d+\s+R", pdct.split(b"/Kids", 1)[-1]
-                ):
-                    parent_of.setdefault(int(m.group(1)), num)
-        seen: set[int] = set()
-        node = parent_of.get(page_num)
-        while node is not None and node not in seen:
-            seen.add(node)
-            pdct, _pd = objects.get(node, (b"", None))
-            mb = _MEDIABOX_RE.search(pdct)
-            if mb is not None:
-                break
-            node = parent_of.get(node)
-    if mb is None:
-        return 0.0, 792.0
-    return float(mb.group(2)), float(mb.group(4))
-
-
-def _page_dicts(objects: dict):
-    """(object number, page dict) in document order — THE shared walk
-    both the box extractor and the height scan use, so their lists stay
-    aligned index-for-index by construction."""
-    for pn in _page_order(objects):
-        dct, _d = objects.get(pn, (b"", None))
-        if b"/Type /Page" in dct or b"/Type/Page" in dct:
-            yield pn, dct
-
-
 def page_heights(blob: bytes) -> list[float]:
     """Real MediaBox height (y1 - y0) per page, aligned index-for-index
-    with ``extract_boxes``' pages list (same ``_page_dicts`` walk). The
+    with ``extract_boxes``' pages list (same ``_pages`` walk). The
     reference accumulates ACTUAL page heights into ``page_cum_height``
     (pdf_parser.py ``__images__``); callers that rebuild doc-absolute
     offsets (qa's has_qbullet spacing veto) need these rather than a
     pinned 792."""
     if not blob.startswith(b"%PDF"):
         raise UnsupportedPdfError("not a PDF")
-    objects = _parse_objects(blob)
-    return [
-        y1 - y0 for y0, y1 in
-        (_page_ybox(dct, objects, num)
-         for num, dct in _page_dicts(objects))
-    ]
+    return [y1 - y0 for _n, _d, _r, (y0, y1) in _pages(_parse_objects(blob))]
 
 
 def extract_boxes(blob: bytes) -> list[list[dict]]:
     """Per-page positioned text boxes (the heuristic stand-in for the OCR
-    box stream of SURVEY §2.8 V1/V2). Adds 1-based ``page_number``."""
+    box stream of SURVEY §2.8 V1/V2), one per visible non-empty shown
+    string, with 1-based ``page_number``. The PDF bottom-left origin
+    becomes the reference's top-down box coordinates against the
+    MediaBox top edge y1 (top = y1 - baseline_y - size; bottom = top +
+    1.2·size ≈ ascent box). x1 is estimated from a 0.5·size average
+    glyph advance — the deterministic stand-in for font metrics this
+    heuristic backend uses."""
     if not blob.startswith(b"%PDF"):
         raise UnsupportedPdfError("not a PDF")
     objects = _parse_objects(blob)
     pages: list[list[dict]] = []
-    for num, dct in _page_dicts(objects):
-        # y-flip reference is the MediaBox TOP edge (y1): top = y1 - y
-        _y0, page_h = _page_ybox(dct, objects, num)
+    for _num, dct, res, (_y0, y1) in _pages(objects):
         data = _page_content_data(dct, objects)
-        page_boxes = (
-            _content_boxes(data, page_h, _page_fonts(num, dct, objects))
-            if data is not None else []
-        )
-        for b in page_boxes:
-            b["page_number"] = len(pages) + 1
-        pages.append(page_boxes)
+        boxes: list[dict] = []
+        if data is not None:
+            for show in _text_ops(data, _page_fonts(res, objects)):
+                if show is None or not show[0] or not show[4]:
+                    continue
+                text, x, y, size, _visible = show
+                top = y1 - y - size
+                boxes.append({
+                    "text": text,
+                    "x0": x,
+                    "x1": x + 0.5 * size * len(text),
+                    "top": top,
+                    "bottom": top + size * 1.2,
+                    "page_number": len(pages) + 1,
+                })
+        pages.append(boxes)
     if not pages:
         raise UnsupportedPdfError("no extractable pages")
     return pages
 
 
 def page_count(blob: bytes) -> int:
-    """Page count from the object tree only — no content-stream decode
+    """Page count from the page tree only — no content-stream decode
     (the ``PdfParser.total_page_number`` role task splitting needs,
     api/db/services/task_service.py:164)."""
     if not blob.startswith(b"%PDF"):
         raise UnsupportedPdfError("not a PDF")
-    objects = _parse_objects(blob)
-    pat = re.compile(rb"/Type\s*/Page(?![a-zA-Z])")  # not /Pages
-    return sum(
-        1 for _n, (dct, _d) in objects.items() if pat.search(dct)
-    )
-
-
-_PDF_STR = re.compile(rb"\((?:\\.|[^\\()])*\)")
+    return len(_pages(_parse_objects(blob)))
 
 
 def extract_outlines(blob: bytes) -> list[tuple[str, int]]:
@@ -1293,15 +1176,10 @@ def extract_outlines(blob: bytes) -> list[tuple[str, int]]:
     if not blob.startswith(b"%PDF"):
         raise UnsupportedPdfError("not a PDF")
     objects = _parse_objects(blob)
-    root = None
-    for _num, (dct, _data) in sorted(objects.items()):
-        if b"/Type /Catalog" in dct or b"/Type/Catalog" in dct:
-            m = re.search(rb"/Outlines\s+(\d+)\s+\d+\s+R", dct)
-            if m:
-                root = int(m.group(1))
-            break
-    if root is None:
+    m = re.search(rb"/Outlines\s+(\d+)\s+\d+\s+R", _catalog(objects))
+    if m is None:
         return []
+    root = int(m.group(1))
     out: list[tuple[str, int]] = []
     seen: set[int] = set()
 

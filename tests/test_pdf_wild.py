@@ -9,6 +9,8 @@ format is fixed by the PDF spec, not by the extractor under test."""
 import random
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from ragflow_spark.core import pdf_mini
 
@@ -192,6 +194,178 @@ def test_contents_array_concatenation():
     out += b"trailer\n<< /Size 7 /Root 6 0 R >>\n%%EOF\n"
     assert pdf_mini.extract_text_lines(bytes(out)) == [
         ["part one", "part two"]]
+
+
+def _hand_pdf(objs: dict[int, bytes], root: int) -> bytes:
+    out = bytearray(b"%PDF-1.4\n")
+    for num, body in sorted(objs.items()):
+        out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
+    out += f"trailer\n<< /Root {root} 0 R >>\n%%EOF\n".encode()
+    return bytes(out)
+
+
+def _stream(data: bytes) -> bytes:
+    return (b"<< /Length " + str(len(data)).encode() + b" >>\nstream\n"
+            + data + b"\nendstream")
+
+
+_HELVETICA = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+
+def _texts(blob: bytes) -> list[list[str]]:
+    return [[b["text"] for b in pg] for pg in pdf_mini.extract_boxes(blob)]
+
+
+def test_contents_indirect_array():
+    # /Contents 4 0 R where object 4 is the ARRAY [2 0 R 3 0 R], not a
+    # stream (ISO 32000-1 Table 30 allows either)
+    blob = _hand_pdf({
+        1: _HELVETICA,
+        2: _stream(b"BT\n/F1 11 Tf\n1 0 0 1 72 770 Tm\n13 TL\n"
+                   b"(part one) Tj\nT*"),
+        3: _stream(b"(part two) Tj\nET"),
+        4: b"[2 0 R 3 0 R]",
+        5: b"<< /Type /Page /Parent 6 0 R"
+           b" /Resources << /Font << /F1 1 0 R >> >> /Contents 4 0 R >>",
+        6: b"<< /Type /Pages /Kids [5 0 R] /Count 1 >>",
+        7: b"<< /Type /Catalog /Pages 6 0 R >>",
+    }, 7)
+    assert pdf_mini.extract_text_lines(blob) == [["part one", "part two"]]
+    assert _texts(blob) == [["part one", "part two"]]
+
+
+def test_nested_pages_node_keeps_order_and_count():
+    # root 5 → [inner /Pages 6, page 4]; inner 6 → [page 3]: the
+    # intermediate node is not a page, and 3 comes before 4
+    blob = _hand_pdf({
+        1: _HELVETICA,
+        2: _stream(b"BT /F1 11 Tf 1 0 0 1 72 700 Tm (first page) Tj ET"),
+        7: _stream(b"BT /F1 11 Tf 1 0 0 1 72 700 Tm (second page) Tj ET"),
+        3: b"<< /Type /Page /Parent 6 0 R /Contents 2 0 R >>",
+        4: b"<< /Type /Page /Parent 5 0 R /Contents 7 0 R >>",
+        5: b"<< /Type /Pages /Kids [6 0 R 4 0 R] /Count 2"
+           b" /Resources << /Font << /F1 1 0 R >> >> >>",
+        6: b"<< /Type /Pages /Kids [3 0 R] /Count 1 /Parent 5 0 R >>",
+        8: b"<< /Type /Catalog /Pages 5 0 R >>",
+    }, 8)
+    assert _texts(blob) == [["first page"], ["second page"]]
+    assert pdf_mini.extract_text_lines(blob) == [["first page"],
+                                                 ["second page"]]
+    assert pdf_mini.page_count(blob) == 2
+    assert pdf_mini.page_heights(blob) == [792.0, 792.0]
+
+
+@st.composite
+def _page_trees(draw):
+    """A random page tree as a PDF, its expected page labels in
+    depth-first order and each page's inherited MediaBox height.
+
+    Fan-out 1-4, depth ≤ 3, shuffled object numbers, /Parent and an
+    indirect /Resources written after /Kids, /MediaBox and /Resources
+    only on /Pages nodes, one orphan /Page outside the tree and one
+    /Kids self-cycle."""
+    def node(depth):
+        kids = [node(depth + 1) if depth < 2 and draw(st.booleans())
+                else None for _ in range(draw(st.integers(1, 4)))]
+        return {"kids": kids, "res": draw(st.booleans()),
+                "h": draw(st.one_of(st.none(), st.integers(100, 999)))}
+
+    root = node(0)
+    inner = [root]
+    for n in inner:  # grows while iterated: every /Pages node
+        inner += [k for k in n["kids"] if k is not None]
+    n_leaves = sum(k is None for n in inner for k in n["kids"])
+    # inner nodes, leaf pages + their streams, font, resources, orphan
+    # page + its stream, catalog
+    nums = iter(draw(st.permutations(
+        range(1, len(inner) + 2 * n_leaves + 6))))
+    font, res, orphan, orphan_c, catalog = (next(nums) for _ in range(5))
+    for n in inner:
+        n["num"] = next(nums)
+    cycle = draw(st.sampled_from(inner))
+    objs = {font: _HELVETICA,
+            res: b"<< /Font << /F1 " + str(font).encode() + b" 0 R >> >>",
+            catalog: f"<< /Type /Catalog /Pages {root['num']} 0 R >>"
+            .encode(),
+            orphan: f"<< /Type /Page /Parent {root['num']} 0 R"
+                    f" /Contents {orphan_c} 0 R >>".encode(),
+            orphan_c: _stream(b"BT /F1 11 Tf 72 700 Td (orphan) Tj ET")}
+    labels, heights = [], []
+
+    def emit(n, parent, h):
+        h = n["h"] or h
+        refs = []
+        for k in n["kids"]:
+            if k is not None:
+                refs.append(k["num"])
+                emit(k, n["num"], h)
+                continue
+            page, content = next(nums), next(nums)
+            label = f"p{len(labels)}"
+            labels.append(label)
+            heights.append(float(h))
+            objs[content] = _stream(
+                f"BT /F1 11 Tf 72 700 Td ({label}) Tj ET".encode())
+            objs[page] = (f"<< /Type /Page /Parent {n['num']} 0 R"
+                          f" /Contents {content} 0 R >>").encode()
+            refs.append(page)
+        if n is cycle:
+            refs.insert(draw(st.integers(0, len(refs))), n["num"])
+        body = (f"<< /Type /Pages /Kids [{' '.join(f'{r} 0 R' for r in refs)}]"
+                f" /Count {len(refs)}")
+        if n["h"]:
+            body += f" /MediaBox [0 0 612 {n['h']}]"
+        if n["res"]:
+            body += f" /Resources {res} 0 R"
+        if parent is not None:
+            body += f" /Parent {parent} 0 R"
+        objs[n["num"]] = (body + " >>").encode()
+
+    emit(root, None, 792)
+    return _hand_pdf(objs, catalog), labels, heights
+
+
+@settings(max_examples=60, deadline=None)
+@given(_page_trees())
+def test_page_tree_walk_property(case):
+    blob, labels, heights = case
+    assert _texts(blob) == [[lb] for lb in labels]
+    assert pdf_mini.extract_text_lines(blob) == [[lb] for lb in labels]
+    assert pdf_mini.page_heights(blob) == heights
+    assert (pdf_mini.page_count(blob)
+            == len(pdf_mini.extract_page_images(blob)) == len(labels))
+
+
+def test_fill_colour_before_bt_hides_text():
+    # F2: a white fill set OUTSIDE BT…ET still paints the text after it
+    # white; only the box stream drops it (PlainParser keeps every string)
+    blob = _hand_pdf({
+        1: _HELVETICA,
+        2: _stream(b"1 g\nBT /F1 11 Tf 1 0 0 1 72 700 Tm (hidden white) Tj"
+                   b" ET\n0 g\nBT 1 0 0 1 72 600 Tm (visible black) Tj ET"),
+        3: b"<< /Type /Page /Parent 4 0 R"
+           b" /Resources << /Font << /F1 1 0 R >> >> /Contents 2 0 R >>",
+        4: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        5: b"<< /Type /Catalog /Pages 4 0 R >>",
+    }, 5)
+    assert _texts(blob) == [["visible black"]]
+    assert pdf_mini.extract_text_lines(blob) == [["hidden white",
+                                                  "visible black"]]
+
+
+def test_fill_colour_restored_by_q_Q():
+    # q 1 g … Q scopes the white fill: the black text after Q is kept
+    blob = _hand_pdf({
+        1: _HELVETICA,
+        2: _stream(b"q 1 g\nBT /F1 11 Tf 1 0 0 1 72 700 Tm (hidden white)"
+                   b" Tj ET\nQ\nBT 1 0 0 1 72 600 Tm (visible black) Tj"
+                   b" ET"),
+        3: b"<< /Type /Page /Parent 4 0 R"
+           b" /Resources << /Font << /F1 1 0 R >> >> /Contents 2 0 R >>",
+        4: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        5: b"<< /Type /Catalog /Pages 4 0 R >>",
+    }, 5)
+    assert _texts(blob) == [["visible black"]]
 
 
 def test_inherited_resources_from_pages_node():
