@@ -156,6 +156,7 @@ def _synthetic_map(seed, h=96, w=128):
     return pred
 
 
+@refstubs.requires_reference
 @pytest.mark.parametrize("seed", range(8))
 def test_db_postprocess_ab(ref_db, seed):
     pred = _synthetic_map(seed)[None, None, :, :]
@@ -171,7 +172,7 @@ def test_db_postprocess_ab(ref_db, seed):
     assert np.array_equal(pa, pb)
 
 
-def test_db_postprocess_scores_and_gates(ref_db):
+def test_db_postprocess_scores_and_gates():
     # the 0.35 blob passes thresh=0.3 but must fail box_thresh=0.5
     pred = _synthetic_map(3)
     ours = DBP.DBPostProcess(thresh=0.3, box_thresh=0.5, unclip_ratio=1.5)

@@ -13,6 +13,11 @@ import types
 
 import pytest
 
+sys.path.insert(0, "tests")
+import refstubs  # noqa: E402
+
+pytestmark = refstubs.requires_reference
+
 
 @pytest.fixture(scope="module")
 def ref():

@@ -30,6 +30,8 @@ import refstubs  # noqa: E402
 from ragflow_spark.core import pdf_mini  # noqa: E402
 from ragflow_spark.core.templates import run_template  # noqa: E402
 
+pytestmark = refstubs.requires_reference
+
 
 def _noop(*a, **k):
     pass

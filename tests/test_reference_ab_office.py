@@ -19,6 +19,8 @@ import refstubs  # noqa: E402
 from ragflow_spark.core.office import build_simple_docx  # noqa: E402
 from ragflow_spark.core.templates import run_template  # noqa: E402
 
+pytestmark = refstubs.requires_reference
+
 
 def _noop(*a, **k):
     pass

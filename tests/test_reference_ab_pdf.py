@@ -18,6 +18,8 @@ import refstubs  # noqa: E402
 
 from ragflow_spark.core import pdf_layout, tsr_lite, updown  # noqa: E402
 
+pytestmark = refstubs.requires_reference
+
 TEXTS = [
     "The quick brown fox,", "jumped over the dog.", "1. item starts",
     "因此，模型效果，", "显著提升。", "ends with period.", "(bracketed)",
