@@ -10,10 +10,9 @@ Ports the non-tabular halves of rag/app/qa.py:
   the answer, fenced code blocks are opaque.
 - ``qa_pairs_from_docx``     — Heading-N styles as question levels
   (qa.py:163-248 Docx.__call__), question paths joined with newlines.
-- ``has_qbullet`` / ``index_int`` — rag/nlp/__init__.py:80-138, with the
-  reference's w2n/cn2an/roman deps replaced by small embedded converters
-  (digits, 零一二三四五六七八九十百, I/V/X roman, ONE..TEN words — exactly
-  the ranges QUESTION_PATTERN can produce).
+- ``has_qbullet`` — rag/nlp/__init__.py:80-121; the question number it
+  captures goes through ``core.numbers.index_int``
+  (rag/nlp/__init__.py:122-138).
 
 Deviations (documented): answers from markdown render through
 ``md_to_html_lite`` (tables via the md table parser + <p> paragraphs)
@@ -24,6 +23,7 @@ from __future__ import annotations
 
 import re
 
+from ragflow_spark.core.numbers import index_int
 from ragflow_spark.core.patterns import qbullets_category
 
 __all__ = [
@@ -31,60 +31,6 @@ __all__ = [
     "qa_pairs_from_markdown", "qa_pairs_from_docx", "qa_pairs_from_pdf",
     "qbullets_category",
 ]
-
-_CN_DIG = {"零": 0, "一": 1, "二": 2, "三": 3, "四": 4,
-           "五": 5, "六": 6, "七": 7, "八": 8, "九": 9}
-_EN_WORDS = {"ONE": 1, "TWO": 2, "THREE": 3, "FOUR": 4, "FIVE": 5,
-             "SIX": 6, "SEVEN": 7, "EIGHT": 8, "NINE": 9, "TEN": 10}
-_ROMAN = {"I": 1, "V": 5, "X": 10}
-
-
-def _cn2int(s: str) -> int:
-    total, num, seen = 0, 0, False
-    for ch in s:
-        if ch in _CN_DIG:
-            num, seen = _CN_DIG[ch], True
-        elif ch == "十":
-            total += (num if seen and num else 1) * 10
-            num, seen = 0, True
-        elif ch == "百":
-            total += (num if seen and num else 1) * 100
-            num, seen = 0, True
-        else:
-            raise ValueError(s)
-    if not seen:
-        raise ValueError(s)
-    return total + num
-
-
-def _roman2int(s: str) -> int:
-    if not s or any(ch not in _ROMAN for ch in s):
-        raise ValueError(s)
-    total = 0
-    for i, ch in enumerate(s):
-        v = _ROMAN[ch]
-        if i + 1 < len(s) and _ROMAN[s[i + 1]] > v:
-            total -= v
-        else:
-            total += v
-    return total
-
-
-def index_int(index_str: str) -> int:
-    """rag/nlp/__init__.py:123-138 ``index_int``: number in any of the
-    QUESTION_PATTERN capture shapes → int, -1 when unparseable."""
-    for conv in (
-        int,
-        lambda s: _EN_WORDS[s.strip().upper()],
-        _cn2int,
-        lambda s: _roman2int(s.strip().upper()),
-    ):
-        try:
-            return conv(index_str)
-        except (ValueError, KeyError, TypeError):
-            continue
-    return -1
-
 
 def has_qbullet(reg: str, box: dict, last_box: dict, last_index,
                 last_bull, bull_x0_list: list):

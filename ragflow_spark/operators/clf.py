@@ -52,6 +52,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ragflow_spark.operators.lm import _round_half_away
+
 DEFAULT_BUCKETS = 4096
 
 
@@ -69,10 +71,6 @@ def token_buckets(text: Column, n_buckets: int = DEFAULT_BUCKETS) -> Column:
             ).cast("int"),
         )
     )
-
-
-def _round_half_away(x: np.ndarray) -> np.ndarray:
-    return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5))
 
 
 def _nb_model(cnt_rows, sizes: dict, n_buckets: int

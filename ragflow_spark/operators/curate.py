@@ -15,19 +15,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ragflow_spark.functions.text import (
-    fingerprint_md5,
-    punct_ratio,
-    token_count,
-)
+from ragflow_spark.functions.text import fingerprint_md5
 from ragflow_spark.operators.pii import pii_total
 from ragflow_spark.operators.textstats import (
     c4_line_columns,
     gopher_quality_columns,
-    lang_scores,
+    lang_columns,
+    quality_columns,
+    repetition_columns,
 )
-
-LANG_ORDER = ["en", "de", "es", "fr", "zh"]
 
 
 def curate(
@@ -63,51 +59,10 @@ def curate(
     shuffles; their standalone oracles gate the rules bit-exactly via
     doc_repetition / doc_quality."""
     c = F.col(text_col)
-    toks_arr = F.split(F.trim(F.lower(c)), r"\s+")
-    n = token_count(c)
-
-    # language: argmax of the stopword/CJK score vector (lang_id semantics)
-    s = lang_scores(c)
-    best = F.greatest(*[s[k] for k in LANG_ORDER])
-    pred = F.when(best <= 0, F.lit("und"))
-    for k in LANG_ORDER:
-        pred = pred.when(s[k] == best, F.lit(k))
-
-    # quality (C4 family, quality_features semantics)
-    mean_wordlen = F.round(
-        F.length(F.regexp_replace(c, r"\s+", "")).cast("double")
-        / F.greatest(n, F.lit(1)),
-        6,
-    )
-    pr = F.round(punct_ratio(c), 6)
-    quality_keep = (
-        (n >= 5) & (mean_wordlen >= 2.0) & (mean_wordlen <= 12.0) & (pr <= 0.3)
-    )
-
-    # repetition (Gopher family, repetition_signals semantics)
-    n_arr = F.size(toks_arr)
-    dup_word = F.round(
-        F.lit(1.0)
-        - F.size(F.array_distinct(toks_arr)).cast("double")
-        / F.greatest(n_arr, F.lit(1)),
-        6,
-    )
-    zipped = F.zip_with(
-        toks_arr,
-        F.slice(toks_arr, 2, F.greatest(n_arr - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    bigrams = F.slice(zipped, 1, F.greatest(n_arr - 1, F.lit(0)))
-    dup_bigram = F.round(
-        F.when(
-            n_arr >= 2,
-            F.lit(1.0)
-            - F.size(F.array_distinct(bigrams)).cast("double")
-            / (n_arr - 1).cast("double"),
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
-    repetition_keep = (dup_word <= max_dup_word) & (dup_bigram <= max_dup_bigram)
+    # the standalone operators' builders (lang_id / quality_features /
+    # repetition_signals): one definition per signal
+    quality = quality_columns(c)
+    repetition = repetition_columns(c, max_dup_word, max_dup_bigram)
 
     url_keep_col = []
     if url_col is not None:
@@ -133,11 +88,11 @@ def curate(
 
     staged = df.select(
         F.col(id_col),
-        n.alias("n_tokens"),
-        pred.alias("pred_lang"),
+        quality["n_tokens"].alias("n_tokens"),
+        lang_columns(c)["pred_lang"].alias("pred_lang"),
         *url_keep_col,
-        quality_keep.alias("_qk"),
-        repetition_keep.alias("_rk"),
+        quality["quality_keep"].alias("_qk"),
+        repetition["repetition_keep"].alias("_rk"),
         # auditable PII volume (r7): counts only, masking is a separate
         # pii_scrub pass — curation reports how much redaction the kept
         # set would need, it does not mutate text

@@ -47,65 +47,73 @@ def lang_scores(col):
     return out
 
 
-def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """N-gram/stopword-heuristic language ID: argmax of the score vector,
-    'und' when every signal is zero. Deterministic tie-break by fixed
-    language order (en, de, es, fr, zh)."""
-    s = lang_scores(F.col(text_col))
-    order = ["en", "de", "es", "fr", "zh"]
-    best = F.greatest(*[s[k] for k in order])
+# fixed argmax tie-break order of the language predictor
+LANG_ORDER = ["en", "de", "es", "fr", "zh"]
+
+
+def lang_columns(col: Column) -> dict[str, Column]:
+    """The stopword/CJK language predictor as native columns:
+    ``score_<lang>`` per ``LANG_ORDER`` entry and ``pred_lang``, the
+    argmax of the score vector ('und' when every signal is zero; ties go
+    to the earlier language in ``LANG_ORDER``)."""
+    s = lang_scores(col)
+    best = F.greatest(*[s[k] for k in LANG_ORDER])
     pred = F.when(best <= 0, F.lit("und"))
-    for k in order:
+    for k in LANG_ORDER:
         pred = pred.when(s[k] == best, F.lit(k))
-    return df.select(
-        F.col(id_col),
-        *[s[k].alias(f"score_{k}") for k in order],
-        pred.alias("pred_lang"),
+    return {**{f"score_{k}": s[k] for k in LANG_ORDER}, "pred_lang": pred}
+
+
+def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """N-gram/stopword-heuristic language ID (``lang_columns``) as one
+    projection."""
+    cols = lang_columns(F.col(text_col))
+    return df.select(F.col(id_col), *[v.alias(k) for k, v in cols.items()])
+
+
+def quality_columns(text: Column) -> dict[str, Column]:
+    """Length / punctuation / stopword-density features and the boolean
+    C4-style ``quality_keep`` rule: ≥ 5 tokens, 2 ≤ mean word length
+    ≤ 12, punctuation ratio ≤ 0.3."""
+    toks = token_count(text)
+    nz = F.greatest(toks, F.lit(1))
+    mean_wordlen = F.round(
+        F.length(F.regexp_replace(text, r"\s+", "")).cast("double") / nz, 6
     )
+    pr = F.round(punct_ratio(text), 6)
+    return {
+        "n_tokens": toks,
+        "n_chars": char_count(text),
+        "mean_word_len": mean_wordlen,
+        "punct_ratio": pr,
+        "stopword_ratio": F.round(
+            stopword_hits(text, STOPWORDS["en"]).cast("double") / nz, 6
+        ),
+        "quality_keep": (
+            (toks >= 5)
+            & (mean_wordlen >= 2.0) & (mean_wordlen <= 12.0)
+            & (pr <= 0.3)
+        ),
+    }
 
 
 def quality_features(df: DataFrame, id_col: str, text_col: str,
                      include_c4_lines: bool = False,
                      passthrough: tuple = ()) -> DataFrame:
-    """Length / punctuation / stopword-density features + a composite
-    quality flag (the C4-style heuristic family). With
+    """Per-doc ``quality_columns`` with the keep flag as int. With
     ``include_c4_lines`` the C4 line-cleaning audit columns
     (``c4_line_columns``) ride the SAME projection — no join, no second
     scan. ``passthrough`` columns (names or Column exprs, e.g. a
     fingerprint over the text) ride the projection too, so downstream
     rollups never self-join the scan to get them back."""
     c = F.col(text_col)
-    toks = token_count(c)
-    chars = char_count(c)
-    mean_wordlen = F.round(
-        (F.length(F.regexp_replace(c, r"\s+", "")).cast("double"))
-        / F.greatest(toks, F.lit(1)),
-        6,
-    )
-    sw = F.round(
-        stopword_hits(c, STOPWORDS["en"]).cast("double") / F.greatest(toks, F.lit(1)),
-        6,
-    )
-    pr = F.round(punct_ratio(c), 6)
-    keep = (
-        (toks >= 5)
-        & (mean_wordlen >= 2.0) & (mean_wordlen <= 12.0)
-        & (pr <= 0.3)
-    )
-    extra = (
-        [v.alias(k) for k, v in c4_line_columns(c).items()]
-        if include_c4_lines
-        else []
-    )
+    cols = quality_columns(c)
+    cols["quality_keep"] = cols["quality_keep"].cast("int")
+    if include_c4_lines:
+        cols.update(c4_line_columns(c))
     return df.select(
         F.col(id_col),
-        toks.alias("n_tokens"),
-        chars.alias("n_chars"),
-        mean_wordlen.alias("mean_word_len"),
-        pr.alias("punct_ratio"),
-        sw.alias("stopword_ratio"),
-        keep.cast("int").alias("quality_keep"),
-        *extra,
+        *[v.alias(k) for k, v in cols.items()],
         *[F.col(p) if isinstance(p, str) else p for p in passthrough],
     )
 
@@ -194,17 +202,17 @@ def doc_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).drop("norm_text")
 
 
-def repetition_signals(df: DataFrame, id_col: str, text_col: str,
-                       max_dup_word: float = 0.3,
-                       max_dup_bigram: float = 0.2,
-                       include_gopher_quality: bool = False) -> DataFrame:
-    """Gopher-style repetition filters (Rae et al. 2021 §A1.1 family):
-    duplicate-word fraction, most-frequent-word fraction, duplicate-bigram
-    fraction, and a composite keep flag. All native array expressions —
+def repetition_columns(text: Column, max_dup_word: float,
+                       max_dup_bigram: float) -> dict[str, Column]:
+    """Gopher-style repetition signals (Rae et al. 2021 §A1.1 family)
+    over lowercase whitespace tokens: duplicate-word fraction,
+    most-frequent-word fraction, duplicate-bigram fraction, and the
+    boolean ``repetition_keep`` rule (dup-word ≤ ``max_dup_word`` and
+    dup-bigram ≤ ``max_dup_bigram``). All native array expressions —
     zero Python. The top-word count folds ONE pass over the sorted token
     array (longest equal-adjacent run), O(n log n) per row instead of the
     naive per-distinct filter scan (which measured ~5x slower at sf0.1)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(text)), r"\s+")
     n = F.size(toks)
     n_dist = F.size(F.array_distinct(toks))
     dup_word = F.round(
@@ -249,30 +257,32 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str,
         ).otherwise(F.lit(0.0)),
         6,
     )
-    extra = (
-        [
-            v.alias(k)
-            for cols in (
-                gopher_quality_columns(F.col(text_col)),
-                dup_line_columns(F.col(text_col)),
-                gopher_ngram_columns(F.col(text_col)),
-            )
-            for k, v in cols.items()
-        ]
-        if include_gopher_quality
-        else []
-    )
-    return df.select(
-        F.col(id_col),
-        n.alias("n_tokens"),
-        dup_word.alias("dup_word_frac"),
-        top_word.alias("top_word_frac"),
-        dup_bigram.alias("dup_bigram_frac"),
-        (
+    return {
+        "n_tokens": n,
+        "dup_word_frac": dup_word,
+        "top_word_frac": top_word,
+        "dup_bigram_frac": dup_bigram,
+        "repetition_keep": (
             (dup_word <= max_dup_word) & (dup_bigram <= max_dup_bigram)
-        ).cast("int").alias("repetition_keep"),
-        *extra,
-    )
+        ),
+    }
+
+
+def repetition_signals(df: DataFrame, id_col: str, text_col: str,
+                       max_dup_word: float = 0.3,
+                       max_dup_bigram: float = 0.2,
+                       include_gopher_quality: bool = False) -> DataFrame:
+    """Per-doc ``repetition_columns`` with the keep flag as int. With
+    ``include_gopher_quality`` the Gopher quality, duplicate line/paragraph
+    and n-gram columns ride the same projection."""
+    c = F.col(text_col)
+    cols = repetition_columns(c, max_dup_word, max_dup_bigram)
+    cols["repetition_keep"] = cols["repetition_keep"].cast("int")
+    if include_gopher_quality:
+        cols.update(gopher_quality_columns(c))
+        cols.update(dup_line_columns(c))
+        cols.update(gopher_ngram_columns(c))
+    return df.select(F.col(id_col), *[v.alias(k) for k, v in cols.items()])
 
 
 def _dup_unit_fracs(units: Column, text_len: Column) -> tuple[Column, Column]:

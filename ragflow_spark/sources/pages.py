@@ -78,20 +78,12 @@ def _sentences(rng: random.Random, n: int, zh: bool = False) -> list[str]:
     return out
 
 
-import os as _os
-
-# experiment knob: scales every doc's sentence count (default 1 = the
-# deterministic fixture distribution; benches may raise it to emulate
-# realistic 30-100 KB web pages)
-DOC_SCALE = int(_os.environ.get("SPARK_GRAFT_DOC_SCALE", "1"))
-
-
 def _doc_size_sentences(doc_id: int, rng: random.Random) -> int:
     if doc_id % 2003 == 1000:
         return rng.randint(8000, 16000)   # ~1-2 MB giant
     if doc_id % 211 == 13:
-        return rng.randint(800, 3200) * DOC_SCALE  # ~100-400 KB big
-    return rng.randint(8, 80) * DOC_SCALE          # normal page
+        return rng.randint(800, 3200)  # ~100-400 KB big
+    return rng.randint(8, 80)          # normal page
 
 
 def _html_doc(rng: random.Random, sents: list[str], zh: bool) -> bytes:

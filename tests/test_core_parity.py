@@ -378,6 +378,13 @@ def test_index_int_chain():
     assert index_int("IX") == 9
     assert index_int("XIV") == 14
     assert index_int("not a number") == -1
+    # QUESTION_PATTERN capture shapes the QA-PDF path feeds it
+    assert index_int("SEVEN") == 7
+    assert index_int("TEN") == 10
+    assert index_int("VIII") == 8
+    assert index_int("XI") == 11
+    assert index_int("十二") == 12
+    assert index_int("一百") == 100
 
 
 def test_qbullets_category():
