@@ -488,6 +488,20 @@ def compose_table_content(rows: list[list[str]]) -> list[str]:
     return ["\n".join(lines)]
 
 
+# every member of the fixture writers gets this timestamp (the zip epoch):
+# ``writestr`` with a bare name stamps the wall clock, and the writers'
+# bytes must be a pure function of their input
+_ZIP_DATE_TIME = (1980, 1, 1, 0, 0, 0)
+
+
+def _writestr(zf: zipfile.ZipFile, name: str, data: str) -> None:
+    info = zipfile.ZipInfo(name, _ZIP_DATE_TIME)
+    # what writestr gives a bare name; a bare ZipInfo would be ZIP_STORED
+    info.compress_type = zf.compression
+    info.external_attr = 0o600 << 16
+    zf.writestr(info, data)
+
+
 def build_simple_docx(paragraphs: list[tuple[str, str]],
                       tables: list[list[list[str]]] | None = None) -> bytes:
     """Deterministic minimal DOCX writer: (text, style) paragraphs + tables."""
@@ -522,13 +536,13 @@ def build_simple_docx(paragraphs: list[tuple[str, str]],
         parts.append(f"<w:tbl>{rows}</w:tbl>")
     buf = BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr(
-            "[Content_Types].xml",
+        _writestr(
+            zf, "[Content_Types].xml",
             '<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
             '<Default Extension="xml" ContentType="application/xml"/></Types>',
         )
-        zf.writestr(
-            "word/document.xml",
+        _writestr(
+            zf, "word/document.xml",
             f'<?xml version="1.0"?><w:document xmlns:w="{w}"><w:body>'
             + "".join(parts) + "</w:body></w:document>",
         )
@@ -541,8 +555,8 @@ def build_simple_xlsx(sheets: dict[str, list[list]]) -> bytes:
     """Deterministic minimal XLSX writer (inline strings) for fixtures."""
     buf = BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr(
-            "[Content_Types].xml",
+        _writestr(
+            zf, "[Content_Types].xml",
             '<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
             '<Default Extension="xml" ContentType="application/xml"/>'
             '<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
@@ -552,8 +566,8 @@ def build_simple_xlsx(sheets: dict[str, list[list]]) -> bytes:
             f'<sheet name="{name}" sheetId="{i + 1}" r:id="rId{i + 1}"/>'
             for i, name in enumerate(sheets)
         )
-        zf.writestr(
-            "xl/workbook.xml",
+        _writestr(
+            zf, "xl/workbook.xml",
             '<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
             'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
             f"<sheets>{sheet_tags}</sheets></workbook>",
@@ -573,8 +587,8 @@ def build_simple_xlsx(sheets: dict[str, list[list]]) -> bytes:
                             f'<c r="{col}{ri}" t="inlineStr"><is><t>{val}</t></is></c>'
                         )
                 xml_rows.append(f'<row r="{ri}">' + "".join(cells) + "</row>")
-            zf.writestr(
-                f"xl/worksheets/sheet{si}.xml",
+            _writestr(
+                zf, f"xl/worksheets/sheet{si}.xml",
                 '<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
                 f"<sheetData>{''.join(xml_rows)}</sheetData></worksheet>",
             )
@@ -626,15 +640,15 @@ def build_simple_pptx(slides: list[list]) -> bytes:
         return f"<p:sp><p:spPr>{xfrm}</p:spPr>{_body(spec['text'])}</p:sp>"
 
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr(
-            "[Content_Types].xml",
+        _writestr(
+            zf, "[Content_Types].xml",
             '<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
             '<Default Extension="xml" ContentType="application/xml"/></Types>',
         )
         for i, specs in enumerate(slides, start=1):
             shapes = "".join(_shape(s, j) for j, s in enumerate(specs))
-            zf.writestr(
-                f"ppt/slides/slide{i}.xml",
+            _writestr(
+                zf, f"ppt/slides/slide{i}.xml",
                 f'<?xml version="1.0"?><p:sld xmlns:p="{p}" xmlns:a="{a}">'
                 f"<p:cSld><p:spTree>{shapes}</p:spTree></p:cSld></p:sld>",
             )

@@ -637,38 +637,30 @@ def _decode_stream(dict_part: bytes, data: bytes | None) -> bytes | None:
     return data
 
 
+_PDF_ESCAPES = {
+    ord("n"): b"\n", ord("r"): b"\r", ord("t"): b"\t", ord("b"): b"\b",
+    ord("f"): b"\f", ord("("): b"(", ord(")"): b")", ord("\\"): b"\\",
+}
+# a backslash and what it escapes: up to 3 octal digits, else one byte
+_PDF_ESCAPE_RE = re.compile(rb"\\([0-7]{1,3}|.)", re.S)
+
+
+def _pdf_unescape_one(m: re.Match) -> bytes:
+    esc = m.group(1)
+    if 0x30 <= esc[0] <= 0x37:
+        return bytes([int(esc, 8) & 0xFF])
+    # unknown escapes drop the backslash and keep the byte
+    return _PDF_ESCAPES.get(esc[0], esc)
+
+
 def _pdf_unescape_bytes(raw: bytes) -> bytes:
     """Literal-string escape removal only — returns the raw CODE BYTES so
-    a font decoder (ToUnicode / Type0) can interpret multi-byte codes."""
-    out = bytearray()
-    i = 0
-    while i < len(raw):
-        b = raw[i]
-        if b == 0x5C and i + 1 < len(raw):  # backslash
-            nxt = raw[i + 1]
-            mapping = {
-                ord("n"): b"\n", ord("r"): b"\r", ord("t"): b"\t",
-                ord("b"): b"\b", ord("f"): b"\f", ord("("): b"(",
-                ord(")"): b")", ord("\\"): b"\\",
-            }
-            if nxt in mapping:
-                out += mapping[nxt]
-                i += 2
-                continue
-            if 0x30 <= nxt <= 0x37:  # octal escape, up to 3 digits
-                j = i + 1
-                digits = b""
-                while j < len(raw) and len(digits) < 3 and 0x30 <= raw[j] <= 0x37:
-                    digits += bytes([raw[j]])
-                    j += 1
-                out.append(int(digits, 8) & 0xFF)
-                i = j
-                continue
-            i += 1
-            continue
-        out.append(b)
-        i += 1
-    return bytes(out)
+    a font decoder (ToUnicode / Type0) can interpret multi-byte codes.
+    Most strings hold no backslash and come back unchanged; a trailing
+    backslash is kept."""
+    if b"\\" not in raw:
+        return raw
+    return _PDF_ESCAPE_RE.sub(_pdf_unescape_one, raw)
 
 
 def _pdf_unescape(raw: bytes) -> str:

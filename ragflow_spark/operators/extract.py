@@ -23,8 +23,11 @@ The plan is built in one place, ``_stage`` (prune, cap, partition_id) then
 ``extract_chunks`` over a batch DataFrame, the same call over a
 ``readStream`` DataFrame (the streaming path — exactly-once from the sink
 checkpoint plus the deterministic ids), and ``run_extraction_job``, which
-adds only its noindex and resume filters between the two steps and
-hands the shuffle the partition ids it kept.
+adds only its noindex and resume filters between the two steps, hands
+the shuffle the partition ids it kept, and hands the UDF the manifest
+accumulator: each task reports its per-partition doc/chunk/byte counts
+and content-hash XOR, so the job's manifest rows come out of the write
+job itself, with no readback of the chunk table.
 
 Per-document failures NEVER kill the job: a failing doc emits one row with
 ``error`` set and chunk_idx = -1 (the 100 TB contract — one malformed PDF
@@ -103,18 +106,26 @@ CHUNKS_SCHEMA = (
 )
 
 
-def _extract_batches(batches, template_cfg: dict | None = None) -> Iterator:
+def _extract_batches(batches, template_cfg: dict | None = None,
+                     stats=None) -> Iterator:
     """Executor-side worker. Imports the parity core lazily so the module
     ships cleanly via --py-files; template dispatch per row, Arrow batch in,
     Arrow batch out. ``template_cfg`` is the job-level parser config
     (the reference's per-task ``parser_config``, task_executor.py) — e.g.
-    ``{"ocr_backend": "fake"}`` to enable the scanned-PDF OCR fallback."""
+    ``{"ocr_backend": "fake"}`` to enable the scanned-PDF OCR fallback.
+
+    ``stats``, when given, is the job's manifest accumulator
+    (``plans.manifest.TaskStatsParam``): every emitted row is folded into
+    this task's per-partition summary, added once after the last batch."""
     import gzip
     import zlib
 
     import pandas as pd
 
     from ragflow_spark.core.templates import run_template
+    from ragflow_spark.plans.manifest import add_chunk_stats, task_stats
+
+    state: dict = {}
 
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in (
@@ -176,7 +187,13 @@ def _extract_batches(batches, template_cfg: dict | None = None) -> Iterator:
                     )
             except Exception as exc:  # per-doc failure isolation
                 emit(row, -1, "", "", [], "", f"{type(exc).__name__}: {exc}")
+        if stats is not None:
+            add_chunk_stats(state, out)
         yield pd.DataFrame(out)
+    if stats is not None:
+        from pyspark import TaskContext
+
+        stats.add(task_stats(TaskContext.get().partitionId(), state))
 
 
 def _stage(pages: DataFrame, num_partitions: int) -> DataFrame:
@@ -190,13 +207,14 @@ def _stage(pages: DataFrame, num_partitions: int) -> DataFrame:
 
 def _parse(staged: DataFrame, num_partitions: int,
            template_cfg: dict | None,
-           pids: list[int] | None = None) -> DataFrame:
+           pids: list[int] | None = None, stats=None) -> DataFrame:
     """Partition-aligned shuffle, then the parity-core UDF. ``pids`` are
     the partition ids left in ``staged`` (default: all): each of the
     ``num_partitions`` tasks parses the docs of one of them — or of one
     sub-bucket of one, when fewer ids than tasks remain — plus its share
     of the giant lane, so its output lands in one ``partition_id``
-    directory of the sink.
+    directory of the sink. ``stats`` is the manifest accumulator handed
+    to ``_extract_batches`` (None outside ``run_extraction_job``).
 
     The shuffle always runs: scan splits bound BYTES, not parse COST —
     parse cost per byte varies 10-100× across formats, so byte-bounded
@@ -206,7 +224,7 @@ def _parse(staged: DataFrame, num_partitions: int,
     (``partition_id`` is itself a url hash) with giants on their own
     lane."""
     return partition_for_extract(staged, num_partitions, pids).mapInPandas(
-        lambda batches: _extract_batches(batches, template_cfg),
+        lambda batches: _extract_batches(batches, template_cfg, stats),
         schema=CHUNKS_SCHEMA,
     )
 
@@ -242,21 +260,24 @@ def run_extraction_job(
     """Full resumable job: resume decision → extract → write chunks (dynamic
     partition overwrite on partition_id) → append manifest.
 
-    The resume decision is a driver-side list of partition ids
+    Without a manifest (``plans.manifest.read_manifest`` returns None) the
+    job parses every partition with no pre-scan of the input. Otherwise
+    the resume decision is a driver-side list of partition ids
     (``plans.manifest.resume_partitions``, at most ``num_partitions``):
     the pages are filtered with ``isin`` on it, an empty list returns
-    before any write, the shuffle places rows by it (one writing task
-    per listed partition, or s = n // len(list) per partition), and the
-    manifest readback reuses it.
+    before any write, and the shuffle places rows by it (one writing task
+    per listed partition, or s = n // len(list) per partition).
+
+    The manifest rows come out of the write job itself: the UDF folds the
+    rows it emits into a per-task, per-partition accumulator
+    (``plans.manifest.TaskStatsParam``) and ``write_manifest`` appends
+    their per-partition sums — the chunk table is never read back.
 
     ``respect_noindex`` drops pages whose head carries a meta-robots
     noindex directive (``page_noindex``) — the filter rides the same
     scan as the size cap, before any parse work."""
-    from ragflow_spark.plans.manifest import (
-        read_manifest,
-        resume_partitions,
-        write_manifest,
-    )
+    # through the module at call time: callers may wrap these by name
+    from ragflow_spark.plans import manifest
 
     spark = pages.sparkSession
     if num_partitions is None:
@@ -265,12 +286,15 @@ def run_extraction_job(
     staged = _stage(pages, num_partitions)
     if respect_noindex:
         staged = staged.filter(~page_noindex(F.col("html")))
-    todo_pids = resume_partitions(
-        staged, read_manifest(spark, manifest_path), num_partitions)
-    if not todo_pids:
-        return
-    chunks = _parse(staged.filter(F.col("partition_id").isin(todo_pids)),
-                    num_partitions, template_cfg, todo_pids)
+    prior = manifest.read_manifest(spark, manifest_path)
+    todo_pids = None
+    if prior is not None:
+        todo_pids = manifest.resume_partitions(staged, prior, num_partitions)
+        if not todo_pids:
+            return
+        staged = staged.filter(F.col("partition_id").isin(todo_pids))
+    stats = spark.sparkContext.accumulator({}, manifest.TaskStatsParam())
+    chunks = _parse(staged, num_partitions, template_cfg, todo_pids, stats)
     # idempotent per-partition overwrite: rerunning a partition rewrites the
     # exact same deterministic rows, one file per parsing task that owns
     # it. A per-write option, so the caller's session keeps its own
@@ -281,11 +305,5 @@ def run_extraction_job(
         .partitionBy("partition_id")
         .parquet(out_path)
     )
-    # manifest only the partitions this attempt processed; the id list is
-    # bounded by num_partitions, so an isin() filter gives real partition
-    # pruning on the readback scan (a semi-join would read every partition)
-    written = spark.read.parquet(out_path).filter(
-        F.col("partition_id").isin(todo_pids)
-    )
-    write_manifest(written, manifest_path, attempt=attempt,
-                   num_partitions=num_partitions)
+    manifest.write_manifest(spark, stats.value, manifest_path,
+                            attempt=attempt, num_partitions=num_partitions)

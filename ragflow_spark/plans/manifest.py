@@ -4,16 +4,28 @@ The reference gets at-least-once resume from a Redis consumer group with
 manual ack (rag/svr/task_executor.py:137-188, 582-585). The Spark-native
 equivalent is a *manifest table* keyed by the data-derived ``partition_id``:
 
-- after the chunk table is written, a second aggregation job derives one
-  manifest row per partition: doc/chunk counts, bytes, an order-independent
-  content hash (bit_xor of per-chunk xxhash64), status='done';
+- the manifest is computed inside the chunk write job: the extraction UDF
+  folds every row it emits into a per-task partial state per partition
+  (distinct urls, rows, text bytes, XOR of ``spark_xxhash64`` over the
+  chunk ids — ``add_chunk_stats``) and hands it to a driver accumulator
+  keyed by (task, partition_id) whose merge replaces an entry, so a
+  retried or speculative task overwrites its own entry instead of
+  double-counting. ``write_manifest`` sums the entries per partition on
+  the driver (at most tasks × partitions of them) and appends one row per
+  partition — doc/chunk counts, bytes, the order-independent content hash,
+  status='done' — as a local relation: no readback or aggregation of the
+  chunk table. This is the mergeable partition summary of "Differential
+  Data Quality Verification on Partitioned Data" (ICDE 2019).
+  ``build_manifest`` is the same summary recomputed from the data, the
+  reference the tests hold the job's rows to;
 - a relaunch decides on the driver which partitions to process
   (``resume_partitions``): it collects the manifest (at most P rows per
   attempt) and one per-partition distinct-url count of the input (at most
   P rows), and skips a partition only while its latest done doc_count
   still equals the input's count. The job then filters the pages with
   ``partition_id IN (ids)``, returns before any write when the list is
-  empty, and manifests exactly those ids;
+  empty, and manifests exactly those ids. A run without a manifest skips
+  the count and parses every partition;
 - idempotency comes from deterministic chunk ids — ``md5(chunk_text||url)``
   mirrors the reference's ``md5(content + doc_id)``
   (rag/svr/task_executor.py:260-263) — so re-writing a partition produces
@@ -28,6 +40,9 @@ crash-consistency contract at-least-once semantics require.
 
 from __future__ import annotations
 
+import struct
+
+from pyspark.accumulators import AccumulatorParam
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +52,95 @@ MANIFEST_SCHEMA = (
     "content_hash string, status string, attempt int, num_partitions int, "
     "ts timestamp"
 )
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def spark_xxhash64(data: bytes) -> int:
+    """Spark's ``xxhash64()`` of one string or binary value (XXH64 over
+    its bytes — UTF-8 for a string — with Spark's seed 42) as a signed
+    64-bit int: the per-chunk term of the manifest's content hash."""
+    seed = 42
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, seed + _P2, seed,
+             (seed - _P1) & _M64]
+        while i <= n - 32:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_round(a, b) for a, b in zip(v, lanes)]
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl64(h ^ _round(0, k), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        (k,) = struct.unpack_from("<I", data, i)
+        h = (_rotl64(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def add_chunk_stats(state: dict, out: dict) -> None:
+    """Fold one batch of extraction rows (column lists keyed like
+    ``CHUNKS_SCHEMA``) into a task's partial manifest state,
+    ``{partition_id: [url set, chunk_count, bytes, content hash XOR]}`` —
+    ``build_manifest``'s four aggregates, kept mergeable."""
+    for pid, url, text, ch in zip(out["partition_id"], out["url"],
+                                  out["chunk_text"], out["content_hash"]):
+        s = state.get(pid)
+        if s is None:
+            s = state[pid] = [set(), 0, 0, 0]
+        if url is not None:
+            s[0].add(url)
+        s[1] += 1
+        s[2] += len(text)
+        s[3] ^= spark_xxhash64(ch.encode("utf-8"))
+
+
+def task_stats(task: int, state: dict) -> dict:
+    """One task's accumulator entries: ``{(task, partition_id):
+    (doc_count, chunk_count, bytes, hash)}``."""
+    return {(task, pid): (len(s[0]), s[1], s[2], s[3])
+            for pid, s in state.items()}
+
+
+class TaskStatsParam(AccumulatorParam):
+    """Dict accumulator whose merge replaces entries by key. Entries are
+    keyed by the task's partition index, so a retried or speculative
+    duplicate of a task overwrites its own entry, never adds to it."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        value1.update(value2)
+        return value1
 
 
 def build_manifest(chunks: DataFrame, attempt: int = 1,
@@ -68,10 +172,50 @@ def build_manifest(chunks: DataFrame, attempt: int = 1,
     )
 
 
-def write_manifest(chunks: DataFrame, path: str, attempt: int = 1,
+def write_manifest(spark: SparkSession, entries: dict, path: str,
+                   attempt: int = 1,
                    num_partitions: int | None = None) -> None:
-    build_manifest(chunks, attempt, num_partitions).write.mode(
-        "append").parquet(path)
+    """Append one manifest row per partition from the extraction UDF's
+    accumulator ``entries`` (``task_stats``), summed per partition on the
+    driver; the rows equal ``build_manifest`` over the written chunks.
+    An empty ``entries`` appends nothing.
+
+    ``doc_count`` sums each task's distinct urls. That is exact because
+    ``partition_for_extract`` places every row of a url on one task —
+    except a url staged twice with one payload at or above ``GIANT_BYTES``
+    and one below, which counts once per lane; resume then re-parses its
+    partition, and the chunk table stays correct."""
+    import pyarrow as pa
+
+    parts: dict[int, list] = {}
+    for (_task, pid), (docs, chunks, nbytes, h) in entries.items():
+        p = parts.setdefault(pid, [0, 0, 0, 0])
+        p[0] += docs
+        p[1] += chunks
+        p[2] += nbytes
+        p[3] ^= h
+    if not parts:
+        return
+    pids = sorted(parts)
+    cols = list(zip(*(parts[p] for p in pids)))
+    n = len(pids)
+    table = pa.table({
+        "partition_id": pa.array(pids, pa.int32()),
+        "doc_count": pa.array(cols[0], pa.int64()),
+        "chunk_count": pa.array(cols[1], pa.int64()),
+        "bytes": pa.array(cols[2], pa.int64()),
+        # conv(bit_xor(...), 10, 16): the unsigned 64-bit hex spelling
+        "content_hash": [format(h & _M64, "X") for h in cols[3]],
+        "status": ["done"] * n,
+        "attempt": pa.array([attempt] * n, pa.int32()),
+        "num_partitions": pa.array(
+            [-1 if num_partitions is None else int(num_partitions)] * n,
+            pa.int32()),
+    })
+    rows = spark.createDataFrame(table).withColumn("ts", F.current_timestamp())
+    # one file per attempt: a local relation splits over up to one write
+    # task per core, and each extra file costs the append and later reads
+    rows.coalesce(1).write.mode("append").parquet(path)
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:

@@ -406,3 +406,27 @@ def test_docx_table_grids_expands_merged_cells():
         ["Region", "Sales", "Sales"],
         ["Region", "Q1", "Q2"],
     ]]
+
+
+def test_office_fixture_bytes_do_not_depend_on_the_clock(monkeypatch):
+    """make_doc is a pure function of doc_id: the docx/xlsx/pptx writers
+    stamp no wall-clock time into their zip members, and keep each member
+    deflated."""
+    import io
+    import time
+    import zipfile
+
+    from ragflow_spark.sources import pages as pages_src
+
+    ids = [4, 8, 9]  # docx, xlsx, pptx in the mixed cycle
+    assert [pages_src.make_doc(i)["fmt"] for i in ids] == [
+        "docx", "xlsx", "pptx"]
+    runs = []
+    for clock in (1_600_000_000.0, 1_700_000_123.0):
+        monkeypatch.setattr(time, "time", lambda c=clock: c)
+        runs.append([pages_src.make_doc(i)["html"] for i in ids])
+    assert runs[0] == runs[1]
+    for blob in runs[0]:
+        infos = zipfile.ZipFile(io.BytesIO(blob)).infolist()
+        assert infos and all(
+            i.compress_type == zipfile.ZIP_DEFLATED for i in infos)

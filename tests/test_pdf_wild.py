@@ -535,3 +535,60 @@ def test_plain_parse_cid_and_objstm_pdfs():
     assert [s for s, _ in secs] == ["中文一行"]
     secs = pdf_mini.plain_parse(pdf_mini.build_objstm_pdf([["packed"]]))
     assert [s for s, _ in secs] == ["packed"]
+
+
+# ------------------------------------------------- literal-string escapes
+
+
+def _unescape_loop(raw: bytes) -> bytes:
+    """The per-byte escape loop ``_pdf_unescape_bytes`` replaced: the
+    reference its output must equal byte for byte."""
+    out = bytearray()
+    i = 0
+    while i < len(raw):
+        b = raw[i]
+        if b == 0x5C and i + 1 < len(raw):
+            nxt = raw[i + 1]
+            mapping = {
+                ord("n"): b"\n", ord("r"): b"\r", ord("t"): b"\t",
+                ord("b"): b"\b", ord("f"): b"\f", ord("("): b"(",
+                ord(")"): b")", ord("\\"): b"\\",
+            }
+            if nxt in mapping:
+                out += mapping[nxt]
+                i += 2
+                continue
+            if 0x30 <= nxt <= 0x37:
+                j = i + 1
+                digits = b""
+                while (j < len(raw) and len(digits) < 3
+                       and 0x30 <= raw[j] <= 0x37):
+                    digits += bytes([raw[j]])
+                    j += 1
+                out.append(int(digits, 8) & 0xFF)
+                i = j
+                continue
+            i += 1
+            continue
+        out.append(b)
+        i += 1
+    return bytes(out)
+
+
+@pytest.mark.parametrize("raw", [
+    b"", b"plain text", b"a\\(b\\)c", b"tab\\tnl\\ncr\\rbs\\\\ff\\fbk\\b",
+    b"\\101\\102C", b"\\7", b"\\07", b"\\0777", b"\\400", b"\\8\\9",
+    b"\\1a\\12b\\123c\\1234", b"trailing\\", b"\\", b"\\\\\\",
+    b"\\q\\x\\ \\\n\\\r\\\xff", b"\xe9\xff\x00\\)",
+])
+def test_unescape_matches_byte_loop_on_edges(raw):
+    assert pdf_mini._pdf_unescape_bytes(raw) == _unescape_loop(raw)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.one_of(
+    st.sampled_from([b"\\", b"0", b"1", b"7", b"8", b"n", b"(", b")",
+                     b"t", b"\n", b"q", b"\xff"]),
+    st.binary(max_size=3)), max_size=24).map(b"".join))
+def test_unescape_matches_byte_loop(raw):
+    assert pdf_mini._pdf_unescape_bytes(raw) == _unescape_loop(raw)

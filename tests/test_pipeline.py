@@ -200,9 +200,7 @@ def test_manifest_and_resume(spark, pages_df, tmpdir_path):
     partial = extract_chunks(first_half, num_partitions=8)
     # partial extraction recomputes partition ids — they match the staged ones
     partial.write.mode("overwrite").partitionBy("partition_id").parquet(out)
-    from ragflow_spark.plans.manifest import write_manifest
-
-    write_manifest(spark.read.parquet(out), man)
+    build_manifest(spark.read.parquet(out)).write.parquet(man)
 
     # relaunch: full job with resume
     run_extraction_job(pages_df, out, man, num_partitions=8, attempt=2)
