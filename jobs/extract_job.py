@@ -11,13 +11,19 @@
 Resumable: relaunching with the same --manifest skips partitions already
 manifested as done (the driver collects the list of partition ids still to
 do and filters the pages with isin on it); chunk ids are deterministic
-(md5(chunk_text||url)) so per-partition overwrite is idempotent.
+(md5(chunk_text||url)) so replacing a partition's files is idempotent.
 
-Write layout: the task that parses a document owns its partition_id, so
-each attempt writes one parquet file per partition (plus at most one per
-giant document, which parse on their own scattered lane). When a resume
-re-runs only k of the partitions, each is split over --partitions // k
-tasks and gets that many files.
+Write layout: the parse tasks write the chunk files themselves (pyarrow,
+into a hidden ``<output>/_staging-<uuid>/`` dir) and the driver commits
+them: each re-run partition's files are replaced by the new ones, the
+others stay untouched, then the manifest rows are written from the
+counts the tasks reported. The task that parses a document owns its
+partition_id, so each attempt writes one parquet file per partition
+(plus at most one per giant document, which parse on their own scattered
+lane). When a resume re-runs only k of the partitions, each is split over
+--partitions // k tasks and gets that many files. --output and
+--manifest are URIs or local paths (a path without a scheme is local);
+one job writes to a given --output at a time.
 
 Build the zip with: python tools/package.py
 """

@@ -14,24 +14,31 @@ size-bucketed repartition from ``ragflow_spark.plans.partitioning``:
     chunks (url, warc_ts, chunk_idx, chunk_text, tag_text, spans, title,
             parser, fmt, content_hash, partition_id, error)
 
-Because the task that parses a document owns its ``partition_id``, the
-job's ``partitionBy("partition_id")`` write opens one file per partition
-(plus at most one per giant), not one per (task, partition).
-
 The plan is built in one place, ``_stage`` (prune, cap, partition_id) then
 ``_parse`` (shuffle, UDF), for every way the stage is driven:
 ``extract_chunks`` over a batch DataFrame, the same call over a
 ``readStream`` DataFrame (the streaming path — exactly-once from the sink
 checkpoint plus the deterministic ids), and ``run_extraction_job``, which
-adds only its noindex and resume filters between the two steps, hands
-the shuffle the partition ids it kept, and hands the UDF the manifest
-accumulator: each task reports its per-partition doc/chunk/byte counts
-and content-hash XOR, so the job's manifest rows come out of the write
-job itself, with no readback of the chunk table.
+adds only its noindex and resume filters between the two steps and hands
+the shuffle the partition ids it kept.
+
+In ``run_extraction_job`` the parse tasks write the chunk table
+themselves — the Iceberg/Delta writer model: tasks write data files and
+return their metadata, the driver commits. Each task writes the rows of
+every ``partition_id`` it holds with pyarrow into a hidden staging dir
+(``_write_chunk_files``) and returns one row per file: path, doc/chunk/
+byte counts and content-hash XOR. The driver collects those rows, swaps
+the reported files into their ``partition_id=k/`` directories
+(``_commit``) and writes the manifest from the same rows. So the chunk
+rows never cross into the JVM: no Arrow → row conversion, sort, Spark
+parquet encode, commit protocol or manifest job. Because the task that
+parses a document owns its ``partition_id``, a run adds one file per
+partition (plus at most one per giant), not one per (task, partition).
 
 Per-document failures NEVER kill the job: a failing doc emits one row with
 ``error`` set and chunk_idx = -1 (the 100 TB contract — one malformed PDF
-out of 10^12 docs must not fail a stage). ``content_hash`` =
+out of 10^12 docs must not fail a stage); a page without a url is one
+such row. ``content_hash`` =
 ``md5(chunk_text || url)`` mirrors the reference's deterministic chunk id
 (task_executor.py:260-263), making re-runs idempotent.
 
@@ -105,27 +112,31 @@ CHUNKS_SCHEMA = (
     "partition_id int, error string"
 )
 
+# the parse tasks' output in run_extraction_job: one row per chunk file
+# written, with the file's manifest summary (plans.manifest.add_chunk_stats)
+FILES_SCHEMA = (
+    "partition_id int, path string, doc_count long, chunk_count long, "
+    "bytes long, xor long"
+)
+# hidden from Spark's file listing (a leading "_"), so readers of the
+# chunk table never see uncommitted files
+STAGING_PREFIX = "_staging-"
 
-def _extract_batches(batches, template_cfg: dict | None = None,
-                     stats=None) -> Iterator:
+
+def _extract_batches(batches, template_cfg: dict | None = None) -> Iterator:
     """Executor-side worker. Imports the parity core lazily so the module
     ships cleanly via --py-files; template dispatch per row, Arrow batch in,
     Arrow batch out. ``template_cfg`` is the job-level parser config
     (the reference's per-task ``parser_config``, task_executor.py) — e.g.
     ``{"ocr_backend": "fake"}`` to enable the scanned-PDF OCR fallback.
-
-    ``stats``, when given, is the job's manifest accumulator
-    (``plans.manifest.TaskStatsParam``): every emitted row is folded into
-    this task's per-partition summary, added once after the last batch."""
+    A page without a url becomes one error row: its chunks would have no
+    id (``content_hash`` hashes the url)."""
     import gzip
     import zlib
 
     import pandas as pd
 
     from ragflow_spark.core.templates import run_template
-    from ragflow_spark.plans.manifest import add_chunk_stats, task_stats
-
-    state: dict = {}
 
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in (
@@ -134,6 +145,12 @@ def _extract_batches(batches, template_cfg: dict | None = None,
         )}
 
         def emit(row, idx, text, tag_text, spans, title, err):
+            # the only step that can raise runs before the first append, so
+            # a failing row never leaves the columns at different lengths
+            content_hash = (
+                hashlib.md5((text + row.url).encode("utf-8", "ignore"))
+                .hexdigest() if err is None else ""
+            )
             out["url"].append(row.url)
             out["warc_ts"].append(row.warc_ts)
             out["chunk_idx"].append(idx)
@@ -143,14 +160,14 @@ def _extract_batches(batches, template_cfg: dict | None = None,
             out["title"].append(title)
             out["parser"].append(row.parser)
             out["fmt"].append(row.fmt)
-            out["content_hash"].append(
-                hashlib.md5((text + row.url).encode("utf-8", "ignore")).hexdigest()
-                if err is None else ""
-            )
+            out["content_hash"].append(content_hash)
             out["partition_id"].append(row.partition_id)
             out["error"].append(err)
 
         for row in pdf.itertuples():
+            if row.url is None:
+                emit(row, -1, "", "", [], "", "NullUrl: page has no url")
+                continue
             try:
                 blob = bytes(row.html) if row.html is not None else b""
                 if blob[:2] == b"\x1f\x8b":
@@ -187,13 +204,117 @@ def _extract_batches(batches, template_cfg: dict | None = None,
                     )
             except Exception as exc:  # per-doc failure isolation
                 emit(row, -1, "", "", [], "", f"{type(exc).__name__}: {exc}")
-        if stats is not None:
-            add_chunk_stats(state, out)
         yield pd.DataFrame(out)
-    if stats is not None:
-        from pyspark import TaskContext
 
-        stats.add(task_stats(TaskContext.get().partitionId(), state))
+
+def _chunk_file_schema():
+    """The Arrow schema of a chunk file: ``CHUNKS_SCHEMA`` through Spark's
+    own Spark → Arrow type mapping, without ``partition_id`` (the
+    directory name carries it, as in a Spark ``partitionBy`` write).
+    Built on the driver: parsing the DDL needs the JVM."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = to_arrow_schema(DataType.fromDDL(CHUNKS_SCHEMA))
+    return schema.remove(schema.get_field_index("partition_id"))
+
+
+def _write_chunk_files(frames, fs, staging: str, schema,
+                       timezone: str) -> Iterator:
+    """Task-side sink of ``run_extraction_job``. Writes the chunk frames
+    that ``_extract_batches`` yields into one parquet file per
+    ``partition_id`` they hold, at
+    ``<staging>/partition_id=k/part-<task>-<attempt>-<uuid>.parquet``, and
+    after the last frame yields one ``FILES_SCHEMA`` row per file: its
+    partition, path and manifest summary (``add_chunk_stats``). Nothing
+    is visible in the table until the driver commits the reported files.
+
+    ``warc_ts`` arrives as session-local wall-clock time (Spark's Arrow →
+    pandas conversion); it is localized back to UTC with Spark's own rule
+    (``ambiguous=False``), so the file holds what a Spark write would."""
+    import uuid
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+
+    from ragflow_spark.plans.manifest import add_chunk_stats
+
+    ctx = TaskContext.get()
+    stem = (f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}-"
+            f"{uuid.uuid4().hex}.parquet")
+    writers: dict = {}
+    state: dict = {}
+    for df in frames:
+        if df.empty:
+            continue
+        add_chunk_stats(state, df)
+        cols = []
+        for f in schema:
+            s = df[f.name]
+            if pd.api.types.is_datetime64_dtype(s.dtype):
+                s = s.dt.tz_localize(timezone, ambiguous=False) \
+                    .dt.tz_convert("UTC")
+            cols.append(pa.Array.from_pandas(s, type=f.type, safe=False))
+        table = pa.Table.from_arrays(cols, schema=schema)
+        pids = df["partition_id"].to_numpy()
+        for pid in np.unique(pids):
+            pid = int(pid)
+            if pid not in writers:
+                part = f"{staging}/partition_id={pid}"
+                fs.create_dir(part)
+                path = f"{part}/{stem}"
+                writers[pid] = (path, pq.ParquetWriter(path, schema,
+                                                       filesystem=fs))
+            mask = pids == pid
+            writers[pid][1].write_table(
+                table if mask.all() else table.filter(mask))
+    if not writers:
+        return
+    for _path, w in writers.values():
+        w.close()
+    pids = sorted(writers)
+    yield pd.DataFrame({
+        "partition_id": pids,
+        "path": [writers[p][0] for p in pids],
+        "doc_count": [len(state[p][0]) for p in pids],
+        "chunk_count": [state[p][1] for p in pids],
+        "bytes": [state[p][2] for p in pids],
+        "xor": [state[p][3] for p in pids],
+    })
+
+
+def _commit(fs, root: str, files) -> None:
+    """Driver commit of one run's chunk files (``FILES_SCHEMA`` rows): the
+    files of each reported ``partition_id=k/`` are replaced by the
+    reported ones, partitions with no reported file stay untouched (a
+    dynamic partition overwrite), then every ``_staging-*`` dir — this
+    run's, with the files of failed or duplicate task attempts, and any
+    a killed run left — is deleted and ``_SUCCESS`` written."""
+    from pyarrow.fs import FileSelector, FileType
+
+    by_pid: dict[int, list[str]] = {}
+    for f in files:
+        by_pid.setdefault(f.partition_id, []).append(f.path)
+    for pid, paths in sorted(by_pid.items()):
+        part = f"{root}/partition_id={pid}"
+        fs.delete_dir_contents(part, missing_dir_ok=True)
+        fs.create_dir(part)
+        for path in paths:
+            fs.move(path, f"{part}/{path.rsplit('/', 1)[1]}")
+    fs.create_dir(root)
+    for info in fs.get_file_info(FileSelector(root)):
+        if (info.type == FileType.Directory
+                and info.base_name.startswith(STAGING_PREFIX)):
+            try:
+                fs.delete_dir(info.path)
+            except OSError:
+                # a killed speculative attempt may still be writing here;
+                # the dir stays hidden and the next commit deletes it
+                pass
+    fs.open_output_stream(f"{root}/_SUCCESS").close()
 
 
 def _stage(pages: DataFrame, num_partitions: int) -> DataFrame:
@@ -207,14 +328,16 @@ def _stage(pages: DataFrame, num_partitions: int) -> DataFrame:
 
 def _parse(staged: DataFrame, num_partitions: int,
            template_cfg: dict | None,
-           pids: list[int] | None = None, stats=None) -> DataFrame:
+           pids: list[int] | None = None, sink=None) -> DataFrame:
     """Partition-aligned shuffle, then the parity-core UDF. ``pids`` are
     the partition ids left in ``staged`` (default: all): each of the
     ``num_partitions`` tasks parses the docs of one of them — or of one
     sub-bucket of one, when fewer ids than tasks remain — plus its share
     of the giant lane, so its output lands in one ``partition_id``
-    directory of the sink. ``stats`` is the manifest accumulator handed
-    to ``_extract_batches`` (None outside ``run_extraction_job``).
+    directory of the sink. Without ``sink`` the UDF returns the chunk
+    rows (``CHUNKS_SCHEMA``); with ``sink = (fs, staging, schema,
+    timezone)`` it writes them itself (``_write_chunk_files``) and returns
+    one ``FILES_SCHEMA`` row per file.
 
     The shuffle always runs: scan splits bound BYTES, not parse COST —
     parse cost per byte varies 10-100× across formats, so byte-bounded
@@ -223,9 +346,16 @@ def _parse(staged: DataFrame, num_partitions: int,
     docs/s at 2.13 without (+26%); the placement stays url-hash balanced
     (``partition_id`` is itself a url hash) with giants on their own
     lane."""
-    return partition_for_extract(staged, num_partitions, pids).mapInPandas(
-        lambda batches: _extract_batches(batches, template_cfg, stats),
-        schema=CHUNKS_SCHEMA,
+    placed = partition_for_extract(staged, num_partitions, pids)
+    if sink is None:
+        return placed.mapInPandas(
+            lambda batches: _extract_batches(batches, template_cfg),
+            schema=CHUNKS_SCHEMA,
+        )
+    return placed.mapInPandas(
+        lambda batches: _write_chunk_files(
+            _extract_batches(batches, template_cfg), *sink),
+        schema=FILES_SCHEMA,
     )
 
 
@@ -257,8 +387,8 @@ def run_extraction_job(
     template_cfg: dict | None = None,
     respect_noindex: bool = False,
 ) -> None:
-    """Full resumable job: resume decision → extract → write chunks (dynamic
-    partition overwrite on partition_id) → append manifest.
+    """Full resumable job: resume decision → parse tasks write their chunk
+    files → driver commit (per-partition overwrite) → manifest.
 
     Without a manifest (``plans.manifest.read_manifest`` returns None) the
     job parses every partition with no pre-scan of the input. Otherwise
@@ -268,14 +398,29 @@ def run_extraction_job(
     before any write, and the shuffle places rows by it (one writing task
     per listed partition, or s = n // len(list) per partition).
 
-    The manifest rows come out of the write job itself: the UDF folds the
-    rows it emits into a per-task, per-partition accumulator
-    (``plans.manifest.TaskStatsParam``) and ``write_manifest`` appends
-    their per-partition sums — the chunk table is never read back.
+    Each parse task writes the rows of every ``partition_id`` it holds
+    into its own parquet file under ``<out>/_staging-<job uuid>/`` and
+    returns one row per file: the path plus the file's doc/chunk/byte
+    counts and content-hash XOR. The action is a ``collect`` of those
+    rows, which holds exactly one successful attempt per task, so the
+    files of a failed, retried or speculative attempt are never
+    committed or counted. The driver then replaces the files of each
+    reported ``partition_id=k/`` directory with the reported ones
+    (``_commit``; other partitions stay untouched), deletes the staging
+    dirs, and ``plans.manifest.write_manifest`` writes the per-partition
+    sums — the chunk rows never enter the JVM, and neither the chunk
+    table nor the manifest costs a Spark write job.
+
+    Every write, move and delete goes through one pyarrow filesystem,
+    ``plans.manifest.table_fs(out_path)``: a URI, or a local path (a path
+    without a scheme is local, made absolute on the driver). One writer
+    per chunk table at a time, as with Spark's dynamic overwrite.
 
     ``respect_noindex`` drops pages whose head carries a meta-robots
     noindex directive (``page_noindex``) — the filter rides the same
     scan as the size cap, before any parse work."""
+    import uuid
+
     # through the module at call time: callers may wrap these by name
     from ragflow_spark.plans import manifest
 
@@ -293,17 +438,12 @@ def run_extraction_job(
         if not todo_pids:
             return
         staged = staged.filter(F.col("partition_id").isin(todo_pids))
-    stats = spark.sparkContext.accumulator({}, manifest.TaskStatsParam())
-    chunks = _parse(staged, num_partitions, template_cfg, todo_pids, stats)
-    # idempotent per-partition overwrite: rerunning a partition rewrites the
-    # exact same deterministic rows, one file per parsing task that owns
-    # it. A per-write option, so the caller's session keeps its own
-    # partitionOverwriteMode.
-    (
-        chunks.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(out_path)
-    )
-    manifest.write_manifest(spark, stats.value, manifest_path,
-                            attempt=attempt, num_partitions=num_partitions)
+    fs, root = manifest.table_fs(out_path)
+    sink = (fs, f"{root}/{STAGING_PREFIX}{uuid.uuid4().hex}",
+            _chunk_file_schema(),
+            spark.conf.get("spark.sql.session.timeZone"))
+    files = _parse(staged, num_partitions, template_cfg, todo_pids,
+                   sink).collect()
+    _commit(fs, root, files)
+    manifest.write_manifest(files, manifest_path, attempt=attempt,
+                            num_partitions=num_partitions)

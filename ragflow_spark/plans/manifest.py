@@ -4,20 +4,21 @@ The reference gets at-least-once resume from a Redis consumer group with
 manual ack (rag/svr/task_executor.py:137-188, 582-585). The Spark-native
 equivalent is a *manifest table* keyed by the data-derived ``partition_id``:
 
-- the manifest is computed inside the chunk write job: the extraction UDF
-  folds every row it emits into a per-task partial state per partition
-  (distinct urls, rows, text bytes, XOR of ``spark_xxhash64`` over the
-  chunk ids — ``add_chunk_stats``) and hands it to a driver accumulator
-  keyed by (task, partition_id) whose merge replaces an entry, so a
-  retried or speculative task overwrites its own entry instead of
-  double-counting. ``write_manifest`` sums the entries per partition on
-  the driver (at most tasks × partitions of them) and appends one row per
-  partition — doc/chunk counts, bytes, the order-independent content hash,
-  status='done' — as a local relation: no readback or aggregation of the
-  chunk table. This is the mergeable partition summary of "Differential
-  Data Quality Verification on Partitioned Data" (ICDE 2019).
-  ``build_manifest`` is the same summary recomputed from the data, the
-  reference the tests hold the job's rows to;
+- the manifest is computed from the chunk files the extraction tasks
+  write (``operators.extract.run_extraction_job``): each task folds every
+  row it writes into a partial state per partition (distinct urls, rows,
+  text bytes, XOR of ``spark_xxhash64`` over the chunk ids —
+  ``add_chunk_stats``) and returns it with each file's path. The driver
+  collects those rows — exactly one successful attempt per task, so a
+  retried or speculative duplicate is never counted — and
+  ``write_manifest`` sums them per partition and writes one row per
+  partition (doc/chunk counts, bytes, the order-independent content
+  hash, status='done') as one parquet file with pyarrow: no readback or
+  aggregation of the chunk table, and no Spark job. This is the
+  mergeable partition summary of "Differential Data Quality
+  Verification on Partitioned Data" (ICDE 2019). ``build_manifest`` is
+  the same summary recomputed from the data, the reference the tests
+  hold the job's rows to;
 - a relaunch decides on the driver which partitions to process
   (``resume_partitions``): it collects the manifest (at most P rows per
   attempt) and one per-partition distinct-url count of the input (at most
@@ -29,20 +30,20 @@ equivalent is a *manifest table* keyed by the data-derived ``partition_id``:
 - idempotency comes from deterministic chunk ids — ``md5(chunk_text||url)``
   mirrors the reference's ``md5(content + doc_id)``
   (rag/svr/task_executor.py:260-263) — so re-writing a partition produces
-  identical rows and dynamic partition overwrite (or an Iceberg
-  ``overwritePartitions``) is exact.
+  identical rows and replacing a partition's files (the driver commit,
+  or an Iceberg ``overwritePartitions``) is exact.
 
-On Iceberg the chunk write + manifest append become a single atomic
-snapshot commit; parquet mode (this sandbox) writes chunks first, manifest
-second, and resume trusts only manifested partitions — the same
-crash-consistency contract at-least-once semantics require.
+On Iceberg the chunk commit + manifest append become a single atomic
+snapshot commit; in plain parquet the driver commits chunks first and
+writes the manifest second, and resume trusts only manifested partitions
+— the same crash-consistency contract at-least-once semantics require.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 
-from pyspark.accumulators import AccumulatorParam
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,13 +107,13 @@ def spark_xxhash64(data: bytes) -> int:
     return h - (1 << 64) if h >> 63 else h
 
 
-def add_chunk_stats(state: dict, out: dict) -> None:
-    """Fold one batch of extraction rows (column lists keyed like
-    ``CHUNKS_SCHEMA``) into a task's partial manifest state,
+def add_chunk_stats(state: dict, rows) -> None:
+    """Fold one batch of extraction rows (a pandas frame with the
+    ``CHUNKS_SCHEMA`` columns) into a task's partial manifest state,
     ``{partition_id: [url set, chunk_count, bytes, content hash XOR]}`` —
     ``build_manifest``'s four aggregates, kept mergeable."""
-    for pid, url, text, ch in zip(out["partition_id"], out["url"],
-                                  out["chunk_text"], out["content_hash"]):
+    for pid, url, text, ch in zip(rows["partition_id"], rows["url"],
+                                  rows["chunk_text"], rows["content_hash"]):
         s = state.get(pid)
         if s is None:
             s = state[pid] = [set(), 0, 0, 0]
@@ -121,26 +122,6 @@ def add_chunk_stats(state: dict, out: dict) -> None:
         s[1] += 1
         s[2] += len(text)
         s[3] ^= spark_xxhash64(ch.encode("utf-8"))
-
-
-def task_stats(task: int, state: dict) -> dict:
-    """One task's accumulator entries: ``{(task, partition_id):
-    (doc_count, chunk_count, bytes, hash)}``."""
-    return {(task, pid): (len(s[0]), s[1], s[2], s[3])
-            for pid, s in state.items()}
-
-
-class TaskStatsParam(AccumulatorParam):
-    """Dict accumulator whose merge replaces entries by key. Entries are
-    keyed by the task's partition index, so a retried or speculative
-    duplicate of a task overwrites its own entry, never adds to it."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, value1, value2):
-        value1.update(value2)
-        return value1
 
 
 def build_manifest(chunks: DataFrame, attempt: int = 1,
@@ -172,28 +153,47 @@ def build_manifest(chunks: DataFrame, attempt: int = 1,
     )
 
 
-def write_manifest(spark: SparkSession, entries: dict, path: str,
-                   attempt: int = 1,
-                   num_partitions: int | None = None) -> None:
-    """Append one manifest row per partition from the extraction UDF's
-    accumulator ``entries`` (``task_stats``), summed per partition on the
-    driver; the rows equal ``build_manifest`` over the written chunks.
-    An empty ``entries`` appends nothing.
+def table_fs(path: str):
+    """``(pyarrow FileSystem, path inside it)`` for a table path: a URI
+    (``file:``, ``hdfs://``, ``s3://``, …) or a local path. A path
+    without a scheme is local and is made absolute here, on the driver,
+    so the tasks it is handed to resolve it the same way."""
+    from pyarrow.fs import FileSystem
 
-    ``doc_count`` sums each task's distinct urls. That is exact because
+    if ":" not in path.split("/", 1)[0]:
+        path = os.path.abspath(path)
+    return FileSystem.from_uri(path)
+
+
+def write_manifest(files, path: str, attempt: int = 1,
+                   num_partitions: int | None = None) -> None:
+    """Write one manifest row per partition from the chunk files the
+    extraction tasks reported (``FILES_SCHEMA`` rows of
+    ``operators.extract``: ``partition_id``, ``doc_count``,
+    ``chunk_count``, ``bytes``, ``xor``), summed per partition on the
+    driver; the rows equal ``build_manifest`` over the committed chunks.
+    The rows go to one parquet file, written with pyarrow under a hidden
+    temporary name and then renamed into ``path`` — no Spark job. An
+    empty ``files`` writes nothing.
+
+    ``doc_count`` sums each file's distinct urls. That is exact because
     ``partition_for_extract`` places every row of a url on one task —
     except a url staged twice with one payload at or above ``GIANT_BYTES``
     and one below, which counts once per lane; resume then re-parses its
     partition, and the chunk table stays correct."""
+    import uuid
+    from datetime import datetime, timezone
+
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     parts: dict[int, list] = {}
-    for (_task, pid), (docs, chunks, nbytes, h) in entries.items():
-        p = parts.setdefault(pid, [0, 0, 0, 0])
-        p[0] += docs
-        p[1] += chunks
-        p[2] += nbytes
-        p[3] ^= h
+    for f in files:
+        p = parts.setdefault(f.partition_id, [0, 0, 0, 0])
+        p[0] += f.doc_count
+        p[1] += f.chunk_count
+        p[2] += f.bytes
+        p[3] ^= f.xor
     if not parts:
         return
     pids = sorted(parts)
@@ -211,11 +211,15 @@ def write_manifest(spark: SparkSession, entries: dict, path: str,
         "num_partitions": pa.array(
             [-1 if num_partitions is None else int(num_partitions)] * n,
             pa.int32()),
+        "ts": pa.array([datetime.now(timezone.utc)] * n,
+                       pa.timestamp("us", tz="UTC")),
     })
-    rows = spark.createDataFrame(table).withColumn("ts", F.current_timestamp())
-    # one file per attempt: a local relation splits over up to one write
-    # task per core, and each extra file costs the append and later reads
-    rows.coalesce(1).write.mode("append").parquet(path)
+    fs, root = table_fs(path)
+    fs.create_dir(root)
+    name = f"part-{attempt:05d}-{uuid.uuid4().hex}.parquet"
+    # a leading "_" hides the half-written file from Spark's listing
+    pq.write_table(table, f"{root}/_{name}", filesystem=fs)
+    fs.move(f"{root}/_{name}", f"{root}/{name}")
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
@@ -259,7 +263,7 @@ def resume_partitions(
     equals the input's distinct-url count for that partition. A doc
     appended (or removed) after the partition was manifested changes the
     count, and the partition re-runs wholesale — exact, because chunk ids
-    are deterministic and the write is a dynamic partition overwrite.
+    are deterministic and the commit replaces the partition's files.
     Partitions with input but no manifest row always run; a manifest
     written under another modulus raises ``ValueError``.
 

@@ -1,8 +1,10 @@
-"""The manifest ``run_extraction_job`` computes inside its write job (the
-UDF's per-task partition summaries, merged on the driver) must equal the
-reference aggregate ``build_manifest`` over the chunk table it wrote, row
-for row; the XXH64 twin behind its content hash must equal Spark's
-``xxhash64``; and the job must run no pre-scan and no readback."""
+"""The manifest ``run_extraction_job`` computes from the chunk files its
+parse tasks report (per-file summaries, summed per partition on the
+driver) must equal the reference aggregate ``build_manifest`` over the
+chunk table it committed, row for row — also when a task fails and
+retries, or a page has no url; the XXH64 twin behind its content hash
+must equal Spark's ``xxhash64``; and the job must run no pre-scan, no
+readback and no Spark job for the manifest."""
 
 import hashlib
 import json
@@ -112,6 +114,42 @@ def test_manifest_matches_reference_with_duplicate_url(spark, tmpdir_path):
     assert sum(r[1] for r in got) == 12
 
 
+def test_null_url_is_one_error_row(spark, tmpdir_path):
+    """A page without a url shares a batch with good pages: the task
+    finishes, the page is one error row, and it counts in no doc_count
+    (``countDistinct`` skips nulls, like the input count of a resume,
+    so rerunning the job is a no-op)."""
+    docs = [pages_src.make_doc(i) for i in range(40)]
+    docs.insert(3, dict(docs[0], url=None))
+    staged = with_partition_id(_pages(spark, docs), P).toPandas()
+    null_pid = staged[staged.url.isna()].partition_id.iloc[0]
+    assert (staged.partition_id == null_pid).sum() > 1
+    pages = _pages(spark, docs)
+    got = _check_fresh(spark, pages, tmpdir_path)
+    assert sum(r[1] for r in got) == 40
+    out = os.path.join(tmpdir_path, "chunks")
+    bad = spark.read.parquet(out).filter(F.col("url").isNull()).collect()
+    assert [(r.chunk_idx, r.content_hash, r.error) for r in bad] == [
+        (-1, "", "NullUrl: page has no url")]
+    before = sorted(os.listdir(out))
+    run_extraction_job(pages, out, os.path.join(tmpdir_path, "manifest"),
+                       num_partitions=P, attempt=2)
+    assert sorted(os.listdir(out)) == before
+
+
+def test_extract_batches_null_url_keeps_columns_aligned():
+    from ragflow_spark.operators.extract import _extract_batches
+
+    docs = [pages_src.make_doc(i) for i in range(2)]
+    docs[1]["url"] = None
+    batch = pd.DataFrame([dict(d, partition_id=0) for d in docs])
+    (out,) = list(_extract_batches([batch]))
+    assert out["url"].isna().sum() == 1
+    assert out[out["url"].isna()]["error"].tolist() == [
+        "NullUrl: page has no url"]
+    assert out[out["url"].notna()]["error"].isna().all()
+
+
 def test_manifest_matches_reference_on_partial_resume(spark, tmpdir_path):
     """Two new urls re-run at most 2 of 8 partitions, so each splits into
     at least 4 salted sub-buckets: several tasks report one partition."""
@@ -129,7 +167,7 @@ def test_manifest_matches_reference_on_partial_resume(spark, tmpdir_path):
 
 
 _FLAKY_JOB = """
-import json, os, sys
+import glob, json, os, re, sys
 
 from ragflow_spark.operators import extract
 from ragflow_spark.plans.manifest import build_manifest
@@ -140,6 +178,10 @@ tmp, marker = sys.argv[1], sys.argv[2]
 spark = get_spark(master="local[2,2]", shuffle_partitions=4)
 spark.sparkContext.setLogLevel("OFF")
 orig = extract._extract_batches
+orig_commit = extract._commit
+out, man = os.path.join(tmp, "chunks"), os.path.join(tmp, "manifest")
+name = re.compile(r"part-(\\d+)-(\\d+)-")
+staged = []
 
 
 def flaky(batches, *args):
@@ -153,23 +195,51 @@ def flaky(batches, *args):
         raise RuntimeError("injected task failure")
 
 
+def commit(*args):
+    # the staged files of every task attempt, before the commit
+    staged.extend(glob.glob(os.path.join(out, "_staging-*", "*", "*")))
+    return orig_commit(*args)
+
+
+def attempts(paths):
+    return {tuple(map(int, name.match(os.path.basename(p)).groups()))
+            for p in paths}
+
+
+def multiset(df):
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True,
+                             default=str) for r in df.collect())
+
+
 extract._extract_batches = flaky
-out, man = os.path.join(tmp, "chunks"), os.path.join(tmp, "manifest")
+extract._commit = commit
 pages = pages_src.generate_pages_df(spark, 24, parallelism=2)
 extract.run_extraction_job(pages, out, man, num_partitions=4)
+chunks = spark.read.parquet(out)
 got = sorted(tuple(r) for r in spark.read.parquet(man).drop("ts").collect())
-ref = sorted(tuple(r) for r in build_manifest(
-    spark.read.parquet(out), 1, 4).drop("ts").collect())
-print(json.dumps({"failed_once": not os.path.exists(marker),
-                  "equal": got == ref, "docs": sum(r[1] for r in got)}))
+ref = sorted(tuple(r) for r in build_manifest(chunks, 1, 4).drop("ts")
+             .collect())
+tried = attempts(staged)
+failed = {(t, 0) for t, a in tried if a == 1}
+committed = attempts(glob.glob(os.path.join(out, "partition_id=*", "*")))
+print(json.dumps({
+    "failed_once": not os.path.exists(marker),
+    "failed_attempt_staged": bool(failed) and failed <= tried,
+    "failed_attempt_committed": bool(failed & committed),
+    "staging_left": glob.glob(os.path.join(out, "_staging-*")),
+    "rows_equal": multiset(chunks) == multiset(
+        extract.extract_chunks(pages, num_partitions=4)),
+    "equal": got == ref, "docs": sum(r[1] for r in got)}))
 spark.stop()
 """
 
 
 def test_manifest_exact_when_a_task_fails_and_retries(tmpdir_path):
     """local[2,2] allows one retry per task; one task raises after its
-    first output batch reached the writer. The failed attempt's partial
-    summary must not reach the manifest."""
+    first output batch went into its staged chunk file. The failed
+    attempt's file is neither committed nor counted: the chunk rows equal
+    ``extract_chunks``' multiset, the manifest equals ``build_manifest``
+    over them, and no staging dir is left."""
     script = os.path.join(tmpdir_path, "flaky_job.py")
     with open(script, "w") as f:
         f.write(_FLAKY_JOB)
@@ -182,7 +252,9 @@ def test_manifest_exact_when_a_task_fails_and_retries(tmpdir_path):
                           text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     res = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert res == {"failed_once": True, "equal": True, "docs": 24}
+    assert res == {"failed_once": True, "failed_attempt_staged": True,
+                   "failed_attempt_committed": False, "staging_left": [],
+                   "rows_equal": True, "equal": True, "docs": 24}
 
 
 def _job_count(spark, fn) -> int:
@@ -198,10 +270,11 @@ def _job_count(spark, fn) -> int:
 
 
 def test_extraction_job_counts(spark, tmpdir_path):
-    """A fresh run is the write job (its shuffle stage and its result
-    stage) plus the manifest append: no input count, no chunk readback. A
-    resume adds the manifest's schema read and collect and the input's
-    per-partition count (three jobs under AQE)."""
+    """A fresh run is the parse job (its shuffle stage and its result
+    stage, a collect of the written files): no input count, no chunk
+    readback, no Spark write and no manifest job. A resume adds the
+    manifest's schema read and collect and the input's per-partition
+    count (three jobs under AQE)."""
     out, man = (os.path.join(tmpdir_path, "chunks"),
                 os.path.join(tmpdir_path, "manifest"))
     first = pages_src.generate_pages_df(spark, 24, parallelism=2).cache()
@@ -215,4 +288,4 @@ def test_extraction_job_counts(spark, tmpdir_path):
     finally:
         first.unpersist()
         grown.unpersist()
-    assert (fresh, resume) == (3, 8)
+    assert (fresh, resume) == (2, 7)

@@ -11,8 +11,9 @@ B. partial+resume: attempt 1 over the docs hashing into the first half of
    manifested partitions; final digest == A.
 C. crash: a subprocess runs the full job and is SIGKILLed mid-extraction
    (whole process group). The resume run afterwards must converge to
-   digest == A regardless of what the kill left behind (dynamic partition
-   overwrite + deterministic chunk ids = idempotent).
+   digest == A regardless of what the kill left behind (the driver commit
+   replaces whole partitions, leftover staging files are deleted, and
+   chunk ids are deterministic = idempotent).
 
 Prints one JSON line; rewrites the '## Resume smoke' section of
 BENCH/BASELINE.md.
@@ -22,6 +23,7 @@ Usage: python tools/resume_smoke.py [n_docs] [cores] [partitions]
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -152,6 +154,8 @@ def main() -> None:
     os.killpg(proc.pid, signal.SIGKILL)
     proc.wait()
     result["killed_after_sec"] = round(time.perf_counter() - t0, 1)
+    staging = os.path.join(out_c, "_staging-*")
+    result["crash_staging_dirs_at_kill"] = len(glob.glob(staging))
     man = read_manifest(spark, man_c)
     result["crash_partitions_manifested"] = (
         0 if man is None else man.select("partition_id").distinct().count()
@@ -163,12 +167,14 @@ def main() -> None:
     n_c, h_c = digest(spark, out_c)
     result["crash_rows"], result["crash_digest"] = n_c, h_c
     result["crash_match"] = (n_a, h_a) == (n_c, h_c)
+    result["crash_staging_dirs_left"] = len(glob.glob(staging))
 
     result["ts"] = time.strftime("%Y-%m-%d %H:%M:%S")
     print(json.dumps(result))
 
     ok = result["resume_match"] and result["crash_match"] \
-        and result["resume_skipped_ok"]
+        and result["resume_skipped_ok"] \
+        and result["crash_staging_dirs_left"] == 0
     md = f"""## Resume smoke ({n_docs:,} docs, {parts} partitions, local[{cores}])
 
 Measured {result['ts']}; digest = count + XOR of xxhash64(url, chunk_idx,
@@ -179,14 +185,14 @@ content_hash) over the final chunk table.
 | A single-shot full job | {result['single_sec']} | {result['single_rows']:,} rows, digest {result['single_digest']} |
 | B1 partial attempt ({parts // 2}/{parts} partitions' docs) | {result['partial_sec']} | {result['partial_partitions_done']} partitions manifested |
 | B2 resume over full corpus | {result['resume_sec']} | attempt 2 manifested {result['partitions_by_attempt'].get(2, 0)} partitions (attempt 1's {result['partitions_by_attempt'].get(1, 0)} SKIPPED); digest match: {result['resume_match']} |
-| C SIGKILL after {result['killed_after_sec']} s (whole process group) | — | {result['crash_partitions_manifested']} partitions manifested at kill |
-| C resume after crash | {result['crash_resume_sec']} | digest match: {result['crash_match']} |
+| C SIGKILL after {result['killed_after_sec']} s (whole process group) | — | {result['crash_partitions_manifested']} partitions manifested, {result['crash_staging_dirs_at_kill']} staging dirs left at kill |
+| C resume after crash | {result['crash_resume_sec']} | digest match: {result['crash_match']}; staging dirs left: {result['crash_staging_dirs_left']} |
 
 Resume leg B2 cost {result['resume_sec']} s vs {result['single_sec']} s
 single-shot — the manifested half is never reprocessed (count-verified
 driver-side partition list, `plans/manifest.py:resume_partitions`). The crash leg proves
 convergence is independent of what a SIGKILL leaves behind: deterministic
-chunk ids + dynamic partition overwrite make the retry idempotent.
+chunk ids + whole-partition replacement at commit make the retry idempotent.
 **PASS: {ok}**
 """
     out_md = os.path.join(REPO, "BENCH", "BASELINE.md")
